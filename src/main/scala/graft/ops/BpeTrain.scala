@@ -158,19 +158,14 @@ object BpeTrain {
   }
 
   /** Driver-local collection for the BPE fast path: the (word, freq)
-    * vocabulary rows below `GRAFT_BPE_LOCAL_MAX` (default 1M — the
+    * vocabulary rows below the [[LocalGate.Rows]] cap (1M — the
     * word table is vocabulary-sized, kilobytes per row; a multi-TB
     * corpus's tens-of-millions-distinct vocabulary stays distributed).
     * None over the cap — and the distributed rounds own every edge
     * case beyond plain (non-null word, non-null freq) rows.
     */
   private def localWordRows(wf: DataFrame): Option[Array[(String, Long)]] = {
-    val cap = sys.props.get("GRAFT_BPE_LOCAL_MAX")
-      .orElse(sys.env.get("GRAFT_BPE_LOCAL_MAX"))
-      .map(_.toInt).getOrElse(1 << 20)
-    if (cap <= 0) return None
-    val rows = wf.take(cap + 1)
-    if (rows.length > cap) return None
+    val rows = LocalGate.take(wf, LocalGate.Rows).getOrElse(return None)
     val out = new Array[(String, Long)](rows.length)
     var i = 0
     while (i < rows.length) {

@@ -55,29 +55,29 @@ object Checkpoints {
       case None => df.localCheckpoint(eager)
     }
 
-  /** INDEPENDENT localCheckpoints constructed concurrently from a
-    * small driver thread pool (guide §2.6 "overlap independent jobs"):
-    * under AQE, `localCheckpoint(eager = false)` is not free — the
-    * Dataset API plans the subtree to an RDD, and an adaptive plan
-    * materializes every intermediate shuffle stage to do so, so each
-    * lazy cut pays planning PLUS its exchange jobs, serially in caller
-    * order. For a stage constructor that cuts many mutually
-    * independent frames (the CDS flatten cuts 11), the driver sits in
-    * a sequence of sub-100 ms jobs that could back-fill each other.
-    * Actions submitted from different threads interleave in Spark's
-    * FIFO scheduler by design; each checkpoint is the same
-    * `localCheckpoint(eager)` it would be inline, so plans and
-    * results are unchanged — only the construction wall shrinks.
-    * Callers must pass frames with NO data dependency on each other.
+  /** INDEPENDENT thunks run concurrently from a small driver thread
+    * pool (guide §2.6 "overlap independent jobs"), results in order.
+    * The use is lazy cuts: under AQE, `localCheckpoint(eager = false)`
+    * is not free — the Dataset API plans the subtree to an RDD, and an
+    * adaptive plan materializes every intermediate shuffle stage to do
+    * so, so each lazy cut pays planning PLUS its exchange jobs,
+    * serially in caller order. For a stage constructor that cuts many
+    * mutually independent frames (the CDS flatten cuts 11), the driver
+    * sits in a sequence of sub-100 ms jobs that could back-fill each
+    * other. Actions submitted from different threads interleave in
+    * Spark's FIFO scheduler by design; each thunk builds the same
+    * frames and cuts it would inline, so plans and results are
+    * unchanged — only the construction wall shrinks. Callers must pass
+    * thunks with NO data dependency on each other.
     */
-  def localCutAll(dfs: Seq[DataFrame], eager: Boolean): Seq[DataFrame] = {
-    if (dfs.sizeIs <= 1) return dfs.map(_.localCheckpoint(eager))
+  def concurrently[T](thunks: Seq[() => T]): Seq[T] = {
+    if (thunks.sizeIs <= 1) return thunks.map(_())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(dfs.size, 8))
+      math.min(thunks.size, 8))
     try {
-      val futs = dfs.map { df =>
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = df.localCheckpoint(eager)
+      val futs = thunks.map { t =>
+        pool.submit(new java.util.concurrent.Callable[T] {
+          override def call(): T = t()
         })
       }
       futs.map(_.get())

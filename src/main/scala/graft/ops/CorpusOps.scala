@@ -276,45 +276,23 @@ object CorpusOps {
     * and fails loudly at the encoder rather than landing in an
     * arbitrary shard.
     */
-  /** Shared row cap of the pack/shuffle-family driver-local fast
-    * paths (packByTokenBudget / packSequences / packSequencesBestFit /
+  /** The pack/shuffle-family driver-local fast paths
+    * (packByTokenBudget / packSequences / packSequencesBestFit /
     * globalShuffle — the CC/pageRank local-fast-path pattern applied
-    * to the two-phase prefix operators): below it, the prefix
-    * fold/rank runs on the driver over the collected (id, weight/key)
-    * PROXY rows — kilobytes per row, never text — instead of a
-    * range exchange + pinned checkpoint + totals collect + window per
-    * op. Above it the pinned two-phase machinery is untouched; any
-    * input the local order does not replicate exactly (null or
-    * duplicate ids, guard violations) bails back so the distributed
-    * plan's own loud raise/require stays the single failure path.
+    * to the two-phase prefix operators): below the [[LocalGate.Rows]]
+    * cap, the prefix fold/rank runs on the driver over the collected
+    * (id, weight/key) PROXY rows — kilobytes per row, never text —
+    * instead of a range exchange + pinned checkpoint + totals collect
+    * + window per op. Above it the pinned two-phase machinery is
+    * untouched; any input the local order does not replicate exactly
+    * (null or duplicate ids, guard violations) bails back so the
+    * distributed plan's own loud raise/require stays the single
+    * failure path.
     */
-  private def packLocalCap: Int = sys.props.get("GRAFT_PACK_LOCAL_MAX")
-    .orElse(sys.env.get("GRAFT_PACK_LOCAL_MAX"))
-    .map(_.toInt).getOrElse(1 << 20)
-
-  private def integralIdType(t: org.apache.spark.sql.types.DataType): Boolean =
-    t match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-
-  private def idLong(v: Any): Long = v match {
-    case l: Long => l
-    case i: Int => i.toLong
-    case s: Short => s.toLong
-    case b: Byte => b.toLong
-  }
-
   private def localTokenBudget(proj: DataFrame, idCol: String,
       budget: Long): Option[DataFrame] = {
     import org.apache.spark.sql.types._
-    val cap = packLocalCap
-    if (cap <= 0) return None
-    val rows = proj.take(cap + 1)
-    if (rows.length > cap) return None
+    val rows = LocalGate.take(proj, LocalGate.Rows).getOrElse(return None)
     val seen = new java.util.HashSet[Long]()
     val data = new Array[(Long, Long)](rows.length)
     var i = 0
@@ -652,15 +630,12 @@ object CorpusOps {
   private def localPackSequences(docs: DataFrame, idCol: String,
       tokens: Column, seqLen: Long): Option[DataFrame] = {
     import org.apache.spark.sql.types._
-    val cap = packLocalCap
-    if (cap <= 0) return None
     val idType = docs.schema(idCol).dataType
-    if (!integralIdType(idType)) return None
+    if (!LocalGate.integral(idType)) return None
     val proj = docs.select(col(idCol).as("__id"),
       (tokens.isNull || tokens < lit(0)).as("__bad"),
       tokens.cast("long").as("__w"))
-    val rows = proj.take(cap + 1)
-    if (rows.length > cap) return None
+    val rows = LocalGate.take(proj, LocalGate.Rows).getOrElse(return None)
     val seen = new java.util.HashSet[Long]()
     val data = new Array[(Any, Long, Long)](rows.length)
     var i = 0
@@ -668,7 +643,7 @@ object CorpusOps {
       val r = rows(i)
       if (r.isNullAt(0) || r.getBoolean(1)) return None // guards raise
       val raw = r.get(0)
-      val k = idLong(raw)
+      val k = LocalGate.asLong(raw)
       if (!seen.add(k)) return None // dup-id guard raises distributed
       data(i) = (raw, k, r.getLong(2))
       i += 1
@@ -782,16 +757,13 @@ object CorpusOps {
   private def localPackBestFit(docs: DataFrame, idCol: String,
       tokens: Column, seqLen: Long, nBuckets: Int): Option[DataFrame] = {
     import org.apache.spark.sql.types._
-    val cap = packLocalCap
-    if (cap <= 0) return None
     val idType = docs.schema(idCol).dataType
-    if (!integralIdType(idType)) return None
+    if (!LocalGate.integral(idType)) return None
     val proj = docs.select(col(idCol).as("__id"),
       (tokens.isNull || tokens < lit(0) ||
         tokens.cast("long") > lit(seqLen)).as("__bad"),
       tokens.cast("long").as("__w"))
-    val rows = proj.take(cap + 1)
-    if (rows.length > cap) return None
+    val rows = LocalGate.take(proj, LocalGate.Rows).getOrElse(return None)
     if (rows.isEmpty) return None // the distributed require owns empties
     val seen = new java.util.HashSet[Long]()
     val data = new Array[(Any, Long, Long)](rows.length)
@@ -800,7 +772,7 @@ object CorpusOps {
       val r = rows(i)
       if (r.isNullAt(0) || r.getBoolean(1)) return None
       val raw = r.get(0)
-      val k = idLong(raw)
+      val k = LocalGate.asLong(raw)
       if (!seen.add(k)) return None // dup-id require raises distributed
       data(i) = (raw, k, r.getLong(2))
       i += 1
@@ -969,18 +941,16 @@ object CorpusOps {
   private def localGlobalShuffle(docs: DataFrame, idCol: String,
       key: Column): Option[DataFrame] = {
     import org.apache.spark.sql.types._
-    val cap = packLocalCap
-    if (cap <= 0) return None
     val idType = docs.schema(idCol).dataType
-    if (!integralIdType(idType)) return None
-    val rows = docs.select(col(idCol).as("__id"), key.as("__k")).take(cap + 1)
-    if (rows.length > cap) return None
+    if (!LocalGate.integral(idType)) return None
+    val rows = LocalGate.take(docs.select(col(idCol).as("__id"), key.as("__k")),
+      LocalGate.Rows).getOrElse(return None)
     val data = new Array[(Any, Long, String)](rows.length)
     var i = 0
     while (i < rows.length) {
       val r = rows(i)
       if (r.isNullAt(0)) return None
-      data(i) = (r.get(0), idLong(r.get(0)), r.getString(1))
+      data(i) = (r.get(0), LocalGate.asLong(r.get(0)), r.getString(1))
       i += 1
     }
     java.util.Arrays.sort(data,

@@ -407,8 +407,7 @@ object DedupOps {
   /** Driver-side min-label union-find over a SMALL symmetric edge
     * frame — the local fast path of [[connectedComponents]]. Returns
     * None (caller runs the distributed rounds) when the graph exceeds
-    * `GRAFT_CC_LOCAL_MAX` collected rows (default 1M — bounded the way
-    * a broadcast-join build side is), when the id type has no local
+    * the [[LocalGate.Rows]] cap, when the id type has no local
     * ordering here (only integral/string ids are handled — every graft
     * caller uses those), or when a null id appears (the distributed
     * join path has its own null algebra; don't fork it locally).
@@ -417,35 +416,20 @@ object DedupOps {
       nodes: Option[DataFrame]): Option[DataFrame] = {
     import org.apache.spark.sql.types._
     val idType = sym.schema("__src").dataType
-    val ordering: Option[Ordering[Any]] = idType match {
-      case LongType | IntegerType | ShortType | ByteType =>
-        Some(Ordering.by((v: Any) => v match {
-          case l: Long => l
-          case i: Int => i.toLong
-          case s: Short => s.toLong
-          case b: Byte => b.toLong
-        }))
-      case StringType =>
-        Some(Ordering.by((v: Any) => v.asInstanceOf[String]))
-      case _ => None
-    }
-    if (ordering.isEmpty) return None
-    val cap = sys.props.get("GRAFT_CC_LOCAL_MAX")
-      .orElse(sys.env.get("GRAFT_CC_LOCAL_MAX"))
-      .map(_.toInt).getOrElse(1 << 20)
-    val edges = sym.take(cap + 1)
-    if (edges.length > cap) return None
+    if (!LocalGate.keyed(idType)) return None
+    val edges = LocalGate.take(sym, LocalGate.Rows).getOrElse(return None)
     val seedRows = nodes match {
       case Some(n) =>
         val nd = n.select(col(n.columns.head))
         if (nd.schema.head.dataType != idType) return None
-        val took = nd.take(cap + 1)
-        if (took.length > cap) return None else took
+        LocalGate.take(nd, LocalGate.Rows).getOrElse(return None)
       case None => Array.empty[org.apache.spark.sql.Row]
     }
     if (edges.exists(r => r.isNullAt(0) || r.isNullAt(1)) ||
         seedRows.exists(_.isNullAt(0))) return None
-    val ord = ordering.get
+    val ord: Ordering[Any] =
+      if (idType == StringType) Ordering.by((v: Any) => v.asInstanceOf[String])
+      else Ordering.by(LocalGate.asLong)
     // union-find, path-halving, min-label kept at the root
     val parent = new java.util.HashMap[Any, Any]()
     val minLbl = new java.util.HashMap[Any, Any]()

@@ -63,18 +63,9 @@ object GraphOps {
   private def localResolveChain(sel: DataFrame,
       maxIter: Int): Option[DataFrame] = {
     import org.apache.spark.sql.types._
-    val okType = sel.schema("key").dataType == sel.schema("parent").dataType &&
-      (sel.schema("key").dataType match {
-        case LongType | IntegerType | ShortType | ByteType | StringType => true
-        case _ => false
-      })
-    if (!okType) return None
-    val cap = sys.props.get("GRAFT_RC_LOCAL_MAX")
-      .orElse(sys.env.get("GRAFT_RC_LOCAL_MAX"))
-      .map(_.toInt).getOrElse(1 << 20)
-    if (cap <= 0) return None
-    val rows = sel.take(cap + 1)
-    if (rows.length > cap) return None
+    if (!LocalGate.keyed(sel.schema("key").dataType,
+        sel.schema("parent").dataType)) return None
+    val rows = LocalGate.take(sel, LocalGate.Rows).getOrElse(return None)
     val parentOf = new java.util.HashMap[Any, Any]()
     var i = 0
     while (i < rows.length) {
@@ -272,23 +263,15 @@ object GraphOps {
       edgesRaw: DataFrame, maxHops: Int)
       : Option[(Map[String, DataFrame], Map[String, DataFrame], DataFrame)] = {
     import org.apache.spark.sql.types._
-    def okType(t: org.apache.spark.sql.types.DataType) = t match {
-      case LongType | IntegerType | ShortType | ByteType | StringType => true
-      case _ => false
-    }
     val pT = edgesRaw.schema("parent_id").dataType
     val cT = edgesRaw.schema("child_id").dataType
     val sT = seeds.schema("entry_id").dataType
-    if (!(okType(pT) && pT == cT && cT == sT)) return None
-    val cap = sys.props.get("GRAFT_ER_LOCAL_MAX")
-      .orElse(sys.env.get("GRAFT_ER_LOCAL_MAX"))
-      .map(_.toInt).getOrElse(1 << 20)
-    if (cap <= 0) return None
-    val seedRows = seeds.select(col("entry_id")).take(cap + 1)
-    if (seedRows.length > cap) return None
+    if (!LocalGate.keyed(pT, cT, sT)) return None
+    val seedRows = LocalGate.take(seeds.select(col("entry_id")),
+      LocalGate.Rows).getOrElse(return None)
     if (seedRows.exists(_.isNullAt(0))) return None
-    val edgeRows = edgesRaw.take(cap + 1)
-    if (edgeRows.length > cap) return None
+    val edgeRows = LocalGate.take(edgesRaw, LocalGate.Rows)
+      .getOrElse(return None)
     if (edgeRows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     // children per parent
     val kids = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
@@ -450,8 +433,8 @@ object GraphOps {
     */
   /** Driver-side twin of [[pageRank]]'s round arithmetic for a SMALL
     * edge set (the [[graft.ops.DedupOps]] local-CC idea applied to
-    * rank iteration): below `GRAFT_PR_LOCAL_MAX` collected edge rows
-    * (default 1M) the rounds run on the driver, replicating the
+    * rank iteration): below the [[LocalGate.Rows]] cap of collected
+    * edge rows the rounds run on the driver, replicating the
     * distributed numeric path STEP FOR STEP so results are
     * bit-identical — contribution = BigDecimal.valueOf(r/od)
     * .setScale(18, HALF_UP) (exactly Spark's double→DECIMAL(25,18)
@@ -466,18 +449,10 @@ object GraphOps {
     import org.apache.spark.sql.types._
     import java.math.{BigDecimal => JBD, RoundingMode}
     // src/dst must share ONE local-comparable type: the node set mixes
-    // both columns' values, and a boxed Int never equals a boxed Long
-    val okTypes = e.schema("src").dataType == e.schema("dst").dataType &&
-      (e.schema("src").dataType match {
-        case LongType | IntegerType | ShortType | ByteType | StringType => true
-        case _ => false
-      })
-    if (!okTypes) return None
-    val cap = sys.props.get("GRAFT_PR_LOCAL_MAX")
-      .orElse(sys.env.get("GRAFT_PR_LOCAL_MAX"))
-      .map(_.toInt).getOrElse(1 << 20)
-    val rows = e.take(cap + 1)
-    if (rows.length > cap) return None
+    // both columns' values
+    if (!LocalGate.keyed(e.schema("src").dataType, e.schema("dst").dataType))
+      return None
+    val rows = LocalGate.take(e, LocalGate.Rows).getOrElse(return None)
     if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     // the caller hands the RAW pair projection; the distributed path's
     // edge frame is .distinct() of exactly this, so dedup here

@@ -215,8 +215,9 @@ object SimilarityOps {
       java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Driver-local collection for the trainer fast paths: the (id, vec)
-    * rows below `cap`, or None when the frame is over the cap or
-    * carries anything the local arithmetic does not replicate
+    * rows below the [[LocalGate.VecRows]] cap, or None when the frame
+    * is over the cap or carries anything the local arithmetic does not
+    * replicate
     * bit-for-bit — non-integral ids, duplicate ids (the distributed
     * lowest-id init is then itself nondeterministic), null/missing
     * vectors, null or non-finite elements, or ragged lengths. Bailing
@@ -224,21 +225,15 @@ object SimilarityOps {
     * every edge and error behavior stays the distributed path's own
     * (including its loud raise_errors).
     */
-  private def collectTrainRows(sel: DataFrame, cap: Int)
+  private def collectTrainRows(sel: DataFrame)
       : Option[Array[(Long, Array[Float])]] = {
     import org.apache.spark.sql.types._
-    if (cap <= 0) return None
-    val idOk = sel.schema("id").dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
     val vecOk = sel.schema("vec").dataType match {
       case ArrayType(FloatType, _) => true
       case _ => false
     }
-    if (!idOk || !vecOk) return None
-    val rows = sel.take(cap + 1)
-    if (rows.length > cap) return None
+    if (!LocalGate.integral(sel.schema("id").dataType) || !vecOk) return None
+    val rows = LocalGate.take(sel, LocalGate.VecRows).getOrElse(return None)
     val seen = new java.util.HashSet[Long]()
     val out = new Array[(Long, Array[Float])](rows.length)
     var len = -1
@@ -246,12 +241,7 @@ object SimilarityOps {
     while (i < rows.length) {
       val r = rows(i)
       if (r.isNullAt(0) || r.isNullAt(1)) return None
-      val id = r.get(0) match {
-        case l: Long => l
-        case n: Int => n.toLong
-        case s: Short => s.toLong
-        case b: Byte => b.toLong
-      }
+      val id = LocalGate.asLong(r.get(0))
       if (!seen.add(id)) return None
       val raw = r.getSeq[Any](1)
       if (len < 0) len = raw.length
@@ -318,13 +308,9 @@ object SimilarityOps {
     out
   }
 
-  private def kmLocalCap: Int = sys.props.get("GRAFT_KM_LOCAL_MAX")
-    .orElse(sys.env.get("GRAFT_KM_LOCAL_MAX"))
-    .map(_.toInt).getOrElse(1 << 17)
-
   /** Size-adaptive driver-local twin of [[lloydRounds]] (the
     * connectedComponents/pageRank local-fast-path pattern): below
-    * `GRAFT_KM_LOCAL_MAX` collected rows (default 128k — a
+    * the [[LocalGate.VecRows]] cap of collected rows (128k — a
     * broadcast-sized bound; the trained centroids' own consumers
     * already ship the corpus-side frames whole), the Lloyd rounds run
     * on the driver over the already-collected vectors instead of
@@ -401,7 +387,7 @@ object SimilarityOps {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0; got ($k, $iters)")
     val sel = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    collectTrainRows(sel, kmLocalCap)
+    collectTrainRows(sel)
       .flatMap(localLloyd(corpus.sparkSession, _, k, iters))
       .getOrElse {
         val vecs = sel
@@ -984,10 +970,6 @@ object SimilarityOps {
     * Cells that lose every member drop out, as in [[trainCentroids]].
     * Returns (sub, cid, cvec).
     */
-  private def pqLocalCap: Int = sys.props.get("GRAFT_PQ_LOCAL_MAX")
-    .orElse(sys.env.get("GRAFT_PQ_LOCAL_MAX"))
-    .map(_.toInt).getOrElse(1 << 17)
-
   /** Size-adaptive driver-local twin of the PQ Lloyd rounds (the
     * [[localLloyd]] pattern): assignment is the same sequential
     * (a-b)² double fold as [[graft.expr.FloatSqDist.compute]] with
@@ -1078,8 +1060,7 @@ object SimilarityOps {
     import org.apache.spark.sql.expressions.Window
     require(ks >= 1 && iters >= 0, s"need ks >= 1, iters >= 0; got ($ks, $iters)")
     require(m >= 1 && dim % m == 0, s"dim $dim must split into m=$m subspaces")
-    collectTrainRows(
-        corpus.select(col(idCol).as("id"), col(vecCol).as("vec")), pqLocalCap)
+    collectTrainRows(corpus.select(col(idCol).as("id"), col(vecCol).as("vec")))
       .flatMap(localPq(corpus.sparkSession, _, dim, m, ks, iters))
       .getOrElse {
         val subRows = subspaceRows(corpus, idCol, vecCol, dim, m)

@@ -323,32 +323,23 @@ object ExportStages {
     // data-independent; constructing them concurrently overlaps their
     // checkpoint planning + intermediate AQE stages (guide §2.6 —
     // same frames, same cuts, only the construction wall shrinks).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (files, (studyLevel, participantLevel)) =
-      try {
-        val filesFut = pool.submit(
-          new java.util.concurrent.Callable[DataFrame] {
-            override def call(): DataFrame = shared(fileNodes.map(m(_))
-              .reduce(_.unionByName(_, allowMissingColumns = true)))
-          })
-        val levelsFut = pool.submit(
-          new java.util.concurrent.Callable[(Option[DataFrame], Option[DataFrame])] {
-            override def call(): (Option[DataFrame], Option[DataFrame]) = {
-              val sl = m.get(studyNode).map { st =>
-                shared(addLevel(addLevel(st, studyAdminNode, key(studyNode)),
-                  studyPersonnelNode, key(studyNode)))
-              }
-              val pl = sl.filter(_ => m.contains(participantNode)).map { s =>
-                shared(addLevel(
-                  JoinOps.leftJoinCoalesce(s, m(participantNode),
-                    Seq(key(studyNode))),
-                  diagnosisNode, key(participantNode)))
-              }
-              (sl, pl)
-            }
-          })
-        (filesFut.get(), levelsFut.get())
-      } finally pool.shutdown()
+    val Seq(Left(files), Right((studyLevel, participantLevel))) =
+      graft.ops.Checkpoints.concurrently(Seq(
+        () => Left(shared(fileNodes.map(m(_))
+          .reduce(_.unionByName(_, allowMissingColumns = true)))),
+        () => {
+          val sl = m.get(studyNode).map { st =>
+            shared(addLevel(addLevel(st, studyAdminNode, key(studyNode)),
+              studyPersonnelNode, key(studyNode)))
+          }
+          val pl = sl.filter(_ => m.contains(participantNode)).map { s =>
+            shared(addLevel(
+              JoinOps.leftJoinCoalesce(s, m(participantNode),
+                Seq(key(studyNode))),
+              diagnosisNode, key(participantNode)))
+          }
+          Right((sl, pl))
+        }))
 
     // join_node + join_file_node_cleaner for one hop (ref `:272-297`).
     def path(name: String, parent: Option[DataFrame], child: Option[DataFrame],

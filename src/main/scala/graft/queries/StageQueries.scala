@@ -414,16 +414,16 @@ object StageQueries {
           concat(lit("f"), o.cast("string")).as("file_name"),
           concat(lit("mod"), (o % 3).cast("string")).as("modality")) ++ fileLinks): _*)
 
-            // the eight node frames are mutually independent — checkpoint them
+      // the eight node frames are mutually independent — checkpoint them
       // concurrently (each lazy cut pays planning + its distinct's
       // exchange stages under AQE; serially that was ~1 s of sub-100 ms
       // jobs at sf0.1). Same localCheckpoint(false) per frame as before.
       val Seq(study, studyAdmin, studyPersonnel, participant, diagnosis,
-        sample, pdx, cellLine) = graft.ops.Checkpoints.localCutAll(
+        sample, pdx, cellLine) = graft.ops.Checkpoints.concurrently(
         Seq(study0, studyAdmin0, studyPersonnel0, participant0, diagnosis0,
-          sample0, pdx0, cellLine0), eager = false)
+          sample0, pdx0, cellLine0).map(df => () => df.localCheckpoint(false)))
 
-val manifest = Map(
+      val manifest = Map(
         "study" -> study, "study_admin" -> studyAdmin,
         "study_personnel" -> studyPersonnel, "participant" -> participant,
         "diagnosis" -> diagnosis, "sample" -> sample, "pdx" -> pdx,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.expr.BpeApply
 import graft.ops.BpeTrain
+import graft.ops.LocalGate.forcedDistributed
 
 /** Distributed BPE vocabulary induction vs an independent in-memory
   * Sennrich reference (plain collections, written from the published
@@ -167,13 +168,8 @@ class BpeTrainSpec extends SparkSpecBase {
 
   // ------------------------------------------------------------------
   // r18: driver-local training fast path must be BIT-identical to the
-  // distributed rounds (forced via GRAFT_BPE_LOCAL_MAX=0).
+  // distributed rounds (forced via graft.localMax=0).
   // ------------------------------------------------------------------
-
-  private def forcedDistributed[T](f: => T): T = {
-    System.setProperty("GRAFT_BPE_LOCAL_MAX", "0")
-    try f finally System.clearProperty("GRAFT_BPE_LOCAL_MAX")
-  }
 
   test("local BPE training is bit-identical to distributed, incl. UTF8 tie order") {
     // the tie corpus: after round 1 merges (a,</w>), the round-2

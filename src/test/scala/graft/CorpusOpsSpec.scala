@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.CorpusOps
+import graft.ops.LocalGate.forcedDistributed
 
 class CorpusOpsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -793,13 +794,8 @@ class CorpusOpsSpec extends SparkSpecBase {
   // ------------------------------------------------------------------
   // r18: pack/shuffle-family driver-local fast paths must be
   // BIT-identical to the pinned two-phase distributed machinery
-  // (forced via GRAFT_PACK_LOCAL_MAX=0).
+  // (forced via graft.localMax=0).
   // ------------------------------------------------------------------
-
-  private def forcedPackDistributed[T](f: => T): T = {
-    System.setProperty("GRAFT_PACK_LOCAL_MAX", "0")
-    try f finally System.clearProperty("GRAFT_PACK_LOCAL_MAX")
-  }
 
   test("pack/shuffle local fast paths are bit-identical to distributed") {
     val docs = (1L to 700L)
@@ -810,7 +806,7 @@ class CorpusOpsSpec extends SparkSpecBase {
         df.collect().map(_.toSeq).toList.sortBy(_.mkString("|")))
 
     val seqL = CorpusOps.packSequences(docs, "doc_id", col("tok"), 100L)
-    val seqD = forcedPackDistributed(
+    val seqD = forcedDistributed(
       CorpusOps.packSequences(docs, "doc_id", col("tok"), 100L, 7))
     dump(seqL) shouldBe dump(seqD)
 
@@ -819,18 +815,18 @@ class CorpusOpsSpec extends SparkSpecBase {
     for (buckets <- Seq(5, 32)) {
       val bfL = CorpusOps.packSequencesBestFit(
         docs, "doc_id", col("tok"), 100L, buckets)
-      val bfD = forcedPackDistributed(CorpusOps.packSequencesBestFit(
+      val bfD = forcedDistributed(CorpusOps.packSequencesBestFit(
         docs, "doc_id", col("tok"), 100L, buckets))
       withClue(s"buckets=$buckets: ") { dump(bfL) shouldBe dump(bfD) }
     }
 
     val shL = CorpusOps.globalShuffle(docs, "doc_id", "ep1")
-    val shD = forcedPackDistributed(
+    val shD = forcedDistributed(
       CorpusOps.globalShuffle(docs, "doc_id", "ep1", 3))
     dump(shL) shouldBe dump(shD)
 
     val tbL = CorpusOps.packByTokenBudget(docs, "doc_id", col("tok"), 500L)
-    val tbD = forcedPackDistributed(
+    val tbD = forcedDistributed(
       CorpusOps.packByTokenBudget(docs, "doc_id", col("tok"), 500L))
     dump(tbL) shouldBe dump(tbD)
 
@@ -839,7 +835,7 @@ class CorpusOpsSpec extends SparkSpecBase {
     val intDocs = (1 to 50).map(i => (i, (i * 13 % 29 + 1).toLong))
       .toDF("doc_id", "tok")
     val iL = CorpusOps.packSequences(intDocs, "doc_id", col("tok"), 40L)
-    val iD = forcedPackDistributed(
+    val iD = forcedDistributed(
       CorpusOps.packSequences(intDocs, "doc_id", col("tok"), 40L))
     dump(iL) shouldBe dump(iD)
   }

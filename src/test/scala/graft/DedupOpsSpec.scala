@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.DedupOps
+import graft.ops.LocalGate.forcedDistributed
 
 class DedupOpsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -93,25 +94,21 @@ class DedupOpsSpec extends SparkSpecBase {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (9L, 9L), (7L, 8L))
       .toDF("id1", "id2")
     val nodes = Seq(42L, 4L).toDF("mg_id")
-    def forced[A](f: => A): A = {
-      System.setProperty("GRAFT_CC_LOCAL_MAX", "0")
-      try f finally System.clearProperty("GRAFT_CC_LOCAL_MAX")
-    }
     val local = sortedRows(
       DedupOps.connectedComponents(pairs, nodes = Some(nodes)))
-    val dist = forced(sortedRows(
+    val dist = forcedDistributed(sortedRows(
       DedupOps.connectedComponents(pairs, nodes = Some(nodes))))
     local shouldBe dist
     local.map(_.toSeq) should contain (Seq(42L, 42L)) // isolated seed
     val sPairs = Seq(("b", "c"), ("a", "b")).toDF("id1", "id2")
     sortedRows(DedupOps.connectedComponents(sPairs)) shouldBe
-      forced(sortedRows(DedupOps.connectedComponents(sPairs)))
+      forcedDistributed(sortedRows(DedupOps.connectedComponents(sPairs)))
     // null ids: local path must refuse (take the distributed result)
     val withNull = Seq((java.lang.Long.valueOf(1L), java.lang.Long.valueOf(2L)),
       (null.asInstanceOf[java.lang.Long], java.lang.Long.valueOf(3L)))
       .toDF("id1", "id2")
     sortedRows(DedupOps.connectedComponents(withNull)) shouldBe
-      forced(sortedRows(DedupOps.connectedComponents(withNull)))
+      forcedDistributed(sortedRows(DedupOps.connectedComponents(withNull)))
   }
 
   test("ngramJaccard is 1.0 for identical docs") {

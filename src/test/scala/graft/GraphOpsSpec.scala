@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.GraphOps
+import graft.ops.LocalGate.forcedDistributed
 
 class GraphOpsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -110,11 +111,8 @@ class GraphOpsSpec extends SparkSpecBase {
       .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap shouldBe got
     // the distributed rounds (forced: local cap 0) must agree with the
     // driver-local fast path bit for bit — same guard as the CC spec
-    System.setProperty("GRAFT_PR_LOCAL_MAX", "0")
-    try {
-      GraphOps.pageRank(edges, "s", "t", iters = 3)
-        .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap shouldBe got
-    } finally System.clearProperty("GRAFT_PR_LOCAL_MAX")
+    forcedDistributed(GraphOps.pageRank(edges, "s", "t", iters = 3)
+      .collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap) shouldBe got
   }
 
   test("pageRankConverged conserves mass under dangling nodes and stops at eps") {
@@ -193,13 +191,8 @@ class GraphOpsSpec extends SparkSpecBase {
 
   // ------------------------------------------------------------------
   // r18: resolveChain / entryRemover driver-local fast paths must be
-  // bit-identical to the distributed rounds (forced via cap=0).
+  // bit-identical to the distributed rounds (forced via graft.localMax=0).
   // ------------------------------------------------------------------
-
-  private def forcedProp[T](prop: String)(f: => T): T = {
-    System.setProperty(prop, "0")
-    try f finally System.clearProperty(prop)
-  }
 
   test("resolveChain local fast path ≡ distributed: chains, externals, cycles, depth cutoff") {
     // long chain (depth 9), an external root (parent never a key),
@@ -215,7 +208,7 @@ class GraphOpsSpec extends SparkSpecBase {
       .sortBy(_._1).toList
     for (mi <- Seq(20, 3, 2, 0)) {
       val local = dump(GraphOps.resolveChain(edges, maxIter = mi))
-      val dist = forcedProp("GRAFT_RC_LOCAL_MAX")(
+      val dist = forcedDistributed(
         dump(GraphOps.resolveChain(edges, maxIter = mi)))
       withClue(s"maxIter=$mi: ") { local shouldBe dist }
     }
@@ -249,13 +242,13 @@ class GraphOpsSpec extends SparkSpecBase {
       res._3.collect().map(r => (r.getString(0), r.getString(1)))
         .sorted.toList)
     val local = dump(GraphOps.entryRemover(nodes, seeds))
-    val dist = forcedProp("GRAFT_ER_LOCAL_MAX")(
+    val dist = forcedDistributed(
       dump(GraphOps.entryRemover(nodes, seeds)))
     local shouldBe dist
     // both paths raise the same loud incompleteness guard
     val eL = intercept[IllegalStateException](
       GraphOps.entryRemover(nodes, seeds, maxHops = 1))
-    val eD = forcedProp("GRAFT_ER_LOCAL_MAX")(
+    val eD = forcedDistributed(
       intercept[IllegalStateException](
         GraphOps.entryRemover(nodes, seeds, maxHops = 1)))
     eL.getMessage shouldBe eD.getMessage

@@ -91,14 +91,13 @@ class PlanAuditSpec extends SparkSpecBase {
     // plan a single-partition WindowExec — the shape that cannot
     // survive 100 TB; the operator must show mapPartitions over the
     // pinned range-partitioned scan instead. This audit pins the
-    // AT-SCALE shape, so it forces the distributed path (below
-    // GRAFT_PACK_LOCAL_MAX the op legitimately answers from a
-    // driver-local LocalRelation instead — CorpusOpsSpec pins
-    // bit-equality of the two).
-    System.setProperty("GRAFT_PACK_LOCAL_MAX", "0")
-    val plan = try SparkEntry.queries("q140_shard_pack")(
-      spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
-    finally System.clearProperty("GRAFT_PACK_LOCAL_MAX")
+    // AT-SCALE shape, so it forces the distributed path (below the
+    // local-gate cap the op legitimately answers from a driver-local
+    // LocalRelation instead — CorpusOpsSpec pins bit-equality of the
+    // two).
+    val plan = graft.ops.LocalGate.forcedDistributed(SparkEntry.queries(
+      "q140_shard_pack")(spark, "/root/testdata/sf0.001")
+      .queryExecution.executedPlan.toString)
     plan should not include "Window"
     plan should include("MapPartitions")
   }
@@ -189,9 +188,8 @@ class PlanAuditSpec extends SparkSpecBase {
     // both ops must key their window on the pinned partition id
     val docs = (1L to 200L).map(i => (i, i % 13 + 1)).toDF("doc_id", "tok")
     // at-scale shape audit: force the distributed path (the local
-    // fast path below GRAFT_PACK_LOCAL_MAX has no window at all)
-    System.setProperty("GRAFT_PACK_LOCAL_MAX", "0")
-    try {
+    // fast path below the local-gate cap has no window at all)
+    graft.ops.LocalGate.forcedDistributed {
       val packPlan = graft.ops.CorpusOps
         .packSequences(docs, "doc_id",
           org.apache.spark.sql.functions.col("tok"), seqLen = 64L,
@@ -202,7 +200,7 @@ class PlanAuditSpec extends SparkSpecBase {
         .globalShuffle(docs, "doc_id", "s1", nBuckets = 4)
         .queryExecution.executedPlan.toString
       shufPlan should include regex "windowspecdefinition\\(__pid"
-    } finally System.clearProperty("GRAFT_PACK_LOCAL_MAX")
+    }
   }
 
   test("the Zipf top-N rank prunes map-side — WindowGroupLimit before the stratum exchange") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.ops.SimilarityOps
+import graft.ops.LocalGate.forcedDistributed
 
 class SimilarityOpsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -755,11 +756,6 @@ class SimilarityOpsSpec extends SparkSpecBase {
   // a local fast path only exists with a forced-distributed twin).
   // ------------------------------------------------------------------
 
-  private def forcedDistributed[T](prop: String)(f: => T): T = {
-    System.setProperty(prop, "0")
-    try f finally System.clearProperty(prop)
-  }
-
   /** Deterministic awkward floats: mixed signs, magnitudes spanning
     * 1e-3..1e2, values whose decimal expansion stresses the HALF_UP
     * scale-10 rounding of the mean discipline.
@@ -773,7 +769,7 @@ class SimilarityOpsSpec extends SparkSpecBase {
       (i.toLong, Array.tabulate(8)(j => awkward(i, j)))).toDF("id", "vec")
     for ((k, iters) <- Seq((4, 3), (3, 0), (100, 2))) {
       val local = SimilarityOps.trainCentroids(corpus, "id", "vec", k, iters)
-      val dist = forcedDistributed("GRAFT_KM_LOCAL_MAX")(
+      val dist = forcedDistributed(
         SimilarityOps.trainCentroids(corpus, "id", "vec", k, iters))
       local.schema.map(f => (f.name, f.dataType.catalogString)) shouldBe
         dist.schema.map(f => (f.name, f.dataType.catalogString))
@@ -792,7 +788,7 @@ class SimilarityOpsSpec extends SparkSpecBase {
     for ((m, ks, iters) <- Seq((4, 3, 2), (2, 50, 1), (8, 2, 0))) {
       val local = SimilarityOps.trainPqCodebooks(
         corpus, "id", "vec", dim = 8, m = m, ks = ks, iters = iters)
-      val dist = forcedDistributed("GRAFT_PQ_LOCAL_MAX")(
+      val dist = forcedDistributed(
         SimilarityOps.trainPqCodebooks(
           corpus, "id", "vec", dim = 8, m = m, ks = ks, iters = iters))
       local.schema.map(f => (f.name, f.dataType.catalogString)) shouldBe
@@ -814,7 +810,7 @@ class SimilarityOpsSpec extends SparkSpecBase {
       (1L, Array(1f, 0.5f)), (2L, Array(0.5f, 1f)),
       (3L, null.asInstanceOf[Array[Float]])).toDF("id", "vec")
     val viaApi = SimilarityOps.trainCentroids(withNull, "id", "vec", 2, 1)
-    val dist = forcedDistributed("GRAFT_KM_LOCAL_MAX")(
+    val dist = forcedDistributed(
       SimilarityOps.trainCentroids(withNull, "id", "vec", 2, 1))
     viaApi.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toList))
       .sortBy(_._1).toList shouldBe
