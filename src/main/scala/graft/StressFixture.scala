@@ -135,7 +135,7 @@ object StressFixture {
     def replicate(table: String, shifts: Map[String, Long]): Unit = {
       val df = spark.read.parquet(s"$src/$table.parquet")
       df.crossJoin(reps)
-        .select(df.columns.map { c =>
+        .select(df.columns.toSeq.map { c =>
           shifts.get(c) match {
             case Some(st) => (col(c) + col("__rep").cast("long") * st).as(c)
             case None => col(c)

@@ -40,12 +40,22 @@ object Tables {
     */
   private val loadMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]()
+  // Bounded the way SnapshotStore's schema memo is: keys hold their
+  // SparkSession strongly, so a long-lived driver cycling sessions or
+  // table dirs would otherwise keep every analyzed frame forever. A
+  // memo may always forget — at the cap the whole map drops and the
+  // next loads re-resolve once; a bench or verify run holds tens of
+  // keys.
+  private val LoadMemoMax = 4096
 
   private def memo(spark: SparkSession, dir: String, key: String)(
       mk: => DataFrame): DataFrame =
     if (sys.env.contains("GRAFT_NO_MEMO") ||
         sys.props.contains("GRAFT_NO_MEMO")) mk
-    else loadMemo.computeIfAbsent((spark, dir, key), _ => mk)
+    else {
+      if (loadMemo.size >= LoadMemoMax) loadMemo.clear()
+      loadMemo.computeIfAbsent((spark, dir, key), _ => mk)
+    }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     memo(spark, dir, name) {

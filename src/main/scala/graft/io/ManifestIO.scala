@@ -166,7 +166,7 @@ object ManifestIO {
     */
   def readNodeJsonl(spark: SparkSession, path: String): DataFrame = {
     val raw = spark.read.json(path)
-    val allString = raw.select(raw.columns.map(c =>
+    val allString = raw.select(raw.columns.toSeq.map(c =>
       CurationOps.rawCol(c).cast(StringType).as(c)): _*)
     CurationOps.normalizeNa(allString)
   }

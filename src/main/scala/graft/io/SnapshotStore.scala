@@ -102,12 +102,15 @@ object SnapshotStore {
   /** Per-process parquet SCHEMA memo for store files (catalog
     * behavior — Delta records the schema in its log for exactly this
     * reason; here the log pre-dates that row, so the first read's
-    * inference is remembered instead). Sound because store files are
+    * schema is remembered instead). Sound because store files are
     * immutable and never reused: every segment/tombstone/DV name
     * embeds pid + nanotime ([[uniqueName]]), so a rebuilt fixture or
     * a retried commit can never resurrect an old path with different
-    * content. Each EXECUTION still reads the parquet data in full —
-    * only the plan-construction footer inference is skipped (for
+    * content. A miss reads ONE footer on the driver
+    * ([[DriverParquet.schema]], the footer Spark's own inference would
+    * open — no job); only an evolved store's merge read pays Spark's
+    * footer-merge job. Each EXECUTION still reads the parquet data in
+    * full — the memo only skips the footer at plan construction (for
     * merge reads, Spark 4's explicit-schema scan upcasts/null-fills
     * per file, subsuming the footer merge — the `sch`-row contract).
     * GRAFT_NO_MEMO opts out, as with [[graft.Tables.load]].
@@ -125,22 +128,25 @@ object SnapshotStore {
 
   private def readParquetMemo(spark: SparkSession, paths: Seq[String],
       mergeSchema: Boolean): DataFrame = {
-    def raw: DataFrame = {
-      val r = if (mergeSchema) spark.read.option("mergeSchema", "true")
-        else spark.read
-      r.parquet(paths: _*)
-    }
-    if (sys.env.contains("GRAFT_NO_MEMO") ||
-        sys.props.contains("GRAFT_NO_MEMO")) return raw
-    val key = (if (mergeSchema) "m|" else "p|") + paths.mkString(",")
-    val known = schemaMemo.get(key)
-    if (known != null) spark.read.schema(known).parquet(paths: _*)
-    else {
-      val f = raw
-      if (schemaMemo.size >= SchemaMemoMax) schemaMemo.clear()
-      schemaMemo.put(key, f.schema)
-      f
-    }
+    def infer: org.apache.spark.sql.types.StructType =
+      if (mergeSchema)
+        spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
+      else DriverParquet.schema(spark, paths)
+    val schema =
+      if (sys.env.contains("GRAFT_NO_MEMO") ||
+          sys.props.contains("GRAFT_NO_MEMO")) infer
+      else {
+        val key = (if (mergeSchema) "m|" else "p|") + paths.mkString(",")
+        val known = schemaMemo.get(key)
+        if (known != null) known
+        else {
+          val s = infer
+          if (schemaMemo.size >= SchemaMemoMax) schemaMemo.clear()
+          schemaMemo.put(key, s)
+          s
+        }
+      }
+    spark.read.schema(schema).parquet(paths: _*)
   }
 
   /** Committed versions, ascending — a manifest counts once its
@@ -164,16 +170,17 @@ object SnapshotStore {
     * index lifecycles) spent most of their wall in manifest job
     * scheduling (measured: q195's fixture build was ~114 jobs / ~10 s,
     * mostly sub-100 ms manifest/commit jobs). These helpers do the
-    * same parquet I/O with parquet-java directly on the driver — the
-    * format on disk is unchanged (a one-file parquet directory,
-    * spark.read-able; the spec that opens manifests with spark.read
-    * still passes), only the job-per-touch goes away. Exactly Delta's
-    * own design: the transaction log is driver-side I/O, never a job.
+    * same parquet I/O directly on the driver — reads with parquet-java,
+    * writes through [[DriverParquet.write]] (Spark's own parquet
+    * writer) — the format on disk is unchanged (a one-file parquet
+    * directory, spark.read-able; the spec that opens manifests with
+    * spark.read still passes), only the job-per-touch goes away.
+    * Exactly Delta's own design: the transaction log is driver-side
+    * I/O, never a job.
     */
-  private val manifestSchema =
-    org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message manifest { optional binary kind (UTF8); " +
-        "optional binary path (UTF8); }")
+  private val manifestSchema = org.apache.spark.sql.types.StructType(
+    Seq("kind", "path").map(org.apache.spark.sql.types.StructField(_,
+      org.apache.spark.sql.types.StringType)))
 
   private def hadoopConf(spark: SparkSession) =
     spark.sessionState.newHadoopConf()
@@ -207,27 +214,9 @@ object SnapshotStore {
   }
 
   private def writeManifestFile(spark: SparkSession, tmpDir: String,
-      rows: Seq[(String, String)]): Unit = {
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    val conf = hadoopConf(spark)
-    GroupWriteSupport.setSchema(manifestSchema, conf)
-    val file = new org.apache.hadoop.fs.Path(
-      tmpDir, "part-00000-manifest.snappy.parquet")
-    val writer = ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, conf))
-      .withConf(conf).withType(manifestSchema)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    val factory = new SimpleGroupFactory(manifestSchema)
-    try rows.foreach { case (k, p) =>
-      val g = factory.newGroup()
-      if (k != null) g.append("kind", k)
-      if (p != null) g.append("path", p)
-      writer.write(g)
-    } finally writer.close()
-  }
+      rows: Seq[(String, String)]): Unit =
+    DriverParquet.write(spark, tmpDir, manifestSchema,
+      rows.map { case (k, p) => org.apache.spark.sql.Row(k, p) })
 
   /** Publish version `v` listing `rows` = (kind, relative path).
     * Write-to-temp + atomic rename; a taken name = a lost race.
@@ -508,7 +497,9 @@ object SnapshotStore {
     * vacuumed with its segment) before the manifest publishes, and the
     * manifest records a `stats` row so [[readPrunedRange]] never
     * probes the filesystem to discover it. One files-sized aggregation
-    * riding the commit.
+    * job riding the commit; its rows are written on the driver
+    * ([[graft.ops.LayoutOps.writeStatsSidecar]]) unless the sidecar
+    * carries bloom columns, whose binaries stay off the driver.
     */
   private def writeSegStats(spark: SparkSession, dir: String, seg: String,
       statsCols: Seq[String],
@@ -1025,7 +1016,7 @@ object SnapshotStore {
     val cdcRel = if (!cdf) None
       else Some(writeCdc(spark, dir, v,
         rawPrev.join(
-          spark.read.parquet(s"$dir/$tp"), Seq(pId), "left_semi")))
+          DriverParquet.read(spark, Seq(s"$dir/$tp")), Seq(pId), "left_semi")))
     commitManifestCdc(spark, dir, v,
       rows :+ (("tomb", tp)), cdcRel,
       "delete")
@@ -1162,7 +1153,11 @@ object SnapshotStore {
       segsMinusTombs(spark, dir, suspects, tombs, evolved, dvs,
         keepPos = dv).where(pred),
       eager = true)
-    val nDel = matched.count()
+    // ONE bookkeeping aggregate: the delete count and the null-id
+    // count the tombstone guard below needs
+    val tally = matched.agg(count(lit(1)),
+      count(when(bq(pId).isNull, 1))).head()
+    val nDel = tally.getLong(0)
     if (nDel == 0) return None
     val v = vs.max + 1
     val fs = hfs(spark, dir)
@@ -1176,7 +1171,7 @@ object SnapshotStore {
       commitManifestCdc(spark, dir, v, rows :+ dvRow, cdcRel, "delete")
       return Some(DeleteWhere(v, nDel, 0, segs.size, bytes))
     }
-    require(matched.where(bq(pId).isNull).count() == 0,
+    require(tally.getLong(1) == 0,
       s"commitDeleteWhere: matched row(s) carry a null '$idCol' — a " +
         s"null tombstone never matches the read-side anti-join")
     val tp = s"tomb/${uniqueName('t', v)}"
@@ -1348,7 +1343,7 @@ object SnapshotStore {
         s"source rows would claim one target row (the Delta " +
         s"multiple-matches error); dedupe upstream")
     val target = toLogical(rawPrev, m0)
-    val srcP = src.select(src.columns.map(c => col(c).as(s"src_$c")): _*)
+    val srcP = src.select(src.columns.toSeq.map(c => col(c).as(s"src_$c")): _*)
     val delC = coalesce(deleteWhen.getOrElse(lit(false)), lit(false))
     val updC = coalesce(updateWhen.getOrElse(lit(false)), lit(false))
     // the matched classification is pinned ONCE: the tombstone, the
@@ -1359,16 +1354,26 @@ object SnapshotStore {
           when(delC, lit("d")).when(updC, lit("u")).otherwise(lit("n"))),
       eager = true)
     val updRows = matched.where(col("__act") === "u")
-      .select(src.columns.map(c => col(s"src_$c").as(c)): _*)
+      .select(src.columns.toSeq.map(c => col(s"src_$c").as(c)): _*)
     val insRows =
       if (!insertNotMatched) updRows.limit(0)
       else src.join(target.select(col(idCol)), Seq(idCol), "left_anti")
         // the USING join moves idCol first — restore the source order
         // so the written segment's schema matches the store's exactly
-        .select(src.columns.map(col): _*)
-    val nUpd = matched.where(col("__act") === "u").count()
-    val nDel = matched.where(col("__act") === "d").count()
-    val nIns = insRows.count()
+        .select(src.columns.toSeq.map(col): _*)
+    // ONE bookkeeping aggregate over the pinned classification: the
+    // clause counts by `__act`, and the inserts as the source rows no
+    // target row matched — exact because source ids were just proven
+    // distinct and non-null (a target with duplicate ids puts one
+    // source id on several matched rows; count_distinct folds them)
+    val tally = matched.agg(
+      count(when(col("__act") === "u", 1)),
+      count(when(col("__act") === "d", 1)),
+      count_distinct(col(s"src_$idCol"))).head()
+    val nUpd = tally.getLong(0)
+    val nDel = tally.getLong(1)
+    val nIns = if (!insertNotMatched) 0L
+      else idStats.getLong(0) - tally.getLong(2)
     if (nUpd + nDel + nIns == 0) return None
     val v = prev.max + 1
     val claimed = matched.where(col("__act") =!= "n")
@@ -1483,7 +1488,7 @@ object SnapshotStore {
     // this commit actually wrote: a mergeSchema commit may omit map
     // columns, and a constraint referencing one still fails analysis
     // loudly (the documented contract) while unrelated ones evaluate.
-    val raw = spark.read.parquet(segs.map(p => s"$dir/$p"): _*)
+    val raw = DriverParquet.read(spark, segs.map(p => s"$dir/$p"))
     val df = m.fold(raw)(cm => raw.select(
       cm.entries.filter { case (_, p) => raw.columns.contains(p) }
         .map { case (l, p) => bq(p).as(l) }: _*))
@@ -2248,7 +2253,6 @@ object SnapshotStore {
     // an equality probe is also a degenerate range for min/max pruning
     val rangesAll = pRanges ++
       pEqs.map(eq => LayoutOps.ColRange(eq.col, eq.value, eq.value))
-    val fs = hfs(spark, dir)
 
     // Per-segment file lists, driver-cheap at ANY segment count: the
     // manifest names each sidecar's columns, so same-shaped sidecars
@@ -2270,10 +2274,7 @@ object SnapshotStore {
       if (fls.nonEmpty) kept(seg) = fls
     }
     live.filterNot(statsOf.contains).foreach { seg =>
-      val all = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$seg"))
-        .toSeq.map(_.getPath)
-        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-        .map(_.toString)
+      val all = DriverParquet.dataFiles(spark, Seq(s"$dir/$seg"))
       filesTotal += all.size
       if (all.nonEmpty) kept(seg) = all
     }
@@ -2300,7 +2301,7 @@ object SnapshotStore {
 
     def batchFrame(batch: Seq[String]): Option[DataFrame] = {
       def frameOf(files: Seq[String]): Option[DataFrame] = {
-        val raw = spark.read.parquet(files: _*)
+        val raw = DriverParquet.read(spark, files)
         val f = if (liveDvs.isEmpty) raw else withPosCols(raw)
         if (probeCols.exists(!f.columns.contains(_))) None
         else { filesRead += files.size; Some(f.where(residual)) }
@@ -2581,11 +2582,12 @@ object SnapshotStore {
       if (newTombs.isEmpty) asOfFrom.limit(0)
       else {
         val idCols = newTombs.map(p =>
-          spark.read.parquet(s"$dir/$p").columns.toSeq).distinct
+          DriverParquet.schema(spark, Seq(s"$dir/$p")).fieldNames.toSeq)
+          .distinct
         require(idCols.size == 1 && idCols.head.size == 1,
           s"readChanges: in-range tombstones disagree on the id column " +
             s"($idCols) — one change feed needs one delete key")
-        val ids = spark.read.parquet(newTombs.map(p => s"$dir/$p"): _*)
+        val ids = DriverParquet.read(spark, newTombs.map(p => s"$dir/$p"))
           .distinct()
         val hinted = if (tombBroadcastGate(spark, dir, newTombs))
           broadcast(ids) else ids
@@ -2605,8 +2607,7 @@ object SnapshotStore {
           evolved = fromRows.exists(_._1 == "evo"),
           dvs = dvRowsOf(fromManifest), keepPos = true,
           target = schOf(fromManifest))
-        val dvF = spark.read
-          .parquet(newDvs.map(d => s"$dir/${d._1}"): _*)
+        val dvF = DriverParquet.read(spark, newDvs.map(d => s"$dir/${d._1}"))
           .select(col("__dv_file"), col("__dv_ridx"))
         val hinted = if (tombBroadcastGate(spark, dir, newDvs.map(_._1)))
           broadcast(dvF) else dvF
@@ -2747,8 +2748,8 @@ object SnapshotStore {
       segs: Seq[String], evolved: Boolean,
       probeCols: Seq[String], op: String): Unit =
     if (!evolved) {
-      val sch = spark.read.parquet(s"$dir/${segs.head}")
-        .schema.fieldNames.toSet
+      val sch = DriverParquet.schema(spark, Seq(s"$dir/${segs.head}"))
+        .fieldNames.toSet
       val missing = probeCols.filterNot(sch)
       require(missing.isEmpty,
         s"$op: probe column(s) ${missing.mkString(",")} not in the " +
@@ -2785,7 +2786,7 @@ object SnapshotStore {
       val remaining = scala.collection.mutable.Set(eqs.map(_.col): _*)
       val footers = if (evolved) segs else segs.take(1)
       footers.iterator.takeWhile(_ => remaining.nonEmpty).foreach { seg =>
-        spark.read.parquet(s"$dir/$seg").schema.foreach { f =>
+        DriverParquet.schema(spark, Seq(s"$dir/$seg")).foreach { f =>
           if (remaining.remove(f.name)) typeOf(f.name) = f.dataType
         }
       }
@@ -2910,8 +2911,11 @@ object SnapshotStore {
       val statsDirs = groupSegs.map(sidecarDirOf(dir)).distinct
       // sidecar dirs live under write-once unique segment roots, so
       // the schema memo applies to them too (the binaries still never
-      // collect — verdicts stay in the read plan)
-      val sdf = readParquetMemo(spark, statsDirs, mergeSchema = false)
+      // collect — verdicts stay in the read plan). The read names the
+      // sidecars' part files: a `_stats` root is a hidden path to
+      // Spark, which warns on every read that lists one.
+      val sdf = readParquetMemo(spark,
+        DriverParquet.dataFiles(spark, statsDirs), mergeSchema = false)
       val have = sdf.schema.fieldNames.toSet
       val verdicts = eqs.zipWithIndex.collect {
         case ((eq, typedLit), i) if have.contains(s"bloom_${eq.col}") =>
@@ -3035,7 +3039,6 @@ object SnapshotStore {
     // containment is provable only by min = value = max with no nulls
     val rangesAll = pRanges ++
       pEqs.map(eq => LayoutOps.ColRange(eq.col, eq.value, eq.value))
-    val fs = hfs(spark, dir)
     var meta = 0L
     var metaFiles = 0
     var filesTotal = 0
@@ -3064,15 +3067,12 @@ object SnapshotStore {
       if (toScan.nonEmpty) scan(seg) = toScan.toSeq
     }
     live.filterNot(statsOf.contains).foreach { seg =>
-      val all = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$seg"))
-        .toSeq.map(_.getPath)
-        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-        .map(_.toString)
+      val all = DriverParquet.dataFiles(spark, Seq(s"$dir/$seg"))
       filesTotal += all.size
       if (all.nonEmpty) scan(seg) = all
     }
     def countOf(files: Seq[String]): Long = {
-      val f = spark.read.parquet(files: _*)
+      val f = DriverParquet.read(spark, files)
       // evolution can omit a probe column: null never sits in a range
       // and never matches a partition-value set
       if (probeCols.exists(!f.columns.contains(_))) 0L
@@ -3163,7 +3163,6 @@ object SnapshotStore {
       pParts.toSeq.sortBy(_._1).map { case (c, allowed) =>
         bq(c).cast("string").isin(allowed.toSeq.sorted: _*) })
       .reduce(_ && _)
-    val fs = hfs(spark, dir)
     val cand = scala.collection.mutable.Buffer.empty[(Any, Any)]
     var metaFiles = 0
     var filesTotal = 0
@@ -3195,15 +3194,12 @@ object SnapshotStore {
       if (toScan.nonEmpty) scan(seg) = toScan.toSeq
     }
     live.filterNot(statsOf.contains).foreach { seg =>
-      val all = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$seg"))
-        .toSeq.map(_.getPath)
-        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-        .map(_.toString)
+      val all = DriverParquet.dataFiles(spark, Seq(s"$dir/$seg"))
       filesTotal += all.size
       if (all.nonEmpty) scan(seg) = all
     }
     def extremesOf(files: Seq[String]): Option[(Any, Any)] = {
-      val f = spark.read.parquet(files: _*)
+      val f = DriverParquet.read(spark, files)
       if (probeCols.exists(!f.columns.contains(_))) None
       else {
         val r = f.where(residual)
@@ -3293,7 +3289,7 @@ object SnapshotStore {
       import org.apache.spark.sql.types._
       val footers = if (evolved) segs else segs.take(1)
       val dt = footers.iterator
-        .flatMap(seg => spark.read.parquet(s"$dir/$seg").schema
+        .flatMap(seg => DriverParquet.schema(spark, Seq(s"$dir/$seg"))
           .find(_.name == pTarget).map(_.dataType))
         .nextOption()
       dt match {
@@ -3316,7 +3312,6 @@ object SnapshotStore {
       pParts.toSeq.sortBy(_._1).map { case (c, allowed) =>
         bq(c).cast("string").isin(allowed.toSeq.sorted: _*) })
       .reduce(_ && _)
-    val fs = hfs(spark, dir)
     var acc: java.math.BigDecimal = null
     var cnt = 0L
     def accAdd(x: java.math.BigDecimal): Unit =
@@ -3360,15 +3355,12 @@ object SnapshotStore {
       if (toScan.nonEmpty) scan(seg) = toScan.toSeq
     }
     live.filterNot(statsOf.contains).foreach { seg =>
-      val all = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$seg"))
-        .toSeq.map(_.getPath)
-        .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-        .map(_.toString)
+      val all = DriverParquet.dataFiles(spark, Seq(s"$dir/$seg"))
       filesTotal += all.size
       if (all.nonEmpty) scan(seg) = all
     }
     def sumOf(files: Seq[String]): Unit = {
-      val f = spark.read.parquet(files: _*)
+      val f = DriverParquet.read(spark, files)
       if (!probeCols.exists(!f.columns.contains(_))) {
         val r = f.where(residual).agg(
           sum(bq(pTarget).cast(
@@ -3563,8 +3555,9 @@ object SnapshotStore {
     * added; a RESTORE therefore re-reports the segments it re-exposed
     * — the diff is honest about what became readable, not about bytes
     * written. Driver work is manifest-sized; the one sidecar pass is
-    * grouped (segStatRows), and tombstone/DV cardinalities read those
-    * id/position files themselves (match-sized by design).
+    * grouped (segStatRows), and tombstone/DV cardinalities are the
+    * row counts in those files' parquet footers (no job, no data
+    * read).
     */
   def history(spark: SparkSession, dir: String): DataFrame = {
     val vs = versions(spark, dir)
@@ -3585,7 +3578,7 @@ object SnapshotStore {
         sg -> ss.rows.map(_.getAs[Long]("n_rows")).sum
       }.toMap
     def countRows(path: String): Long =
-      spark.read.parquet(s"$dir/$path").count()
+      DriverParquet.rowCount(spark, Seq(s"$dir/$path"))
     val out = vs.map { v =>
       val added = addedOf(v)
       val segsAdded = added.collect { case ("seg", p) => p }

@@ -30,7 +30,7 @@ object JoinOps {
     // withColumn/withColumnRenamed/drop folds each force a full
     // re-analysis of the accumulated tree, which turns deep join DAGs
     // (the 40-join CDS flatten) quadratic in driver time.
-    val childRenamed = childClean.select(childClean.columns.map(c =>
+    val childRenamed = childClean.select(childClean.columns.toSeq.map(c =>
       if (overlap.contains(c)) q(c).as(s"__child_$c") else q(c)): _*)
     val joined = parent.join(childRenamed, keys, joinType)
     val out = joined.columns.flatMap {
@@ -88,7 +88,7 @@ object JoinOps {
     def q(c: String): Column = col("`" + c.replace("`", "") + "`")
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
     def suffixed(df: DataFrame, sfx: String, mark: String) =
-      df.select(df.columns.map(c =>
+      df.select(df.columns.toSeq.map(c =>
         if (overlap.contains(c)) q(c).as(c + sfx) else q(c)) :+
         lit(1).as(mark): _*)
     val lk = if (overlap.contains(leftKey)) leftKey + "_x" else leftKey

@@ -155,7 +155,11 @@ object LayoutOps {
     * EVERY commit its own skipping stats (the Delta discipline:
     * pruning must not wait for OPTIMIZE). One columns-pruned scan of
     * the just-written files — at cluster scale this rides the write
-    * as a files-sized aggregation.
+    * as a files-sized aggregation. Its rows (one per data file) are
+    * collected and written on the driver as one parquet file
+    * ([[graft.io.DriverParquet.write]] — Spark's own writer, no write
+    * job); a sidecar with bloom columns keeps the distributed write,
+    * so the filter binaries never reach the driver.
     */
   def writeStatsSidecar(spark: SparkSession, statsCols: Seq[String],
       dataDir: String, statsDir: String,
@@ -166,7 +170,7 @@ object LayoutOps {
       "writeStatsSidecar needs stats or bloom columns")
     require(bloomExpectedItems > 0 && bloomFpp > 0 && bloomFpp < 1,
       s"bloom sizing out of range: ($bloomExpectedItems, $bloomFpp)")
-    val data = spark.read.parquet(dataDir)
+    val data = graft.io.DriverParquet.read(spark, Seq(dataDir))
     // min/max persist in the COLUMN'S OWN TYPE (long, double, string,
     // date, timestamp) — the sidecar compare and the residual filter
     // are typed end-to-end, so reference-shaped probes (ship-date
@@ -213,10 +217,16 @@ object LayoutOps {
       bloomCols.map(c => bloomAgg(col(c), bloomExpectedItems, bloomFpp)
         .as(s"bloom_$c")) :+
       count(lit(1)).as("n_rows")
-    data.groupBy(input_file_name().as("file"))
+    val stats = data.groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(statsDir)
+    if (bloomCols.nonEmpty)
+      stats.coalesce(1).write.mode("overwrite").parquet(statsDir)
+    else {
+      val rows = stats.collect()
+      val p = new org.apache.hadoop.fs.Path(statsDir)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+      graft.io.DriverParquet.write(spark, statsDir, stats.schema, rows)
+    }
   }
 
   /** Spark's BloomFilterAggregate over the column's xxhash64 image —
@@ -292,8 +302,8 @@ object LayoutOps {
       if (kept.isEmpty)
         // schema-stable empty frame; Catalyst folds the false filter
         // to an empty relation, so nothing is read
-        spark.read.parquet(s"$dir/data").where(lit(false))
-      else spark.read.parquet(kept.toIndexedSeq: _*).where(residual)
+        graft.io.DriverParquet.read(spark, Seq(s"$dir/data")).where(lit(false))
+      else graft.io.DriverParquet.read(spark, kept).where(residual)
     PrunedScan(df, kept.length, total)
   }
 
@@ -318,7 +328,10 @@ object LayoutOps {
     */
   private[graft] def pruneFiles(spark: SparkSession, statsDir: String,
       ranges: Seq[ColRange]): (Seq[String], Int) = {
-    val sdf = spark.read.parquet(statsDir)
+    // the sidecar's part files, not its `_stats` root (a hidden path
+    // Spark warns about on every read)
+    val sdf = graft.io.DriverParquet.read(spark,
+      graft.io.DriverParquet.dataFiles(spark, Seq(statsDir)))
     val have = sdf.schema.fieldNames.toSet
     val stats = sdf.collect()
     val missing = ranges.map(_.col)

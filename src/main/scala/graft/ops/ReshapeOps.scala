@@ -63,7 +63,7 @@ object ReshapeOps {
     * dropping unmapped ones (ref `/root/reference/src/manifest_liftover.py`).
     */
   def liftover(df: DataFrame, mapping: Map[String, String]): DataFrame = {
-    val keep = df.columns.filter(mapping.contains)
+    val keep = df.columns.toSeq.filter(mapping.contains)
     df.select(keep.map(c => col(c).as(mapping(c))): _*)
   }
 

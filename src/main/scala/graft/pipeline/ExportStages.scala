@@ -264,8 +264,8 @@ object ExportStages {
       // that only fails at a later ambiguous-reference resolution. The
       // flat/first column wins; later dotted variants are dropped.
       // Built as ONE select: per-column renames re-analyze the tree.
-      val taken = scala.collection.mutable.Set(
-        kept.filter(!_.contains(".")): _*)
+      val taken = scala.collection.mutable.Set.from(
+        kept.filter(!_.contains(".")))
       val out = kept.flatMap { c =>
         if (!c.contains(".")) Some(col("`" + c + "`"))
         else {

@@ -24,3 +24,12 @@ object FunctionBridge {
     spark.sessionState.functionRegistry
       .registerFunction(descriptor._1, descriptor._2, descriptor._3)
 }
+
+/** `StructType.asNullable` is `private[spark]`: a file source's
+  * schema reads back all-nullable, and the driver-side footer reader
+  * ([[graft.io.DriverParquet]]) returns it the same way.
+  */
+object SchemaBridge {
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+}

@@ -185,4 +185,66 @@ class LayoutOpsSpec extends SparkSpecBase {
         statsCols = Seq("name"), freshDir("typed_bad"))
     }.getMessage should include("rank-binned")
   }
+
+  test("driver-written stats sidecar equals Spark's write: schema, rows and parquet types for every stats type") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val dir = freshDir("drvsidecar")
+    val schema = StructType(Seq(
+      StructField("l", LongType), StructField("s", ShortType),
+      StructField("i", IntegerType), StructField("str", StringType),
+      StructField("d", DoubleType), StructField("dt", DateType),
+      StructField("ts", TimestampType), StructField("dec", DecimalType(12, 3)),
+      StructField("grp", StringType)))
+    val rows = (0 until 60).map { k =>
+      def orNull(v: Any) = if (k % 7 == 3) null else v
+      Row(orNull(k.toLong * 1000003L), orNull((k - 30).toShort), orNull(k * 17),
+        orNull(f"s$k%03d"), if (k % 11 == 5) Double.NaN else orNull(k / 4.0),
+        orNull(java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(k))),
+        orNull(java.sql.Timestamp.valueOf(
+          java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusMinutes(k * 37L))),
+        orNull(new java.math.BigDecimal(s"${k * 13}.125")), s"g${k % 3}")
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    df.write.parquet(s"$dir/data")
+    val cols = Seq("l", "s", "i", "str", "d", "dt", "ts", "dec")
+    // a bloom column keeps Spark's distributed write: the reference
+    def sameSidecar(drv: String, spk: String): Unit = {
+      val a = spark.read.parquet(graft.io.DriverParquet.dataFiles(spark, Seq(drv)): _*)
+      val b = spark.read.parquet(graft.io.DriverParquet.dataFiles(spark, Seq(spk)): _*)
+        .drop("bloom_l")
+      a.schema shouldBe b.schema
+      a.orderBy("file").collect().toSeq shouldBe b.orderBy("file").collect().toSeq
+      a.count() should be > 0L
+      // one file each, the same parquet column types (bloom aside)
+      def fileSchema(d: String) = {
+        val fs = graft.io.DriverParquet.files(spark, Seq(d))
+        fs.size shouldBe 1
+        val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            fs.head, spark.sessionState.newHadoopConf()))
+        try in.getFooter.getFileMetaData.getSchema.getFields.asScala
+          .filterNot(_.getName == "bloom_l").map(_.toString).toSeq
+        finally in.close()
+      }
+      fileSchema(drv) shouldBe fileSchema(spk)
+    }
+    LayoutOps.writeStatsSidecar(spark, cols, s"$dir/data", s"$dir/drv")
+    LayoutOps.writeStatsSidecar(spark, cols, s"$dir/data", s"$dir/spk",
+      bloomCols = Seq("l"))
+    sameSidecar(s"$dir/drv", s"$dir/spk")
+    spark.read.parquet(s"$dir/drv").columns should contain allOf (
+      "sum_l", "sum_s", "sum_i", "min_d", "max_dec", "nulls_ts", "n_rows")
+
+    // a partitioned commit's ONE shared sidecar at the commit root
+    val store = s"$dir/store"
+    graft.io.SnapshotStore.commitAppend(df, store, statsCols = cols,
+      partitionBy = Seq("grp"))
+    val root = new java.io.File(s"$store/seg").listFiles().head.getAbsolutePath
+    LayoutOps.writeStatsSidecar(spark, cols, root, s"$dir/rootspk",
+      bloomCols = Seq("l"))
+    sameSidecar(s"$root/_stats", s"$dir/rootspk")
+    spark.read.parquet(s"$root/_stats").count() shouldBe 3 * 3 // 3 leaves x 3 files
+  }
 }

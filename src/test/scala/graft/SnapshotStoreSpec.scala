@@ -2465,4 +2465,114 @@ class SnapshotStoreSpec extends SparkSpecBase {
       .schema("n").dataType shouldBe
       org.apache.spark.sql.types.LongType
   }
+
+  /** The max retained job id — ids are monotonic, so it moves only
+    * when a job ran (PlanAuditSpec's probe; a job COUNT can shrink as
+    * the status tracker evicts old jobs). */
+  private def lastJob: Int = spark.sparkContext.statusTracker
+    .getJobIdsForGroup(null).maxOption.getOrElse(-1)
+
+  test("footer helper: schemas and row counts equal Spark's inference on every store directory shape") {
+    import graft.io.DriverParquet
+    import graft.ops.LayoutOps
+    val dir = freshDir("footers")
+    // sums (integral stats columns) and blooms in one sidecar
+    SnapshotStore.commitAppend(docs(1 to 40).repartition(2), dir,
+      statsCols = Seq("doc_id", "text"), bloomCols = Seq("n"))
+    SnapshotStore.commitAppend(docs(41 to 60), dir, statsCols = Seq("doc_id"))
+    SnapshotStore.commitAppend(docs(1 to 0), dir) // a zero-row segment
+    SnapshotStore.commitDelete(Seq(3L, 4L).toDF("doc_id"), "doc_id", dir,
+      cdf = true)
+    SnapshotStore.commitDeleteWhere(spark, dir,
+      Seq(LayoutOps.ColRange("doc_id", 50L, 52L)), "doc_id", dv = true)
+    val pdir = freshDir("footersp")
+    SnapshotStore.commitAppend(langPop(30), pdir, statsCols = Seq("doc_id"),
+      partitionBy = Seq("lang"))
+    def subdirs(root: String, kind: String): Seq[String] =
+      Option(new java.io.File(s"$root/$kind").listFiles()).toSeq.flatten
+        .filter(_.isDirectory).map(_.getAbsolutePath).sorted
+    val segs = subdirs(dir, "seg")
+    val sidecars = segs.map(s => s"$s/_stats")
+      .filter(s => new java.io.File(s).isDirectory)
+    val roots = subdirs(pdir, "seg")
+    val leaves = roots.flatMap(r => subdirs(r, "").filter(_.contains("__p_lang=")))
+    val shapes = Map("segment" -> segs, "tombstone" -> subdirs(dir, "tomb"),
+      "dv" -> subdirs(dir, "dv"), "cdc" -> subdirs(dir, "cdc"),
+      "sidecar" -> sidecars, "leaf" -> leaves, "root" -> roots)
+    shapes.foreach { case (shape, ps) => withClue(shape) { ps should not be empty } }
+    sidecars.size shouldBe 2
+    leaves.size shouldBe 3
+    shapes.values.flatten.foreach { p =>
+      withClue(p) {
+        val spk = spark.read.parquet(p)
+        val footer = DriverParquet.schema(spark, Seq(p))
+        // a partition root's columns come from its directory names —
+        // the read adds them to the footer schema exactly as inference does
+        spark.read.schema(footer).parquet(p).schema shouldBe spk.schema
+        if (!roots.contains(p)) footer shouldBe spk.schema
+        DriverParquet.rowCount(spark, Seq(p)) shouldBe spk.count()
+      }
+    }
+    // the zero-row segment and the bloom sidecar are among them
+    segs.map(s => DriverParquet.rowCount(spark, Seq(s))) should contain (0L)
+    sidecars.map(s => DriverParquet.schema(spark, Seq(s)).fieldNames.toSeq)
+      .flatten should contain allOf ("sum_doc_id", "bloom_n")
+    // several paths at once: the first file in path order decides
+    DriverParquet.schema(spark, leaves) shouldBe spark.read.parquet(leaves: _*).schema
+    DriverParquet.rowCount(spark, leaves) shouldBe 30L
+    an[IllegalArgumentException] should be thrownBy
+      DriverParquet.schema(spark, Seq(freshDir("footers_empty")))
+  }
+
+  test("store metadata runs no job: building a read frame, and history's tombstone/DV counts") {
+    import graft.ops.LayoutOps
+    val dir = freshDir("nojob")
+    SnapshotStore.commitAppend(docs(1 to 20), dir)
+    SnapshotStore.commitAppend(docs(21 to 40), dir)
+    SnapshotStore.commitDelete(Seq(2L, 3L, 30L).toDF("doc_id"), "doc_id", dir)
+    SnapshotStore.commitDeleteWhere(spark, dir,
+      Seq(LayoutOps.ColRange("doc_id", 10L, 14L)), "doc_id", dv = true)
+    // a fresh store: every path is a schema-memo miss, so the footers
+    // are read here — on the driver, not as inference jobs
+    val before = lastJob
+    val df = SnapshotStore.read(spark, dir)
+    lastJob shouldBe before
+    df.count() shouldBe 32L // 40 - 3 tombstoned - 5 dv-deleted
+    // no statsCols, so history has no sidecar to collect: the
+    // tombstone and DV cardinalities come from footer row counts
+    val hBefore = lastJob
+    val h = SnapshotStore.history(spark, dir)
+    lastJob shouldBe hBefore
+    val rows = h.orderBy(col("version")).collect()
+    rows.map(_.getLong(6)).toSeq shouldBe Seq(0L, 0L, 3L, 0L)
+    rows.map(_.getLong(7)).toSeq shouldBe Seq(0L, 0L, 0L, 5L)
+  }
+
+  test("commitMerge counts from one aggregate: a target with duplicate ids counts every claimed row, inserts once") {
+    val dir = freshDir("mergedup")
+    // ids 1 and 2 appear twice in the target (commitAppend does not
+    // enforce a key); the source updates 1, deletes 2, inserts 9
+    val target = Seq((1L, "a", 1L), (1L, "b", 1L), (2L, "c", 2L),
+      (2L, "d", 2L), (3L, "e", 3L)).toDF("doc_id", "text", "n")
+    SnapshotStore.commitAppend(target, dir)
+    val src = Seq((1L, "U1", 10L), (2L, "D2", 20L), (9L, "I9", 90L))
+      .toDF("doc_id", "text", "n")
+    val res = SnapshotStore.commitMerge(src, "doc_id", dir,
+      deleteWhen = Some(col("src_text") === "D2")).get
+    res.updated shouldBe 2 // both target rows of id 1
+    res.deleted shouldBe 2 // both target rows of id 2
+    res.inserted shouldBe 1 // id 9 only; id 1's two matches are one source row
+    // each claimed target row is replaced (Delta's per-target-row
+    // MERGE semantics), so id 1 keeps its two rows, both updated
+    SnapshotStore.read(spark, dir).orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq shouldBe
+      Seq((1L, "U1"), (1L, "U1"), (3L, "e"), (9L, "I9"))
+    // the same counts with inserts switched off
+    val dir2 = freshDir("mergedup2")
+    SnapshotStore.commitAppend(target, dir2)
+    val res2 = SnapshotStore.commitMerge(src, "doc_id", dir2,
+      deleteWhen = Some(col("src_text") === "D2"),
+      insertNotMatched = false).get
+    (res2.updated, res2.deleted, res2.inserted) shouldBe ((2L, 2L, 0L))
+  }
 }
