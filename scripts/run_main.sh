@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes (no sbt lock) —
 # same JDK17 add-opens + heap as build.sbt's forked run.
-# Usage: scripts/run_main.sh graft.RecallBench [args...]
+# Usage: scripts/run_main.sh graft.Bench [args...]
 cd "$(dirname "$0")/.." || exit 1
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \

@@ -1,69 +1,42 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main: runs every query against SPARK_GRAFT_SF_DIR and
+/** Benchmark main: runs the queries against a sf or stress dir and
   * prints one JSON line. Results are fully materialized via a noop
   * write (count() alone would let Catalyst prune unevaluated columns).
-  * Two interleaved full passes are timed and the per-query MIN is
+  * Two interleaved passes are timed and the per-query MIN is
   * reported, so a transient busy window on the host can't masquerade
   * as a query regression (both raw passes land in the file output).
+  *
+  * Usage: runMain graft.Bench [sfDir] [prefixes]. The dir defaults to
+  * SPARK_GRAFT_SF_DIR; prefixes (the [[Harness.select]] convention)
+  * restrict the warm pass and both timed passes to the matching
+  * queries — the scale-table protocol over a StressFixture dir.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The warm pass below exists so "JIT/codegen compilation doesn't
-      // land in the first timed queries" — but Spark's generated-class
-      // cache (static conf, default 100 entries) can't hold one suite
-      // pass (238 queries × ~10 codegen units), so every timed window
-      // was re-Janino-compiling its whole-stage code and the warm pass
-      // warmed nothing. Sized to hold the suite; irrelevant at cluster
-      // scale (one compile per long query is noise there — here it was
-      // a measurable fixed cost per window).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm pass: every query once against the smallest SF (and the
-    // real inputs' footers) so JIT/codegen compilation doesn't land in
-    // the first timed queries. Standard steady-state benchmarking; the
-    // timed run below is untouched.
+    val sfDir = args.headOption
+      .orElse(sys.env.get("SPARK_GRAFT_SF_DIR")).getOrElse("/root/testdata/sf0.1")
+    val selected = Harness.select(args.toSeq.drop(1))
+    val spark = Harness.session(32)
+    // Warm pass: every selected query once against the smallest SF
+    // (and the real inputs' footers) so JIT/codegen compilation doesn't
+    // land in the first timed queries. Standard steady-state
+    // benchmarking; the timed run below is untouched.
     Tables.names.foreach { n =>
       try Tables.load(spark, sfDir, n).count() catch { case _: Throwable => () }
     }
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      SparkEntry.allQueries.foreach { q =>
+      selected.foreach { q =>
         try q.run(spark, warmDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
       }
     }
-    // Between timed queries: localCheckpoint blocks (fixture/iterative
-    // queries) and shuffle files otherwise accumulate across the run
-    // and get reclaimed by the ASYNC context cleaner — whose work then
-    // lands inside a later query's timed window (the r5/r6 roving
-    // cold-window artifact: q87-q98 read 2-4x their steady state with
-    // zero code changes). Draining deterministically OUTSIDE the timed
-    // region keeps each window to its own query's work.
-    // (A forced System.gc() here was measured WORSE: +0.06 s median
-    // per query — the full GC's concurrent cleanup overlaps the next
-    // window. Deterministic unpersist alone is the win.)
-    def drain(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     // A failed query records -1 (sentinel), never its partial elapsed
     // time — a broken query must not read as a fast one.
     def timedPass(pass: Int): Seq[(String, Double)] =
-      SparkEntry.allQueries.map { q =>
-        drain()
+      selected.map { q =>
+        Harness.drain(spark)
         val t0 = System.nanoTime()
         val ok =
           try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }

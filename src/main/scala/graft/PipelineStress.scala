@@ -158,22 +158,15 @@ object PipelineStress {
     // put a ~550 MB sort/join working set in every one of 32
     // concurrent tasks — the execution pool exhausts (observed:
     // UNABLE_TO_ACQUIRE_MEMORY in the cds sink). On a cluster the
-    // same rule applies as "tasks ∝ data"; here it's a knob because
-    // local[32]'s pool is fixed. AQE coalesces the excess at 1×.
-    val shuffleParts = sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", "32")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // same rule applies as "tasks ∝ data"; here GRAFT_SHUFFLE_PARTS
+    // overrides the one-per-core default because local[n]'s pool is
+    // fixed. AQE coalesces the excess at 1×.
+    val spark = Harness.session(32)
+    sys.env.get("GRAFT_SHUFFLE_PARTS")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
 
     (1 to runs).foreach { run =>
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Harness.drain(spark)
       val total0 = System.nanoTime()
       def timed[A](label: String)(f: => A): A = {
         val t0 = System.nanoTime()

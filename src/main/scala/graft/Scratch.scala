@@ -1,80 +1,50 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Ad-hoc plan/latency inspection main (dev tool, not part of the
-  * driver contract).
+  * driver contract). For each selected query: the construct/plan/exec
+  * split of 3 drained runs, every Spark job's wall time and call site
+  * (the construct phase of checkpoint-heavy queries is a sequence of
+  * eager jobs, and this shows which ones carry the cost), and the AQE
+  * FINAL plan — the pre-execution explain shows isFinalPlan=false with
+  * estimate-based join strategies that AQE may replace. Exec runs the
+  * query's own physical plan (a noop write would re-plan a copy of it
+  * inside the timed window and leave this plan unfinalized).
+  *
+  * Usage: runMain graft.Scratch [sfDir] [prefixes] (the
+  * [[Harness.select]] convention). Plain min-of-two timing is
+  * `graft.Bench <sfDir> <prefixes>`.
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // same filter convention as graft.Verify: comma-separated query-name
-    // PREFIXES (space-separated args are also accepted and merged)
-    val prefixes = args.drop(1).flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096") // match Bench
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SCRATCH_JOBS=1: print every Spark job's wall time + call site —
-    // the construct phase of checkpoint-heavy queries is a sequence of
-    // eager jobs, and this shows which ones carry the cost.
-    if (sys.env.contains("SCRATCH_JOBS")) {
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(js.jobId, (System.nanoTime(),
-            Option(js.properties.getProperty("callSite.short")).getOrElse("?")))
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val (t0, site) = starts.getOrDefault(je.jobId, (0L, "?"))
-          println(f"[job] ${je.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%6.2f s  $site")
-        }
-      })
-    }
-    // Same deterministic drain as Bench: leftover localCheckpoint
-    // blocks from a previous construction otherwise accumulate and
-    // contaminate later runs' timings (growing "construct" times).
-    def drain(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
-    def time(label: String)(mk: => org.apache.spark.sql.DataFrame): Unit =
-      (1 to 3).foreach { i =>
-        drain()
-        val t0 = System.nanoTime()
-        mk.write.format("noop").mode("overwrite").save()
-        println(f"[scratch] $label run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val qs = Harness.select(args.toSeq.drop(1))
+    val spark = Harness.session(32)
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        starts.put(js.jobId, (System.nanoTime(), js.stageInfos.headOption.fold("?")(_.name)))
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
+        val (t0, site) = starts.getOrDefault(je.jobId, (0L, "?"))
+        println(f"[job] ${je.jobId}%3d ${(System.nanoTime() - t0) / 1e9}%6.2f s  $site")
       }
-    val qs = SparkEntry.allQueries.filter(q =>
-      prefixes.isEmpty || prefixes.exists(q.name.startsWith))
+    })
     qs.foreach { q =>
-      val df = q.run(spark, sfDir)
-      if (sys.env.contains("SCRATCH_EXPLAIN_FINAL")) {
-        // the AQE FINAL plan: execute first (noop), then print — the
-        // pre-execution explain shows isFinalPlan=false with initial
-        // (estimate-based) join strategies that AQE may replace
-        df.write.format("noop").mode("overwrite").save()
-        println(df.queryExecution.executedPlan.toString)
-      }
-      else if (sys.env.contains("SCRATCH_EXPLAIN")) df.explain("formatted")
-      else if (sys.env.contains("SCRATCH_PHASES")) (1 to 3).foreach { i =>
-        drain()
+      val last = (1 to 3).map { i =>
+        Harness.drain(spark)
         val t0 = System.nanoTime()
         val d = q.run(spark, sfDir)
         val t1 = System.nanoTime()
         d.queryExecution.executedPlan // force analysis+optimize+planning
         val t2 = System.nanoTime()
-        d.write.format("noop").mode("overwrite").save()
+        d.queryExecution.toRdd.foreach(_ => ()) // runs THIS plan, so AQE finalizes it
         val t3 = System.nanoTime()
         println(f"[scratch] ${q.name} run$i: construct ${(t1 - t0) / 1e9}%.2f" +
           f" plan ${(t2 - t1) / 1e9}%.2f exec ${(t3 - t2) / 1e9}%.2f s")
-      }
-      else time(q.name)(q.run(spark, sfDir))
+        d
+      }.last
+      println(last.queryExecution.executedPlan.toString)
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Builds an N× scale-stress fixture from an sf dir (dev tool, not part
@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
   *    the identity for both, so the original rows appear verbatim.
   * No RNG anywhere — rebuilding the fixture is reproducible.
   *
-  * CLUSTERED mode (r14, the RecallBench regime fixture): `clustered`
+  * CLUSTERED mode (r14, the ANN-recall regime fixture): `clustered`
   * as arg 4 writes ONLY an embeddings table of n·factor vectors drawn
   * from √(n·factor)/4 PLANTED CLUSTERS — vector = center + ε·noise
   * with ε = 0.15 per dimension, both hash-derived (no RNG), center
@@ -48,7 +48,7 @@ import org.apache.spark.sql.functions._
   * regime residual PQ / trained seeding / SQ8 exist for (residuals
   * concentrate only when cell centroids approximate real cluster
   * means), which the replicated near-isotropic corpus cannot
-  * exercise; RecallBench runs on it unchanged.
+  * exercise; the recall curves recorded on it are in SURVEY §8 r14.
   *
   * Usage: runMain graft.StressFixture [srcDir] [outDir] [factor] [clustered]
   */
@@ -59,13 +59,7 @@ object StressFixture {
     val factor = args.lift(2).map(_.toInt).getOrElse(100)
     val clustered = args.lift(3).contains("clustered")
     require(factor >= 1, "factor must be >= 1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
 
     new java.io.File(out).mkdirs()
 

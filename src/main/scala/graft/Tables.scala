@@ -50,8 +50,7 @@ object Tables {
 
   private def memo(spark: SparkSession, dir: String, key: String)(
       mk: => DataFrame): DataFrame =
-    if (sys.env.contains("GRAFT_NO_MEMO") ||
-        sys.props.contains("GRAFT_NO_MEMO")) mk
+    if (Harness.knob("GRAFT_NO_MEMO").isDefined) mk
     else {
       if (loadMemo.size >= LoadMemoMax) loadMemo.clear()
       loadMemo.computeIfAbsent((spark, dir, key), _ => mk)

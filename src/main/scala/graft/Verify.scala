@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,21 +10,10 @@ object Verify {
       .getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/tmp/graft_verify_out")
     // Optional 3rd arg (local iteration only; driver passes two args):
-    // comma-separated query-name prefixes — run and dump only those.
-    val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // suite-sized codegen cache (the Bench rationale): 238 queries
-      // evict the 100-entry default every sweep
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // query-name prefixes (the Harness.select convention) — run and
+    // dump only those.
+    val selected = Harness.select(args.lift(2).toSeq).map(_.name).toSet
+    val spark = Harness.session(4)
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.foreach { case (name, fn) =>

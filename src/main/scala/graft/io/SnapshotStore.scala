@@ -133,8 +133,7 @@ object SnapshotStore {
         spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
       else DriverParquet.schema(spark, paths)
     val schema =
-      if (sys.env.contains("GRAFT_NO_MEMO") ||
-          sys.props.contains("GRAFT_NO_MEMO")) infer
+      if (graft.Harness.knob("GRAFT_NO_MEMO").isDefined) infer
       else {
         val key = (if (mergeSchema) "m|" else "p|") + paths.mkString(",")
         val known = schemaMemo.get(key)
@@ -2713,7 +2712,7 @@ object SnapshotStore {
     * Call it after every commit (or on a schedule): cost is one
     * manifest read when idle, and read amplification stays BOUNDED
     * under continuous ingest with rewrite-bytes-per-fire ≪ table
-    * bytes (measured by `graft.SnapshotBench`). History pins and CDC
+    * bytes (curves in SURVEY §8 r14). History pins and CDC
     * are untouched (both compactions are dataChange=false); concurrent
     * readers keep their manifests. Returns which action fired, or
     * None when idle or when only big segments exceed the count cap.

@@ -43,8 +43,7 @@ object Checkpoints {
     * rate-sized) stays on [[cut]].
     */
   def sharedCut(df: DataFrame, eager: Boolean): DataFrame =
-    sys.env.get("GRAFT_SHARED_CP_LEVEL")
-      .orElse(sys.props.get("GRAFT_SHARED_CP_LEVEL")) match {
+    graft.Harness.knob("GRAFT_SHARED_CP_LEVEL") match {
       case Some(l) => df.localCheckpoint(eager,
         org.apache.spark.storage.StorageLevel.fromString(l))
       // plain localCheckpoint, NOT [[cut]]: shared frames are consumed

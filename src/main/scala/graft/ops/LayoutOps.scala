@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * identical to a full scan, which is exactly what the q165 oracle
   * grades. A lexicographic layout prunes only on its leading column;
   * the z-order layout prunes on every interleaved column — measured
-  * head-to-head by `graft.LayoutBench` (numbers in SURVEY §8).
+  * head-to-head in SURVEY §8 r13 item 16.
   */
 object LayoutOps {
 

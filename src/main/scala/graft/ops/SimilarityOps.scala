@@ -455,8 +455,8 @@ object SimilarityOps {
     * [[SketchOps.kmvHash]] of `id|round` scaled to [0,1) — no RNG, so
     * training is bit-reproducible across runs and cluster layouts
     * (the repo-wide no-RNG discipline), and φ is a decimal-exact sum.
-    * Measured recall impact vs lowest-id init: RecallBench
-    * `ivf_sqrt_kmpar*` configs, SURVEY §8 r13 item 17.
+    * Measured recall impact vs lowest-id init: the `ivf_sqrt_kmpar*`
+    * curves in SURVEY §8 r13 item 17.
     */
   def trainCentroidsScalable(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, rounds: Int = 3, ell: Int = 0, lloydIters: Int = 5): DataFrame = {

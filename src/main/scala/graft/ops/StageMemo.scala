@@ -50,7 +50,7 @@ object StageMemo {
     new ConcurrentHashMap[String, Vector[(StructType, Array[Row])]]()
 
   private def disabled: Boolean =
-    sys.env.contains("GRAFT_NO_MEMO") || sys.props.contains("GRAFT_NO_MEMO")
+    graft.Harness.knob("GRAFT_NO_MEMO").isDefined
 
   /** Test/diagnostic hook. */
   def invalidate(key: String): Unit = { cache.remove(key); () }

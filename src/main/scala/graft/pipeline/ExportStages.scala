@@ -306,8 +306,7 @@ object ExportStages {
     // original placement measurement), and the knob exists for the
     // same reason GRAFT_SHUFFLE_PARTS does — the right setting is a
     // function of data scale.
-    val cutHops = sys.env.get("GRAFT_CDS_CP_HOPS")
-      .orElse(sys.props.get("GRAFT_CDS_CP_HOPS")).exists(_ != "0")
+    val cutHops = graft.Harness.knob("GRAFT_CDS_CP_HOPS").exists(_ != "0")
     def hop(p: Option[(String, DataFrame)]): Option[(String, DataFrame)] =
       if (cutHops) p.map { case (n, df) => n -> shared(df) } else p
 

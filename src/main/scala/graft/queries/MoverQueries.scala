@@ -26,7 +26,7 @@ object MoverQueries {
     * static initializer, and throwing here would take down every
     * query in the run, not just the two mover fixtures.
     */
-  private val Scale = sys.env.get("GRAFT_STRESS_SCALE")
+  private val Scale = graft.Harness.knob("GRAFT_STRESS_SCALE")
     .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
   private val KfCap = 120 * Scale
   private val MoverCap = 80 * Scale

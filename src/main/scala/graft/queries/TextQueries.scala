@@ -1615,7 +1615,7 @@ object TextQueries {
     // quantizer only has to not-miss it, not rank it first), which is
     // why PQ + a small refine matches the exact-in-probed-cells
     // ceiling at a fraction of brute-force cost — measured in
-    // RecallBench (SURVEY §8). Same persisted fixture as q164 — one
+    // the SURVEY §8 recall curves. Same persisted fixture as q164 — one
     // build, two graded search faces, which IS the build-once
     // contract. The oracle replays shortlist AND re-rank: the
     // q164 CTE chain cut at ADC rank ≤ 10, then the exact FloatDot

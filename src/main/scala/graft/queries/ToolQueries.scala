@@ -23,7 +23,7 @@ object ToolQueries {
     * fixture cap in BOTH the Spark plan and the oracle literal, so the
     * oracle compare holds at any scale; unset (=1) in driver runs.
     */
-  private val Scale = sys.env.get("GRAFT_STRESS_SCALE")
+  private val Scale = graft.Harness.knob("GRAFT_STRESS_SCALE")
     .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(1)
   private val RemoverCap = 60 * Scale
 

@@ -3,6 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import scala.jdk.CollectionConverters._
+
 /** Doc-currency guard: SURVEY §8 is the coverage contract the round
   * audit reads line by line, and README advertises the graded-query
   * count — both have drifted behind the code before (VERDICT r10
@@ -63,5 +65,41 @@ class SurveyCoverageSpec extends AnyFunSuite with Matchers {
     // silently weakening the gate.
     val withoutOracle = names.filterNot(SparkEntry.oracleSql.contains)
     withoutOracle shouldBe empty
+  }
+
+  private lazy val mainSources: Seq[String] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => read(p.toString)).toSeq
+    finally files.close()
+  }
+
+  test("src/main builds its SparkSession in exactly one place (Harness)") {
+    mainSources.map("SparkSession\\.builder\\(\\)".r.findAllIn(_).size).sum shouldBe 1
+  }
+
+  test("every main CLAUDE.md and README.md tell you to run exists") {
+    val named = Seq("CLAUDE.md", "README.md").flatMap { doc =>
+      "(?:runMain|scripts/run_main\\.sh)\\s+graft\\.(\\w+)".r
+        .findAllMatchIn(read(doc)).map(m => doc -> m.group(1))
+    }
+    named should not be empty
+    val missing = named.filterNot { case (_, n) =>
+      scala.util.Try(Class.forName(s"graft.$n")
+        .getMethod("main", classOf[Array[String]])).isSuccess
+    }
+    withClue(s"commands name mains that do not exist: $missing") {
+      missing shouldBe empty
+    }
+  }
+
+  test("Harness.select: exact-number prefixes, all on empty, loud on no match") {
+    names.exists(_.startsWith("q170_")) shouldBe true
+    val q17 = Harness.select(Seq("q17_")).map(_.name)
+    q17.size shouldBe 1
+    q17.head should startWith("q17_")
+    Harness.select(Seq("q17_,q18_", "q19_")).size shouldBe 3
+    Harness.select(Seq.empty).map(_.name) shouldBe names
+    an[IllegalArgumentException] should be thrownBy Harness.select(Seq("nope_"))
   }
 }
