@@ -3,6 +3,8 @@ package graft.io
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.LayoutOps
+
 /** Snapshot-versioned parquet store — MVCC over a directory tree (the
   * Delta/Iceberg transaction-log core, self-contained on any
   * filesystem Spark can rename on):
@@ -1041,8 +1043,10 @@ object SnapshotStore {
     * up front and WITHOUT touching provably-disjoint data. Segments
     * whose partition values miss the predicate, or whose per-file
     * stats show no file can overlap, carry forward untouched (never
-    * read); only suspect segments rewrite, copy-on-write, grouped by
-    * partition signature so the layout's pruning survives. The commit
+    * read — the shared [[Pruning]] planner picks the suspects, and
+    * this face adds the rewrite); only suspect segments rewrite,
+    * copy-on-write, grouped by partition signature so the layout's
+    * pruning survives. The commit
     * is ONE atomic version holding a tombstone of the deleted ids
     * (which is what makes [[readChanges]] emit the delete PREIMAGES
     * — the rewritten survivor segments are dataChange=false `c`
@@ -1087,59 +1091,27 @@ object SnapshotStore {
       parts: Map[String, Set[String]] = Map.empty,
       statsCols: Seq[String] = Nil,
       cdf: Boolean = false, dv: Boolean = false): Option[DeleteWhere] = {
-    import graft.ops.LayoutOps
     require(ranges.nonEmpty || parts.nonEmpty,
       "commitDeleteWhere needs at least one range or partition predicate")
-    require(parts.forall(_._2.nonEmpty),
-      s"commitDeleteWhere: empty allowed-value set for partition " +
-        s"column(s) ${parts.filter(_._2.isEmpty).keys.mkString(",")}")
     val vs = versions(spark, dir)
     require(vs.nonEmpty,
       s"commitDeleteWhere: no committed version at $dir to delete from")
     val (rawPrev, rows) = readRaw(spark, dir, Some(vs.max))
-    widenGuard(rows, "commitDeleteWhere")
-    // translate every probe/argument name to PHYSICAL once at entry —
-    // file stats, partition paths, segments and the tombstone all
-    // live in storage names
-    val m = colMapOf(rows)
+    val plan = new Pruning(spark, dir, "commitDeleteWhere", (vs.max, rows),
+      ranges, parts)
+    val m = plan.m
     val cur = toLogical(rawPrev, m).schema.fieldNames
     require(cur.contains(idCol),
       s"commitDeleteWhere: id column '$idCol' is not in the store's " +
         s"current schema (${cur.mkString(",")})")
-    val pRanges = ranges.map(r =>
-      r.copy(col = physN(m, r.col, "commitDeleteWhere")))
-    val pParts = parts.map { case (c, vsAllowed) =>
-      (physN(m, c, "commitDeleteWhere"), vsAllowed) }
     val pStats = physAll(m, statsCols, "commitDeleteWhere")
     val pId = physN(m, idCol, "commitDeleteWhere")
-    val segs = rows.collect { case ("seg", p) => p }
+    val segs = plan.segs
     val tombs = rows.collect { case ("tomb", p) => p }
-    val evolved = rows.exists(_._1 == "evo")
-    val probeCols = pRanges.map(_.col) ++ pParts.keys
-    rangeColsGuard(spark, dir, segs, evolved, probeCols,
-      "commitDeleteWhere")
-    val statsOf: Map[String, Seq[String]] = rows.collect {
-      case ("stats", s) => parseStatsRow(s)
-    }.toMap
-    val statRows = segStatRows(spark, dir, statsOf).toMap
-    // a segment is SUSPECT unless its partition values or its file
-    // stats prove no row can match (no sidecar → conservative)
-    val suspects = segs.filter { seg =>
-      partKeep(seg, pParts) && (statRows.get(seg) match {
-        case None => true
-        case Some(ss) =>
-          val usable = pRanges.filter(rg =>
-            ss.have.contains(s"min_${rg.col}") &&
-              ss.have.contains(s"max_${rg.col}"))
-          ss.rows.exists(LayoutOps.keepFile(_, usable))
-      })
-    }
+    val evolved = plan.evolved
+    val suspects = plan.touched
     if (suspects.isEmpty) return None
-    val pred = coalesce(
-      (pRanges.map(rg => bq(rg.col).between(lit(rg.lo), lit(rg.hi))) ++
-        pParts.toSeq.sortBy(_._1).map { case (c, allowed) =>
-          bq(c).cast("string").isin(allowed.toSeq.sorted: _*)
-        }).reduce(_ && _), lit(false))
+    val pred = coalesce(plan.residual, lit(false))
     // matched rows pinned ONCE: the tombstone and the delete count
     // must agree row for row with what the rewrite below removes
     // (both read the same immutable segments, so the rewrite's twin
@@ -1729,6 +1701,24 @@ object SnapshotStore {
     toLogical(df, colMapOf(rows))
   }
 
+  /** Pin one snapshot: the version (the latest by default) and its
+    * manifest rows — loud when nothing is committed, the version is
+    * gone, or its manifest lists no data segment.
+    */
+  private def pin(spark: SparkSession, dir: String,
+      version: Option[Int]): (Int, Seq[(String, String)]) = {
+    val vs = versions(spark, dir)
+    require(vs.nonEmpty, s"no committed snapshot at $dir")
+    val v = version.getOrElse(vs.max)
+    require(vs.contains(v),
+      s"snapshot version $v does not exist at $dir (have " +
+        s"${vs.mkString(",")}) — vacuumed or never committed")
+    val rows = readManifestRows(spark, dir, v)
+    require(rows.exists(_._1 == "seg"),
+      s"manifest v$v at $dir lists no data segments")
+    (v, rows)
+  }
+
   /** [[read]] minus the logical projection: the PHYSICAL frame plus
     * the manifest rows — the internal form every face that writes
     * physical artifacts (tombstones, DVs, CDC preimages) folds
@@ -1738,19 +1728,11 @@ object SnapshotStore {
   private def readRaw(spark: SparkSession, dir: String,
       version: Option[Int] = None)
       : (DataFrame, Seq[(String, String)]) = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v),
-      s"snapshot version $v does not exist at $dir (have " +
-        s"${vs.mkString(",")}) — vacuumed or never committed")
-    val rows = readManifestRows(spark, dir, v)
-    val segs = rows.collect { case ("seg", p) => p }
-    require(segs.nonEmpty, s"manifest v$v at $dir lists no data segments")
+    val (_, rows) = pin(spark, dir, version)
     // mergeSchema footer-merging is a per-file job — only stores that
     // actually evolved pay it (the manifest records the first evolved
     // commit; a compaction unifies the schema and drops the flag)
-    (segsMinusTombs(spark, dir, segs,
+    (segsMinusTombs(spark, dir, rows.collect { case ("seg", p) => p },
       rows.collect { case ("tomb", p) => p },
       evolved = rows.exists(_._1 == "evo"),
       dvs = dvRowsOf(rows), target = schOf(rows)), rows)
@@ -2153,26 +2135,22 @@ object SnapshotStore {
     * tombstones on top (loud otherwise: pruning a multi-segment or
     * tombstoned view would need per-segment sidecars; re-run the
     * z-compaction after new commits, exactly Delta's OPTIMIZE
-    * cadence). Returns the pruned frame plus files read/total.
+    * cadence). Past that precondition it IS [[readPrunedRange]] at
+    * the latest version. Returns the pruned frame plus files
+    * read/total.
     */
   def readPrunedLatest(spark: SparkSession, dir: String,
       ranges: Seq[graft.ops.LayoutOps.ColRange]): graft.ops.LayoutOps.PrunedScan = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
-    val rows = readManifestRows(spark, dir, vs.max)
+    val (v, rows) = pin(spark, dir, None)
     val segs = rows.collect { case ("seg", p) => p }
     val tombs = rows.collect { case ("tomb", p) => p }
     require(tombs.isEmpty && segs.length == 1 &&
       segs.head.endsWith("/data") && !rows.exists(_._1 == "dv"),
-      s"readPrunedLatest: latest version v${vs.max} at $dir is not a " +
+      s"readPrunedLatest: latest version v$v at $dir is not a " +
         s"single z-compacted segment (segs=$segs, tombs=${tombs.length}," +
         s" dvs=${rows.count(_._1 == "dv")}) — run compactZordered first")
     widenGuard(rows, "readPrunedLatest")
-    val m = colMapOf(rows)
-    val scan = graft.ops.LayoutOps.readPruned(spark,
-      s"$dir/${segs.head.stripSuffix("/data")}",
-      ranges.map(r => r.copy(col = physN(m, r.col, "readPrunedLatest"))))
-    scan.copy(df = toLogical(scan.df, m))
+    readPrunedRange(spark, dir, ranges, Some(v))
   }
 
   /** Stats-pruned range scan of ANY committed snapshot — the
@@ -2190,7 +2168,9 @@ object SnapshotStore {
     * pruned. A probe column a segment's SCHEMA omits (evolution) is
     * null on every row there, so the whole segment skips. Returns the
     * pruned frame plus files read/total — the read-amplification
-    * evidence.
+    * evidence. What this face adds to the shared [[Pruning]] planner:
+    * the MVCC tombstone/DV fold over the scanned files and the
+    * schema-stable empty fallback.
     */
   def readPrunedRange(spark: SparkSession, dir: String,
       ranges: Seq[graft.ops.LayoutOps.ColRange],
@@ -2198,93 +2178,12 @@ object SnapshotStore {
       parts: Map[String, Set[String]] = Map.empty,
       eqs: Seq[graft.ops.LayoutOps.ColEq] = Nil)
       : graft.ops.LayoutOps.PrunedScan = {
-    import graft.ops.LayoutOps
     require(ranges.nonEmpty || parts.nonEmpty || eqs.nonEmpty,
       "readPrunedRange needs at least one range, partition or " +
         "equality predicate")
-    require(parts.forall(_._2.nonEmpty),
-      s"readPrunedRange: empty allowed-value set for partition " +
-        s"column(s) ${parts.filter(_._2.isEmpty).keys.mkString(",")}")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v),
-      s"snapshot version $v does not exist at $dir (have " +
-        s"${vs.mkString(",")}) — vacuumed or never committed")
-    val rows = readManifestRows(spark, dir, v)
-    val segs = rows.collect { case ("seg", p) => p }
-    require(segs.nonEmpty, s"manifest v$v at $dir lists no data segments")
-    val tombs = rows.collect { case ("tomb", p) => p }
-    val evolved = rows.exists(_._1 == "evo")
-    widenGuard(rows, "readPrunedRange")
-    // probes arrive LOGICAL; stats, partition paths and footers are
-    // physical — translate once at entry
-    val m = colMapOf(rows)
-    val pRanges = ranges.map(r =>
-      r.copy(col = physN(m, r.col, "readPrunedRange")))
-    val pParts = parts.map { case (c, a) =>
-      (physN(m, c, "readPrunedRange"), a) }
-    val pEqs = eqs.map(e => e.copy(col = physN(m, e.col, "readPrunedRange")))
-    val probeCols = pRanges.map(_.col) ++ pParts.keys ++ pEqs.map(_.col)
-    rangeColsGuard(spark, dir, segs, evolved, probeCols, "readPrunedRange")
-    val eqLits = eqTypedLits(spark, dir, segs, evolved, pEqs,
-      "readPrunedRange")
-
-    // PARTITION pruning first — segments whose path-recorded values
-    // miss the predicate drop before any sidecar or file is touched
-    // (the reason partition columns exist at 100 TB: neither their
-    // sidecars nor their listings cost anything). Unrecorded segments
-    // keep conservatively; the row residual keeps the result exact.
-    val live = segs.filter(partKeep(_, pParts))
-    val statsOf: Map[String, Seq[String]] = rows.collect {
-      case ("stats", s) => parseStatsRow(s)
-    }.toMap.filter { case (seg, _) => live.contains(seg) }
-    // the residual re-applies EVERY predicate kind row-level: ranges
-    // as typed between, partition values as the dir-name string form
-    // (hive renders integral/string partition values canonically),
-    // equality probes as typed equals
-    val residual = (pRanges.map(rg =>
-        bq(rg.col).between(lit(rg.lo), lit(rg.hi))) ++
-      pParts.toSeq.sortBy(_._1).map { case (c, allowed) =>
-        bq(c).cast("string").isin(allowed.toSeq.sorted: _*) } ++
-      pEqs.zip(eqLits).map { case (eq, l) => bq(eq.col) === l })
-      .reduce(_ && _)
-    // an equality probe is also a degenerate range for min/max pruning
-    val rangesAll = pRanges ++
-      pEqs.map(eq => LayoutOps.ColRange(eq.col, eq.value, eq.value))
-
-    // Per-segment file lists, driver-cheap at ANY segment count: the
-    // manifest names each sidecar's columns, so same-shaped sidecars
-    // read as ONE job (usually one total — per-segment jobs were
-    // measured 5× slower than the full scan at 64 segments of bench
-    // data, all scheduling overhead); each stats row maps back to its
-    // segment by the file path. Segments committed without stats fall
-    // back to a full driver listing (no job). Bloom verdicts for the
-    // eq probes already filtered inside segStatRows' read plan.
-    val kept = scala.collection.mutable.Map.empty[String, Seq[String]]
-    var filesTotal = 0
-    segStatRows(spark, dir, statsOf, pEqs.zip(eqLits)).foreach { case (seg, ss) =>
-      val usable = rangesAll.filter(rg =>
-        ss.have.contains(s"min_${rg.col}") &&
-          ss.have.contains(s"max_${rg.col}"))
-      filesTotal += ss.filesTotal
-      val fls = ss.rows.filter(LayoutOps.keepFile(_, usable))
-        .map(r => LayoutOps.decodeStatFile(r.getAs[String]("file")))
-      if (fls.nonEmpty) kept(seg) = fls
-    }
-    live.filterNot(statsOf.contains).foreach { seg =>
-      val all = DriverParquet.dataFiles(spark, Seq(s"$dir/$seg"))
-      filesTotal += all.size
-      if (all.nonEmpty) kept(seg) = all
-    }
-    var filesRead = 0
-
-    // A batch of same-interval segments becomes ONE scan relation on a
-    // non-evolved store (strict schemaGuard pins identical schemas —
-    // no footer merge needed); an evolved store reads per segment so
-    // each relation stays single-schema, and a segment whose schema
-    // omits a probe column contributes nothing (null never sits in an
-    // inclusive range, and never matches a partition-value set).
+    val plan = new Pruning(spark, dir, "readPrunedRange",
+      pin(spark, dir, version), ranges, parts, eqs)
+    val kept = plan.split((_, _) => false)._1.toMap
     // deletion vectors naming a SURVIVING segment (partition AND
     // stats pruning both already applied — `kept` is the final file
     // map) fold as a position anti-join over the pruned union:
@@ -2293,24 +2192,14 @@ object SnapshotStore {
     // at all. The DV side is match-sized and broadcast-gated.
     // seg/-anchored matching, as in segsMinusTombs (clone prefixes).
     val keptAnchors = kept.keysIterator.map(segAnchor).toSet
-    val liveDvs = dvRowsOf(rows).collect {
+    val liveDvs = dvRowsOf(plan.rows).collect {
       case (p, affected)
         if affected.exists(a => keptAnchors(segAnchor(a))) => p
     }
-
-    def batchFrame(batch: Seq[String]): Option[DataFrame] = {
-      def frameOf(files: Seq[String]): Option[DataFrame] = {
-        val raw = DriverParquet.read(spark, files)
-        val f = if (liveDvs.isEmpty) raw else withPosCols(raw)
-        if (probeCols.exists(!f.columns.contains(_))) None
-        else { filesRead += files.size; Some(f.where(residual)) }
-      }
-      val present = batch.sortBy(pathVersion).flatMap(s => kept.get(s).map(s -> _))
-      if (present.isEmpty) None
-      else if (!evolved) frameOf(present.flatMap(_._2))
-      else present.flatMap { case (_, fls) => frameOf(fls) }
+    def batchFrame(batch: Seq[String]): Option[DataFrame] =
+      plan.scan(batch.sortBy(pathVersion).flatMap(s => kept.get(s).map(s -> _)),
+          pos = liveDvs.nonEmpty)(identity)
         .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    }
 
     // the [[segsMinusTombs]] MVCC fold over pruned per-interval
     // batches: tombstones in ascending version order, each anti-joined
@@ -2323,26 +2212,30 @@ object SnapshotStore {
       case (None, Some(x)) => acc = Some(x)
       case _ => ()
     }
-    var rest = live.sortBy(pathVersion)
-    tombs.map(p => (pathVersion(p), p)).sortBy(_._1).foreach {
-      case (tv, tp) =>
+    var rest = plan.live.sortBy(pathVersion)
+    plan.rows.collect { case ("tomb", p) => (pathVersion(p), p) }
+      .sortBy(_._1).foreach { case (tv, tp) =>
         val (older, later) = rest.partition(pathVersion(_) < tv)
         add(batchFrame(older))
         rest = later
         acc = acc.map(antiTomb(spark, dir, _, tp))
-    }
+      }
     add(batchFrame(rest))
     val folded = acc.map(a =>
       if (liveDvs.isEmpty) a
       else antiDv(spark, dir, a, liveDvs).drop("__dv_file", "__dv_ridx"))
-    // everything pruned: a schema-stable empty frame (the false filter
-    // folds to an empty relation — nothing is read). The folded frame
-    // is physical; the empty fallback comes from [[read]] (already
-    // logical) — both exit under the logical view.
-    val df = folded.map(toLogical(_, m))
-      .getOrElse(read(spark, dir, Some(v)).where(lit(false)))
-    LayoutOps.PrunedScan(df, filesRead, filesTotal,
-      segsRead = live.size, segsTotal = segs.size)
+    // everything pruned: the snapshot's own schema-stable empty frame
+    // (the false filter folds to an empty relation — nothing is read).
+    // On an evolved store the pruned union carries only the columns of
+    // the segments it kept, so it aligns onto that frame by name (a
+    // column no kept segment has is null, as in [[read]]). Both exit
+    // under the logical view.
+    lazy val empty = readRaw(spark, dir, Some(plan.v))._1.where(lit(false))
+    val df = toLogical(folded.fold(empty)(a =>
+      if (plan.evolved) empty.unionByName(a, allowMissingColumns = true)
+      else a), plan.m)
+    LayoutOps.PrunedScan(df, plan.filesRead, plan.filesTotal,
+      segsRead = plan.live.size, segsTotal = plan.segs.size)
   }
 
   /** Streaming INSERT feed off the store (the Delta streaming-source
@@ -2877,9 +2770,11 @@ object SnapshotStore {
     * recorded column set — flat driver JOB count at any segment
     * count. The collected ROWS grow with file count (Delta pays the
     * same cost class in its log replay); what keeps the allocation
-    * bounded at 100 TB is that callers PARTITION-PRUNE `statsOf`
-    * before calling (readPrunedRange/countPrunedRange filter to the
-    * partition-surviving segments), so a probe reads only the
+    * bounded at 100 TB is that probing callers PARTITION-PRUNE
+    * `statsOf` before calling ([[Pruning]], the planner behind every
+    * pruned face, filters to the partition-surviving segments;
+    * [[partitions]] and [[history]] read whole manifests or
+    * manifest diffs by design), so a probe reads only the
     * sidecars of commits with at least one surviving leaf — the
     * stats of the partitions it touches, not the table's (sibling-
     * leaf rows inside a touched commit's shared sidecar still ride
@@ -2961,6 +2856,152 @@ object SnapshotStore {
     out.toSeq.map { case (seg, (b, h, n)) => seg -> SegStats(b.toSeq, h, n) }
   }
 
+  /** The one pruning planner behind the store's pruned faces —
+    * [[readPrunedRange]] (and [[readPrunedLatest]] through it),
+    * [[countPrunedRange]], [[minMaxPrunedRange]], [[sumPrunedRange]]
+    * and [[commitDeleteWhere]]'s suspect set. It is the Delta add-file
+    * design (Armbrust et al., VLDB 2020): per-file stats prune, a
+    * row-level residual keeps the answer exact, and each face adds
+    * only its own fold. Construction does the driver-only steps over
+    * one pinned manifest (`pinned`, from [[pin]]): the tombstone/DV
+    * refusal of the metadata-answered faces (`refuse` renders the
+    * message after the `op: v<N> at <dir> carries` prefix), the
+    * widening guard, the logical → physical translation of every
+    * probe name and `target`, the probe-column guard, the typed eq
+    * literals, partition pruning, then the stats rows of the
+    * SURVIVING segments only and the residual. [[split]] runs the one
+    * sidecar walk; [[scan]] reads the files it leaves.
+    */
+  private final class Pruning(spark: SparkSession, dir: String,
+      op: String, pinned: (Int, Seq[(String, String)]),
+      ranges: Seq[LayoutOps.ColRange], parts: Map[String, Set[String]],
+      eqs: Seq[LayoutOps.ColEq] = Nil, target: Option[String] = None,
+      refuse: Option[(Int, Int) => String] = None) {
+    val (v, rows) = pinned
+    require(parts.forall(_._2.nonEmpty),
+      s"$op: empty allowed-value set for partition column(s) " +
+        parts.filter(_._2.isEmpty).keys.mkString(","))
+    refuse.foreach { msg =>
+      val (nTombs, nDvs) = (rows.count(_._1 == "tomb"), rows.count(_._1 == "dv"))
+      require(nTombs == 0 && nDvs == 0,
+        s"$op: v$v at $dir carries ${msg(nTombs, nDvs)}")
+    }
+    val segs: Seq[String] = rows.collect { case ("seg", p) => p }
+    val evolved: Boolean = rows.exists(_._1 == "evo")
+    widenGuard(rows, op)
+    // probes arrive LOGICAL; stats, partition paths and footers are
+    // physical — translate once at entry
+    val m: Option[ColMap] = colMapOf(rows)
+    private val pRanges = ranges.map(r => r.copy(col = physN(m, r.col, op)))
+    private val pParts = parts.map { case (c, a) => (physN(m, c, op), a) }
+    private val pEqs = eqs.map(e => e.copy(col = physN(m, e.col, op)))
+    val pTarget: Option[String] = target.map(physN(m, _, op))
+    private val probeCols =
+      pRanges.map(_.col) ++ pParts.keys ++ pEqs.map(_.col) ++ pTarget
+    rangeColsGuard(spark, dir, segs, evolved, probeCols, op)
+    private val eqLits = eqTypedLits(spark, dir, segs, evolved, pEqs, op)
+    // PARTITION pruning first — segments whose path-recorded values
+    // miss the predicate drop before any sidecar or file is touched
+    // (the reason partition columns exist at 100 TB: neither their
+    // sidecars nor their listings cost anything). Unrecorded segments
+    // keep conservatively; the row residual keeps the result exact.
+    val live: Seq[String] = segs.filter(partKeep(_, pParts))
+    private val liveSet = live.toSet
+    private val statsOf: Map[String, Seq[String]] = rows.collect {
+      case ("stats", s) => parseStatsRow(s)
+    }.toMap.filter { case (seg, _) => liveSet(seg) }
+    // the residual re-applies EVERY predicate kind row-level: ranges
+    // as typed between, partition values as the dir-name string form
+    // (hive renders integral/string partition values canonically),
+    // equality probes as typed equals
+    val residual: Column = (pRanges.map(rg =>
+        bq(rg.col).between(lit(rg.lo), lit(rg.hi))) ++
+      pParts.toSeq.sortBy(_._1).map { case (c, allowed) =>
+        bq(c).cast("string").isin(allowed.toSeq.sorted: _*) } ++
+      pEqs.zip(eqLits).map { case (eq, l) => bq(eq.col) === l })
+      .reduce(_ && _)
+    // an eq probe also prunes as a degenerate min/max range (its bloom
+    // verdicts already filtered inside segStatRows' read plan), but a
+    // bloom never proves containment — might-contain admits false
+    // positives — so an eq-contained file needs min = value = max
+    private val rangesAll = pRanges ++
+      pEqs.map(eq => LayoutOps.ColRange(eq.col, eq.value, eq.value))
+    // Per-segment file lists, driver-cheap at ANY segment count: the
+    // manifest names each sidecar's columns, so same-shaped sidecars
+    // read as ONE job (usually one total — per-segment jobs were
+    // measured 5× slower than the full scan at 64 segments of bench
+    // data, all scheduling overhead). Segments committed without stats
+    // are listed in full on the driver (no job) and read whole.
+    private lazy val walked = segStatRows(spark, dir, statsOf, pEqs.zip(eqLits))
+    private lazy val listed = live.filterNot(statsOf.contains).map(seg =>
+      seg -> DriverParquet.dataFiles(spark, Seq(s"$dir/$seg")))
+    lazy val filesTotal: Int =
+      walked.map(_._2.filesTotal).sum + listed.map(_._2.size).sum
+    private def usable(ss: SegStats): Seq[LayoutOps.ColRange] =
+      rangesAll.filter(rg =>
+        ss.have(s"min_${rg.col}") && ss.have(s"max_${rg.col}"))
+
+    /** The sidecar walk sorts each file of a stats-bearing live
+      * segment into CONTAINED (its segment's partition values exactly
+      * match and its stats put every row inside every range with no
+      * nulls — `answer` takes it from metadata by returning true),
+      * SCAN (its stats overlap) or SKIP; a no-stats segment scans
+      * whole. Returns the files to scan per segment and how many
+      * files `answer` took.
+      */
+    def split(answer: (org.apache.spark.sql.Row, Set[String]) => Boolean)
+        : (Seq[(String, Seq[String])], Int) = {
+      var meta = 0
+      val fromStats = walked.flatMap { case (seg, ss) =>
+        val exact = scopeMatch(seg, pParts)
+        val keep = usable(ss)
+        val files = ss.rows.filter { r =>
+          if (exact && LayoutOps.containedFile(r, rangesAll, ss.have) &&
+              answer(r, ss.have)) { meta += 1; false }
+          else LayoutOps.keepFile(r, keep)
+        }.map(r => LayoutOps.decodeStatFile(r.getAs[String]("file")))
+        if (files.isEmpty) None else Some(seg -> files)
+      }
+      (fromStats ++ listed.filter(_._2.nonEmpty), meta)
+    }
+
+    /** The live segments a probe may touch, listing none: a segment
+      * committed without stats always may (conservative), and on an
+      * evolved store one whose schema omits a probe column never does
+      * (the [[scan]] rule — and a predicate over a column no touched
+      * segment carries would not even resolve).
+      */
+    def touched: Seq[String] = {
+      val hit = walked.collect {
+        case (seg, ss) if ss.rows.exists(LayoutOps.keepFile(_, usable(ss))) => seg
+      }.toSet
+      live.filter(s => (hit(s) || !statsOf.contains(s)) && (!evolved ||
+        probeCols.forall(DriverParquet.schema(spark, Seq(s"$dir/$s"))
+          .fieldNames.contains)))
+    }
+
+    /** Files read by [[scan]] so far. */
+    var filesRead = 0
+
+    /** `f` over `files` under the residual: ONE relation on a
+      * non-evolved store (strict schemaGuard pins identical schemas —
+      * no footer merge needed), one per segment on an evolved store
+      * so each relation stays single-schema. A segment whose schema
+      * omits a probe column contributes nothing (null never sits in
+      * an inclusive range, and never matches a partition-value set).
+      * `pos` attaches the deletion-vector position columns first.
+      */
+    def scan[A](files: Seq[(String, Seq[String])], pos: Boolean = false)(
+        f: DataFrame => A): Seq[A] =
+      (if (evolved) files.map(_._2) else Seq(files.flatMap(_._2)))
+        .filter(_.nonEmpty).flatMap { fls =>
+          val raw = DriverParquet.read(spark, fls)
+          val df = if (pos) withPosCols(raw) else raw
+          if (probeCols.exists(!df.columns.contains(_))) None
+          else { filesRead += fls.size; Some(f(df.where(residual))) }
+        }
+  }
+
   /** A metadata-answered range COUNT: how many rows satisfy the
     * conjunction of ranges, reading ONLY boundary files. Files whose
     * sidecar proves containment (min/max inside the range, zero
@@ -2971,7 +3012,8 @@ object SnapshotStore {
     * tombstone hides ids, which no range metadata can count; compact
     * first, or count `readPrunedRange(...).df`). Returns the count
     * plus the evidence split (files scanned / answered from metadata
-    * / total).
+    * / total). What this face adds to the shared [[Pruning]] planner:
+    * the `n_rows` sum over contained files plus the scanned count.
     */
   final case class CountScan(count: Long, filesScanned: Int,
       filesMetaAnswered: Int, filesTotal: Int,
@@ -2982,108 +3024,25 @@ object SnapshotStore {
       version: Option[Int] = None,
       parts: Map[String, Set[String]] = Map.empty,
       eqs: Seq[graft.ops.LayoutOps.ColEq] = Nil): CountScan = {
-    import graft.ops.LayoutOps
     require(ranges.nonEmpty || parts.nonEmpty || eqs.nonEmpty,
       "countPrunedRange needs at least one range, partition or " +
         "equality predicate")
-    require(parts.forall(_._2.nonEmpty),
-      s"countPrunedRange: empty allowed-value set for partition " +
-        s"column(s) ${parts.filter(_._2.isEmpty).keys.mkString(",")}")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v),
-      s"snapshot version $v does not exist at $dir (have " +
-        s"${vs.mkString(",")}) — vacuumed or never committed")
-    val rows = readManifestRows(spark, dir, v)
-    val segs = rows.collect { case ("seg", p) => p }
-    require(segs.nonEmpty, s"manifest v$v at $dir lists no data segments")
-    val tombs = rows.collect { case ("tomb", p) => p }
-    require(tombs.isEmpty,
-      s"countPrunedRange: v$v at $dir carries ${tombs.length} " +
-        s"tombstone(s) — hidden ids defeat range metadata; compact " +
-        s"first, or count readPrunedRange(...).df")
-    val nDvs = rows.count(_._1 == "dv")
-    require(nDvs == 0,
-      s"countPrunedRange: v$v at $dir carries $nDvs deletion " +
-        s"vector(s) — dv-hidden rows defeat row metadata exactly as " +
-        s"tombstones do; compact first, or count readPrunedRange(...).df")
-    val evolved = rows.exists(_._1 == "evo")
-    widenGuard(rows, "countPrunedRange")
-    val m = colMapOf(rows)
-    val pRanges = ranges.map(r =>
-      r.copy(col = physN(m, r.col, "countPrunedRange")))
-    val pParts = parts.map { case (c, a) =>
-      (physN(m, c, "countPrunedRange"), a) }
-    val pEqs = eqs.map(e =>
-      e.copy(col = physN(m, e.col, "countPrunedRange")))
-    val probeCols = pRanges.map(_.col) ++ pParts.keys ++ pEqs.map(_.col)
-    rangeColsGuard(spark, dir, segs, evolved, probeCols, "countPrunedRange")
-    val eqLits = eqTypedLits(spark, dir, segs, evolved, pEqs,
-      "countPrunedRange")
-    // partition pruning before any sidecar read, as in readPrunedRange
-    val live = segs.filter(partKeep(_, pParts))
-    val statsOf: Map[String, Seq[String]] = rows.collect {
-      case ("stats", s) => parseStatsRow(s)
-    }.toMap.filter { case (seg, _) => live.contains(seg) }
-    val residual = (pRanges.map(rg =>
-        bq(rg.col).between(lit(rg.lo), lit(rg.hi))) ++
-      pParts.toSeq.sortBy(_._1).map { case (c, allowed) =>
-        bq(c).cast("string").isin(allowed.toSeq.sorted: _*) } ++
-      pEqs.zip(eqLits).map { case (eq, l) => bq(eq.col) === l })
-      .reduce(_ && _)
-    // eq probes prune the SCAN set (as degenerate ranges for min/max,
-    // via bloom verdicts in segStatRows) but a bloom can never
-    // metadata-ANSWER — might-contain admits false positives, so eq
-    // containment is provable only by min = value = max with no nulls
-    val rangesAll = pRanges ++
-      pEqs.map(eq => LayoutOps.ColRange(eq.col, eq.value, eq.value))
+    val plan = new Pruning(spark, dir, "countPrunedRange",
+      pin(spark, dir, version), ranges, parts, eqs,
+      refuse = Some((t, d) =>
+        if (t > 0) s"$t tombstone(s) — hidden ids defeat range " +
+          s"metadata; compact first, or count readPrunedRange(...).df"
+        else s"$d deletion vector(s) — dv-hidden rows defeat row " +
+          s"metadata exactly as tombstones do; compact first, or " +
+          s"count readPrunedRange(...).df"))
+    // a contained file answers with its recorded n_rows
     var meta = 0L
-    var metaFiles = 0
-    var filesTotal = 0
-    val scan = scala.collection.mutable.Map.empty[String, Seq[String]]
-    segStatRows(spark, dir, statsOf, pEqs.zip(eqLits)).foreach { case (seg, ss) =>
-      val usable = rangesAll.filter(rg =>
-        ss.have.contains(s"min_${rg.col}") &&
-          ss.have.contains(s"max_${rg.col}"))
-      // a file is metadata-answerable only when the partition
-      // predicate is EXACTLY satisfied by its segment's recorded
-      // values (every row of a partition leaf carries that value);
-      // a conservatively-kept segment must scan
-      val partVals = segPartValues(seg)
-      val partExact = pParts.forall { case (c, allowed) =>
-        partVals.get(c).exists(allowed.contains)
-      }
-      filesTotal += ss.filesTotal
-      val toScan = scala.collection.mutable.Buffer.empty[String]
-      ss.rows.foreach { r =>
-        if (partExact && ss.have.contains("n_rows") &&
-            LayoutOps.containedFile(r, rangesAll, ss.have)) {
-          meta += r.getAs[Long]("n_rows"); metaFiles += 1
-        } else if (LayoutOps.keepFile(r, usable))
-          toScan += LayoutOps.decodeStatFile(r.getAs[String]("file"))
-      }
-      if (toScan.nonEmpty) scan(seg) = toScan.toSeq
+    val (scan, metaFiles) = plan.split { (r, have) =>
+      have("n_rows") && { meta += r.getAs[Long]("n_rows"); true }
     }
-    live.filterNot(statsOf.contains).foreach { seg =>
-      val all = DriverParquet.dataFiles(spark, Seq(s"$dir/$seg"))
-      filesTotal += all.size
-      if (all.nonEmpty) scan(seg) = all
-    }
-    def countOf(files: Seq[String]): Long = {
-      val f = DriverParquet.read(spark, files)
-      // evolution can omit a probe column: null never sits in a range
-      // and never matches a partition-value set
-      if (probeCols.exists(!f.columns.contains(_))) 0L
-      else f.where(residual).count()
-    }
-    val scannedFiles = scan.values.map(_.size).sum
-    val scanned =
-      if (scan.isEmpty) 0L
-      else if (!evolved) countOf(scan.values.flatten.toSeq)
-      else scan.values.map(countOf).sum // per segment: single-schema reads
-    CountScan(meta + scanned, scannedFiles, metaFiles, filesTotal,
-      segsRead = live.size, segsTotal = segs.size)
+    CountScan(meta + plan.scan(scan)(_.count()).sum,
+      scan.map(_._2.size).sum, metaFiles, plan.filesTotal,
+      segsRead = plan.live.size, segsTotal = plan.segs.size)
   }
 
   /** [[minMaxPrunedRange]]'s evidence: the extremes (null when no row
@@ -3111,114 +3070,46 @@ object SnapshotStore {
     * extreme); a contained file with no recorded target stats
     * downgrades to a scan (conservative, never wrong). Null-only
     * target files contribute nothing, exactly as SQL MIN/MAX skips
-    * nulls.
+    * nulls. What this face adds to the shared [[Pruning]] planner:
+    * the `cmpStat` extreme fold over recorded and scanned extremes.
     */
   def minMaxPrunedRange(spark: SparkSession, dir: String,
       target: String, ranges: Seq[graft.ops.LayoutOps.ColRange],
       version: Option[Int] = None,
       parts: Map[String, Set[String]] = Map.empty): MinMaxScan = {
-    import graft.ops.LayoutOps
     require(ranges.nonEmpty || parts.nonEmpty,
       "minMaxPrunedRange needs at least one range or partition predicate")
-    require(parts.forall(_._2.nonEmpty),
-      s"minMaxPrunedRange: empty allowed-value set for partition " +
-        s"column(s) ${parts.filter(_._2.isEmpty).keys.mkString(",")}")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v),
-      s"snapshot version $v does not exist at $dir (have " +
-        s"${vs.mkString(",")}) — vacuumed or never committed")
-    val rows = readManifestRows(spark, dir, v)
-    val segs = rows.collect { case ("seg", p) => p }
-    require(segs.nonEmpty, s"manifest v$v at $dir lists no data segments")
-    val tombs = rows.count(_._1 == "tomb")
-    require(tombs == 0,
-      s"minMaxPrunedRange: v$v at $dir carries $tombs tombstone(s) — " +
-        s"a hidden row could be the extreme; compact first, or " +
-        s"aggregate readPrunedRange(...).df")
-    val nDvs = rows.count(_._1 == "dv")
-    require(nDvs == 0,
-      s"minMaxPrunedRange: v$v at $dir carries $nDvs deletion " +
-        s"vector(s) — a dv-hidden row could be the extreme; compact " +
-        s"first, or aggregate readPrunedRange(...).df")
-    val evolved = rows.exists(_._1 == "evo")
-    widenGuard(rows, "minMaxPrunedRange")
-    val m = colMapOf(rows)
-    val pRanges = ranges.map(r =>
-      r.copy(col = physN(m, r.col, "minMaxPrunedRange")))
-    val pParts = parts.map { case (c, a) =>
-      (physN(m, c, "minMaxPrunedRange"), a) }
-    val pTarget = physN(m, target, "minMaxPrunedRange")
-    val probeCols = pRanges.map(_.col) ++ pParts.keys :+ pTarget
-    rangeColsGuard(spark, dir, segs, evolved, probeCols,
-      "minMaxPrunedRange")
-    val live = segs.filter(partKeep(_, pParts))
-    val statsOf: Map[String, Seq[String]] = rows.collect {
-      case ("stats", s) => parseStatsRow(s)
-    }.toMap.filter { case (seg, _) => live.contains(seg) }
-    val residual = (pRanges.map(rg =>
-        bq(rg.col).between(lit(rg.lo), lit(rg.hi))) ++
-      pParts.toSeq.sortBy(_._1).map { case (c, allowed) =>
-        bq(c).cast("string").isin(allowed.toSeq.sorted: _*) })
-      .reduce(_ && _)
+    val plan = new Pruning(spark, dir, "minMaxPrunedRange",
+      pin(spark, dir, version), ranges, parts, target = Some(target),
+      refuse = Some((t, d) =>
+        (if (t > 0) s"$t tombstone(s) — a hidden row"
+         else s"$d deletion vector(s) — a dv-hidden row") +
+          " could be the extreme; compact first, or aggregate " +
+          "readPrunedRange(...).df"))
+    val pTarget = plan.pTarget.get
+    // a contained file answers with its recorded extremes; a null min
+    // means the file's target is all-null — SQL MIN/MAX skips it, so
+    // the file contributes nothing
     val cand = scala.collection.mutable.Buffer.empty[(Any, Any)]
-    var metaFiles = 0
-    var filesTotal = 0
-    val scan = scala.collection.mutable.Map.empty[String, Seq[String]]
-    segStatRows(spark, dir, statsOf).foreach { case (seg, ss) =>
-      val usable = pRanges.filter(rg =>
-        ss.have.contains(s"min_${rg.col}") &&
-          ss.have.contains(s"max_${rg.col}"))
-      val partVals = segPartValues(seg)
-      val partExact = pParts.forall { case (c, allowed) =>
-        partVals.get(c).exists(allowed.contains)
-      }
-      val hasTarget = ss.have.contains(s"min_$pTarget") &&
-        ss.have.contains(s"max_$pTarget")
-      filesTotal += ss.filesTotal
-      val toScan = scala.collection.mutable.Buffer.empty[String]
-      ss.rows.foreach { r =>
-        if (partExact && hasTarget &&
-            LayoutOps.containedFile(r, pRanges, ss.have)) {
-          metaFiles += 1
-          // a null min means the file's target is all-null — SQL
-          // MIN/MAX skips it, so the file contributes nothing
-          if (!r.isNullAt(r.fieldIndex(s"min_$pTarget")))
-            cand += ((r.getAs[Any](s"min_$pTarget"),
-              r.getAs[Any](s"max_$pTarget")))
-        } else if (LayoutOps.keepFile(r, usable))
-          toScan += LayoutOps.decodeStatFile(r.getAs[String]("file"))
-      }
-      if (toScan.nonEmpty) scan(seg) = toScan.toSeq
-    }
-    live.filterNot(statsOf.contains).foreach { seg =>
-      val all = DriverParquet.dataFiles(spark, Seq(s"$dir/$seg"))
-      filesTotal += all.size
-      if (all.nonEmpty) scan(seg) = all
-    }
-    def extremesOf(files: Seq[String]): Option[(Any, Any)] = {
-      val f = DriverParquet.read(spark, files)
-      if (probeCols.exists(!f.columns.contains(_))) None
-      else {
-        val r = f.where(residual)
-          .agg(min(bq(pTarget)), max(bq(pTarget))).head()
-        if (r.isNullAt(0)) None else Some((r.get(0), r.get(1)))
+    val (scan, metaFiles) = plan.split { (r, have) =>
+      have(s"min_$pTarget") && have(s"max_$pTarget") && {
+        if (!r.isNullAt(r.fieldIndex(s"min_$pTarget")))
+          cand += ((r.getAs[Any](s"min_$pTarget"),
+            r.getAs[Any](s"max_$pTarget")))
+        true
       }
     }
-    val scannedFiles = scan.values.map(_.size).sum
-    if (scan.nonEmpty) {
-      if (!evolved) cand ++= extremesOf(scan.values.flatten.toSeq)
-      else scan.values.foreach(fls => cand ++= extremesOf(fls))
-    }
+    plan.scan(scan)(_.agg(min(bq(pTarget)), max(bq(pTarget))).head())
+      .foreach(r => if (!r.isNullAt(0)) cand += ((r.get(0), r.get(1))))
     val (mn, mx) =
       if (cand.isEmpty) (null, null)
       else (cand.map(_._1).reduce((a, b) =>
           if (LayoutOps.cmpStat(a, b, target) <= 0) a else b),
         cand.map(_._2).reduce((a, b) =>
           if (LayoutOps.cmpStat(a, b, target) >= 0) a else b))
-    MinMaxScan(mn, mx, scannedFiles, metaFiles, filesTotal,
-      segsRead = live.size, segsTotal = segs.size)
+    MinMaxScan(mn, mx, scan.map(_._2.size).sum, metaFiles,
+      plan.filesTotal, segsRead = plan.live.size,
+      segsTotal = plan.segs.size)
   }
 
   /** [[sumPrunedRange]]'s evidence: the exact sum (null when every
@@ -3244,40 +3135,21 @@ object SnapshotStore {
     * which is the one wrong thing a metadata face can do (aggregate
     * `readPrunedRange(...).df` for those). Tombstones/DVs refuse; a
     * contained file without a recorded sum downgrades to a scan.
+    * What this face adds to the shared [[Pruning]] planner: the
+    * integral-type check and the DECIMAL(38,0) sum/count fold.
     */
   def sumPrunedRange(spark: SparkSession, dir: String,
       target: String, ranges: Seq[graft.ops.LayoutOps.ColRange],
       version: Option[Int] = None,
       parts: Map[String, Set[String]] = Map.empty): SumScan = {
-    import graft.ops.LayoutOps
     require(ranges.nonEmpty || parts.nonEmpty,
       "sumPrunedRange needs at least one range or partition predicate")
-    require(parts.forall(_._2.nonEmpty),
-      s"sumPrunedRange: empty allowed-value set for partition " +
-        s"column(s) ${parts.filter(_._2.isEmpty).keys.mkString(",")}")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v),
-      s"snapshot version $v does not exist at $dir (have " +
-        s"${vs.mkString(",")}) — vacuumed or never committed")
-    val rows = readManifestRows(spark, dir, v)
-    val segs = rows.collect { case ("seg", p) => p }
-    require(segs.nonEmpty, s"manifest v$v at $dir lists no data segments")
-    require(rows.count(_._1 == "tomb") == 0 && rows.count(_._1 == "dv") == 0,
-      s"sumPrunedRange: v$v at $dir carries tombstones/deletion " +
-        s"vectors — hidden rows defeat row metadata; compact first, " +
-        s"or aggregate readPrunedRange(...).df")
-    val evolved = rows.exists(_._1 == "evo")
-    widenGuard(rows, "sumPrunedRange")
-    val m = colMapOf(rows)
-    val pRanges = ranges.map(r =>
-      r.copy(col = physN(m, r.col, "sumPrunedRange")))
-    val pParts = parts.map { case (c, a) =>
-      (physN(m, c, "sumPrunedRange"), a) }
-    val pTarget = physN(m, target, "sumPrunedRange")
-    val probeCols = pRanges.map(_.col) ++ pParts.keys :+ pTarget
-    rangeColsGuard(spark, dir, segs, evolved, probeCols, "sumPrunedRange")
+    val plan = new Pruning(spark, dir, "sumPrunedRange",
+      pin(spark, dir, version), ranges, parts, target = Some(target),
+      refuse = Some((_, _) => "tombstones/deletion vectors — hidden " +
+        "rows defeat row metadata; compact first, or aggregate " +
+        "readPrunedRange(...).df"))
+    val pTarget = plan.pTarget.get
     // the integral-only contract, checked against the store's own
     // type. On an EVOLVED store the column may be absent from older
     // segments — probe footers until one carries it (the eqTypedLits
@@ -3286,7 +3158,7 @@ object SnapshotStore {
     // column NO segment carries is a typo, refused loudly.
     locally {
       import org.apache.spark.sql.types._
-      val footers = if (evolved) segs else segs.take(1)
+      val footers = if (plan.evolved) plan.segs else plan.segs.take(1)
       val dt = footers.iterator
         .flatMap(seg => DriverParquet.schema(spark, Seq(s"$dir/$seg"))
           .find(_.name == pTarget).map(_.dataType))
@@ -3302,82 +3174,35 @@ object SnapshotStore {
             s"$dir — an absent column can only be a typo")
       }
     }
-    val live = segs.filter(partKeep(_, pParts))
-    val statsOf: Map[String, Seq[String]] = rows.collect {
-      case ("stats", s) => parseStatsRow(s)
-    }.toMap.filter { case (seg, _) => live.contains(seg) }
-    val residual = (pRanges.map(rg =>
-        bq(rg.col).between(lit(rg.lo), lit(rg.hi))) ++
-      pParts.toSeq.sortBy(_._1).map { case (c, allowed) =>
-        bq(c).cast("string").isin(allowed.toSeq.sorted: _*) })
-      .reduce(_ && _)
     var acc: java.math.BigDecimal = null
     var cnt = 0L
-    def accAdd(x: java.math.BigDecimal): Unit =
-      if (x != null) acc = if (acc == null) x else acc.add(x)
-    var metaFiles = 0
-    var filesTotal = 0
-    val scan = scala.collection.mutable.Map.empty[String, Seq[String]]
-    segStatRows(spark, dir, statsOf).foreach { case (seg, ss) =>
-      val usable = pRanges.filter(rg =>
-        ss.have.contains(s"min_${rg.col}") &&
-          ss.have.contains(s"max_${rg.col}"))
-      val partVals = segPartValues(seg)
-      val partExact = pParts.forall { case (c, allowed) =>
-        partVals.get(c).exists(allowed.contains)
-      }
-      val hasSum = ss.have.contains(s"sum_$pTarget") &&
-        ss.have.contains(s"nulls_$pTarget") && ss.have.contains("n_rows")
-      filesTotal += ss.filesTotal
-      val toScan = scala.collection.mutable.Buffer.empty[String]
-      ss.rows.foreach { r =>
-        if (partExact && hasSum &&
-            LayoutOps.containedFile(r, pRanges, ss.have)) {
+    def add(x: java.math.BigDecimal, n: Long): Unit = {
+      acc = if (acc == null) x else acc.add(x)
+      cnt += n
+    }
+    // a contained file answers with its recorded sum and non-null
+    // count. A null recorded sum with ZERO non-null rows = the file's
+    // target is all-null: SQL SUM skips it and the count contribution
+    // is zero. A null sum over non-null rows is an INCONSISTENT
+    // sidecar row (e.g. a pre-sum sidecar read in a mixed statsCols
+    // group) — contributing nothing would silently undercount, so
+    // that file falls back to a scan.
+    val (scan, metaFiles) = plan.split { (r, have) =>
+      have(s"sum_$pTarget") && have(s"nulls_$pTarget") &&
+        have("n_rows") && {
           val i = r.fieldIndex(s"sum_$pTarget")
           val nonNull = r.getAs[Long]("n_rows") -
             r.getAs[Long](s"nulls_$pTarget")
-          // a null recorded sum with ZERO non-null rows = the file's
-          // target is all-null: SQL SUM skips it and the count
-          // contribution is zero. A null sum over non-null rows is an
-          // INCONSISTENT sidecar row (e.g. a pre-sum sidecar read in
-          // a mixed statsCols group) — contributing nothing would
-          // silently undercount, so that file falls back to a scan.
-          if (!r.isNullAt(i)) {
-            metaFiles += 1
-            accAdd(r.getDecimal(i))
-            cnt += nonNull
-          } else if (nonNull == 0L) metaFiles += 1
-          else toScan += LayoutOps.decodeStatFile(r.getAs[String]("file"))
-        } else if (LayoutOps.keepFile(r, usable))
-          toScan += LayoutOps.decodeStatFile(r.getAs[String]("file"))
-      }
-      if (toScan.nonEmpty) scan(seg) = toScan.toSeq
-    }
-    live.filterNot(statsOf.contains).foreach { seg =>
-      val all = DriverParquet.dataFiles(spark, Seq(s"$dir/$seg"))
-      filesTotal += all.size
-      if (all.nonEmpty) scan(seg) = all
-    }
-    def sumOf(files: Seq[String]): Unit = {
-      val f = DriverParquet.read(spark, files)
-      if (!probeCols.exists(!f.columns.contains(_))) {
-        val r = f.where(residual).agg(
-          sum(bq(pTarget).cast(
-            org.apache.spark.sql.types.DecimalType(38, 0))),
-          count(bq(pTarget))).head()
-        if (!r.isNullAt(0)) {
-          accAdd(r.getDecimal(0))
-          cnt += r.getLong(1)
+          if (!r.isNullAt(i)) add(r.getDecimal(i), nonNull)
+          !r.isNullAt(i) || nonNull == 0L
         }
-      }
     }
-    val scannedFiles = scan.values.map(_.size).sum
-    if (scan.nonEmpty) {
-      if (!evolved) sumOf(scan.values.flatten.toSeq)
-      else scan.values.foreach(sumOf)
-    }
-    SumScan(acc, cnt, scannedFiles, metaFiles, filesTotal,
-      segsRead = live.size, segsTotal = segs.size)
+    plan.scan(scan)(_.agg(
+        sum(bq(pTarget).cast(org.apache.spark.sql.types.DecimalType(38, 0))),
+        count(bq(pTarget))).head())
+      .foreach(r => if (!r.isNullAt(0)) add(r.getDecimal(0), r.getLong(1)))
+    SumScan(acc, cnt, scan.map(_._2.size).sum, metaFiles, plan.filesTotal,
+      segsRead = plan.live.size, segsTotal = plan.segs.size)
   }
 
   /** SHOW PARTITIONS with row counts, answered from METADATA alone

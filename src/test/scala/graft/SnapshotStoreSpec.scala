@@ -2575,4 +2575,180 @@ class SnapshotStoreSpec extends SparkSpecBase {
       insertNotMatched = false).get
     (res2.updated, res2.deleted, res2.inserted) shouldBe ((2L, 2L, 0L))
   }
+
+  test("commitDeleteWhere reads only the sidecars of commits its partition predicate keeps") {
+    val dir = freshDir("delpartside")
+    val pop = langPop(60)
+    SnapshotStore.commitAppend(pop.filter(col("lang") === "en"), dir,
+      statsCols = Seq("doc_id"), partitionBy = Seq("lang")) // v1: en only
+    SnapshotStore.commitAppend(pop.filter(col("lang") =!= "en"), dir,
+      statsCols = Seq("doc_id"), partitionBy = Seq("lang")) // v2: fr, de
+    // the en-only commit's sidecar goes missing: a delete scoped to fr
+    // never touches that commit, so it must never need its sidecar
+    val enRoot = new java.io.File(s"$dir/seg").listFiles().filter(r =>
+      new java.io.File(r, "__p_lang=en").isDirectory).toSeq
+    enRoot.size shouldBe 1
+    val sidecar = new java.io.File(enRoot.head, "_stats")
+    sidecar.isDirectory shouldBe true
+    org.apache.commons.io.FileUtils.deleteDirectory(sidecar)
+    val res = SnapshotStore.commitDeleteWhere(spark, dir, Nil, "doc_id",
+      parts = Map("lang" -> Set("fr"))).get
+    res.rowsDeleted shouldBe 20L
+    SnapshotStore.read(spark, dir).select("doc_id").as[Long].collect()
+      .sorted.toSeq shouldBe (1L to 60L).filter(_ % 3 != 1)
+  }
+
+  test("evolved store: a pruned read keeps every snapshot column; a delete on an added column never touches segments that lack it") {
+    import graft.ops.LayoutOps.ColRange
+    val dir = freshDir("evoprune")
+    SnapshotStore.commitAppend((1L to 20L).map(i => (i, i % 3)).toDF("doc_id", "n"),
+      dir, statsCols = Seq("doc_id"))
+    SnapshotStore.commitAppend(
+      (21L to 30L).map(i => (i, i % 3, i * 10)).toDF("doc_id", "n", "x"), dir,
+      mergeSchema = true, statsCols = Seq("doc_id", "x"))
+    // the probe keeps only the first segment, which predates x
+    val scan = SnapshotStore.readPrunedRange(spark, dir,
+      Seq(ColRange("doc_id", 1L, 5L)))
+    scan.df.columns.toSeq shouldBe SnapshotStore.read(spark, dir).columns.toSeq
+    scan.df.where(col("x").isNull).count() shouldBe 5L
+    // x's stats prune the segment that carries it; the other one has no
+    // x at all, so no row can match and nothing is touched
+    SnapshotStore.commitDeleteWhere(spark, dir,
+      Seq(ColRange("x", 1000L, 2000L)), "doc_id") shouldBe None
+    SnapshotStore.commitDeleteWhere(spark, dir,
+      Seq(ColRange("x", 250L, 260L)), "doc_id").get.rowsDeleted shouldBe 2L
+    SnapshotStore.read(spark, dir).count() shouldBe 28L
+  }
+
+  test("pruned faces agree with read().where(residual) on every drawn probe: one store with stats, no-stats, partitioned, evolved and bloom segments") {
+    import graft.ops.LayoutOps.{ColEq, ColRange}
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.rng.Seed
+    val dir = freshDir("crossface")
+    def pop(ids: Seq[Long]) = ids.map(i =>
+        (i, i % 17, i % 50, Seq("en", "fr", "de")((i % 3).toInt)))
+      .toDF("doc_id", "n", "k", "lang")
+    // v1 stats + bloom, v2 no stats, v3 partitioned, v4 evolved (adds x)
+    SnapshotStore.commitAppend(
+      pop(1L to 200L).repartitionByRange(3, col("doc_id")), dir,
+      statsCols = Seq("doc_id", "n"), bloomCols = Seq("k"),
+      bloomExpectedItems = 200L)
+    SnapshotStore.commitAppend(pop(201L to 300L).repartition(2), dir)
+    SnapshotStore.commitAppend(pop(301L to 450L).filter(col("lang") =!= "de"),
+      dir, statsCols = Seq("doc_id", "n"), partitionBy = Seq("lang"))
+    SnapshotStore.commitAppend(
+      pop(451L to 550L).withColumn("x", col("doc_id") * 3)
+        .repartitionByRange(2, col("doc_id")), dir,
+      mergeSchema = true, statsCols = Seq("doc_id", "n", "x"))
+    val cols = Seq("doc_id", "n", "k", "lang", "x")
+    // the store-relative tail of a file path: Spark's URI renderings
+    // and the planner's decoded paths agree on it
+    def rel(f: String): String = f.substring(f.lastIndexOf("/seg/") + 1)
+    val allFiles = SnapshotStore.read(spark, dir).inputFiles.map(rel).toSet
+
+    def range(c: String, lo: Long, hi: Long): Gen[ColRange] =
+      Gen.zip(Gen.chooseNum(lo, hi), Gen.chooseNum(lo, hi))
+        .map { case (a, b) => ColRange(c, math.min(a, b), math.max(a, b)) }
+    // mostly narrow doc_id bands: the segments are doc_id-banded, so a
+    // band prunes most of them and keeps each probe's scans few
+    val band = for {
+      lo <- Gen.chooseNum(-20L, 600L)
+      w <- Gen.chooseNum(0L, 120L)
+    } yield ColRange("doc_id", lo, lo + w)
+    val probes = for {
+      d <- Gen.frequency(3 -> band.map(Some(_)), 1 -> Gen.const(None),
+        1 -> range("doc_id", -20L, 620L).map(Some(_)))
+      n <- Gen.option(range("n", -1L, 17L))
+      x <- Gen.frequency(4 -> Gen.const(None),
+        1 -> range("x", 1300L, 1700L).map(Some(_)))
+      langs <- Gen.frequency(3 -> Gen.const(Set.empty[String]),
+        1 -> Gen.nonEmptyContainerOf[Set, String](Gen.oneOf("en", "fr", "de")))
+      eqs <- Gen.frequency(3 -> Gen.const(Seq.empty[ColEq]),
+        1 -> Gen.chooseNum(0L, 60L).map(v => Seq(ColEq("k", v))))
+    } yield {
+      val rs = (d ++ n ++ x).toSeq
+      (if (rs.isEmpty && langs.isEmpty) Seq(ColRange("doc_id", 1L, 550L))
+       else rs, if (langs.isEmpty) Map.empty[String, Set[String]]
+       else Map("lang" -> langs), eqs)
+    }
+    var drawn = 0
+    val prop = Prop.forAllNoShrink(probes) { case (ranges, parts, eqs) =>
+      drawn += 1
+      val rp = (ranges.map(r => col(r.col).between(r.lo, r.hi)) ++
+        parts.map { case (c, a) => col(c).cast("string").isin(a.toSeq: _*) })
+      val full = (rp ++ eqs.map(e => col(e.col) === e.value)).reduce(_ && _)
+      def expect(pred: org.apache.spark.sql.Column) = SnapshotStore
+        .read(spark, dir).where(pred)
+        .select((cols.map(col) :+ input_file_name()): _*).collect().toSeq
+      val exp = expect(full)
+      val expRp = if (eqs.isEmpty) exp else expect(rp.reduce(_ && _))
+      def ids(rs: Seq[org.apache.spark.sql.Row]) = rs.map(_.getLong(0))
+      // the row face: the same multiset, and no matching row sits in a
+      // file the planner skipped
+      val scan = SnapshotStore.readPrunedRange(spark, dir, ranges,
+        parts = parts, eqs = eqs)
+      sortedRows(scan.df.select(cols.map(col): _*)) shouldBe
+        exp.map(_.toSeq.init).sortBy(_.mkString("|"))
+      val read = if (scan.filesRead == 0) Set.empty[String]
+        else scan.df.inputFiles.map(rel).toSet
+      read.size shouldBe scan.filesRead
+      exp.map(r => rel(r.getString(5))).toSet.subsetOf(read) shouldBe true
+      val live = allFiles.filter(f => parts.get("lang").forall(a =>
+        !f.contains("/__p_lang=") || a.exists(l => f.contains(s"/__p_lang=$l/"))))
+      val skipped = (live -- read).size
+      scan.filesRead + skipped shouldBe scan.filesTotal
+      // the metadata faces: count, extremes and sum of the same frame
+      val cs = SnapshotStore.countPrunedRange(spark, dir, ranges,
+        parts = parts, eqs = eqs)
+      cs.count shouldBe exp.size.toLong
+      cs.filesTotal shouldBe scan.filesTotal
+      (cs.filesScanned + cs.filesMetaAnswered) should be <= cs.filesTotal
+      val mm = SnapshotStore.minMaxPrunedRange(spark, dir, "doc_id", ranges,
+        parts = parts)
+      (mm.min, mm.max) shouldBe (if (expRp.isEmpty) (null, null)
+        else (ids(expRp).min, ids(expRp).max))
+      val ss = SnapshotStore.sumPrunedRange(spark, dir, "doc_id", ranges,
+        parts = parts)
+      (Option(ss.sum).map(_.longValueExact), ss.count) shouldBe
+        ((if (expRp.isEmpty) None else Some(ids(expRp).sum), expRp.size.toLong))
+      // the write face: the same rows deleted, on a clone
+      val cl = freshDir("crossface_clone")
+      SnapshotStore.clone(spark, dir, cl)
+      SnapshotStore.commitDeleteWhere(spark, cl, ranges, "doc_id",
+          parts = parts, dv = drawn % 2 == 0)
+        .map(_.rowsDeleted).getOrElse(0L) shouldBe expRp.size.toLong
+      true
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(40)
+      .withInitialSeed(Seed(20261019L)).withWorkers(1), prop)
+    withClue(res.status) { res.passed shouldBe true }
+    drawn should be >= 40
+  }
+
+  test("pruned faces keep their job budget: one sidecar collect per stats column set plus the scan") {
+    import graft.ops.LayoutOps.ColRange
+    val dir = freshDir("jobbudget")
+    (0 until 3).foreach { b =>
+      SnapshotStore.commitAppend(
+        docs(b * 100 + 1 to b * 100 + 100).repartitionByRange(2, col("doc_id")),
+        dir, statsCols = Seq("doc_id"))
+    }
+    // contained files, boundary files and disjoint files all present
+    val probe = Seq(ColRange("doc_id", 30L, 170L))
+    def jobs(f: => Any): Int = { val b = lastJob; f; lastJob - b }
+    val budget = Seq(
+      "readPrunedRange" -> jobs(SnapshotStore.readPrunedRange(spark, dir, probe)),
+      "readPrunedRange.count" -> jobs(
+        SnapshotStore.readPrunedRange(spark, dir, probe).df.count()),
+      "countPrunedRange" -> jobs(SnapshotStore.countPrunedRange(spark, dir, probe)),
+      "minMaxPrunedRange" -> jobs(
+        SnapshotStore.minMaxPrunedRange(spark, dir, "doc_id", probe)),
+      "sumPrunedRange" -> jobs(
+        SnapshotStore.sumPrunedRange(spark, dir, "doc_id", probe)),
+      "commitDeleteWhere" -> jobs(
+        SnapshotStore.commitDeleteWhere(spark, dir, probe, "doc_id")))
+    budget shouldBe Seq("readPrunedRange" -> 1, "readPrunedRange.count" -> 3,
+      "countPrunedRange" -> 3, "minMaxPrunedRange" -> 3,
+      "sumPrunedRange" -> 3, "commitDeleteWhere" -> 7)
+  }
 }
