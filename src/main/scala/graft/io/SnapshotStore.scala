@@ -60,13 +60,14 @@ object SnapshotStore {
 
   /** Bounded retry for the optimistic-concurrency writer model:
     * re-runs `attempt` (which must RE-DERIVE its commit from the
-    * store's current state — every public commit face does, listing
-    * versions fresh per call) until it commits or `maxAttempts` races
-    * are lost, then rethrows the last conflict. Only conflicts retry;
-    * any other failure propagates immediately — a schema mismatch
-    * will not pass on attempt two. Orphan segments from lost attempts
-    * are invisible to readers (manifest-pinned listings) and
-    * collected by [[vacuum]]'s version-gated sweep.
+    * store's current state — every public commit face does, opening
+    * the latest snapshot fresh per call through [[open]]) until it
+    * commits or `maxAttempts` races are lost, then rethrows the last
+    * conflict. Only conflicts retry; any other failure propagates
+    * immediately — a schema mismatch will not pass on attempt two.
+    * Orphan segments from lost attempts are invisible to readers
+    * (manifest-pinned listings) and collected by [[vacuum]]'s
+    * version-gated sweep.
     */
   def withCommitRetry(maxAttempts: Int = 5)(attempt: () => Int): Int = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
@@ -230,9 +231,18 @@ object SnapshotStore {
     * stamped HERE — any carried `op` row from the previous version is
     * stripped first, so no commit face can accidentally inherit its
     * predecessor's label.
+    *
+    * `cdc` names a cdf-writing commit's change files: a LOST RACE
+    * deletes them before rethrowing — unlike orphan seg/tomb dirs
+    * (invisible to manifest-pinned readers), cdc files are
+    * glob-visible to [[streamChanges]], so a conflict loser's
+    * preimages would surface as phantom deletes. A hard CRASH between
+    * the cdc write and the rename can still orphan them — the same
+    * crashed-commit caveat [[streamInserts]] documents for segments.
     */
   private[graft] def commitManifest(spark: SparkSession, dir: String, v: Int,
-      rowsIn: Seq[(String, String)], op: String = "unknown"): Unit = {
+      rowsIn: Seq[(String, String)], op: String = "unknown",
+      cdc: Option[String] = None): Unit = {
     val rows = rowsIn.filterNot(_._1 == "op") :+ (("op", op))
     val fs = hfs(spark, dir)
     val tmp = s"$dir/manifest/.tmp_v$v" +
@@ -244,6 +254,7 @@ object SnapshotStore {
     val dst = new org.apache.hadoop.fs.Path(manifestDir(dir, v))
     def conflict(cleanup: org.apache.hadoop.fs.Path): Nothing = {
       fs.delete(cleanup, true)
+      cdc.foreach(p => fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$p"), true))
       throw new CommitConflictException(
         s"snapshot commit conflict: version $v was committed concurrently " +
           s"at $dir — re-read and retry on top of the new latest")
@@ -284,56 +295,11 @@ object SnapshotStore {
       partitionBy: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       bloomExpectedItems: Long = 100000L): Int = {
-    val spark = df.sparkSession
-    val prev = versions(spark, dir)
-    val v = if (prev.isEmpty) 1 else prev.max + 1
-    // ONE readRaw serves the schema guard, the widening fold and the
-    // carried rows — an evolved store's footer-merge is a real driver
-    // cost per plan construction, paid once here
-    val rawPrev = if (prev.isEmpty) None
-      else Some(readRaw(spark, dir, Some(prev.max)))
-    val carried0 = rawPrev.map(_._2).getOrElse(Seq.empty)
-    val m0 = colMapOf(carried0)
-    rawPrev.foreach { case (raw, _) =>
-      schemaGuard(df, toLogical(raw, m0).schema, mergeSchema,
-        "commitAppend") }
-    statsGuard(df, statsCols ++ bloomCols, "commitAppend")
-    // column mapping: the incoming frame is LOGICAL — rename to
-    // physical storage names (extending the map first when
-    // mergeSchema introduces new columns) and translate every
-    // column-name argument the same way
-    val (m, carried1) = extendMap(m0, df.columns.toSeq,
-      carried0, v, "commitAppend")
-    val phys = toPhysical(df, m)
-    // type widening: refresh the `sch` target when mergeSchema widens
-    // a shared column (or the store already carries one)
-    val carried = rawPrev match {
-      case Some((raw, _)) if mergeSchema =>
-        widenSchemaRows(raw.schema, phys.schema, carried1)
-      case _ => carried1
-    }
-    val segRows = writeDataSegment(phys, dir, v,
-      physAll(m, statsCols, "commitAppend"),
-      physAll(m, partitionBy, "commitAppend"),
-      "commitAppend", physAll(m, bloomCols, "commitAppend"),
-      bloomExpectedItems)
-    // an EMPTY partitioned frame writes no leaves (an unpartitioned
-    // empty frame still writes one schema-bearing file) — publishing
-    // a data-less FIRST manifest would leave the store permanently
-    // unreadable (read requires data segments); later empty commits
-    // are harmless no-data versions
-    require(prev.nonEmpty || segRows.exists(_._1 == "seg"),
-      s"commitAppend: an empty partitioned frame cannot be a store's " +
-        s"FIRST commit at $dir — the v1 manifest would list no data " +
-        s"segments and every read would fail; commit rows first")
-    // the first evolved commit flags the manifest: reads pay the
-    // parquet footer-merge only from here on (compaction unifies the
-    // schema into one segment and drops the flag)
-    val evo = if (mergeSchema && !carried.exists(_._1 == "evo"))
-      Seq(("evo", "true")) else Seq.empty
-    constraintGuard(spark, dir, carried, segRows, "commitAppend", m)
-    commitManifest(spark, dir, v, carried ++ evo ++ segRows, "append")
-    v
+    val g = admit(open(df.sparkSession, dir, "commitAppend", fresh = true),
+      df, mergeSchema, statsCols ++ bloomCols)
+    g.publish(writeDataSegment(toPhysical(df, g.m), dir, g.h.v,
+      g.phys(statsCols), g.phys(partitionBy), "commitAppend",
+      g.phys(bloomCols), bloomExpectedItems), "append")
   }
 
   /** The shared data-segment writer every data-committing face rides:
@@ -579,13 +545,6 @@ object SnapshotStore {
   private def colMapOf(rows: Seq[(String, String)]): Option[ColMap] =
     rows.collectFirst { case ("map", s) => parseMapRow(s) }
 
-  private def latestColMap(spark: SparkSession,
-      dir: String): Option[ColMap] = {
-    val vs = versions(spark, dir)
-    if (vs.isEmpty) None
-    else colMapOf(readManifestRows(spark, dir, vs.max))
-  }
-
   /** Exact-name column reference — backtick-quoted so dotted names
     * (the xlsx template discipline) never parse as struct paths.
     */
@@ -633,10 +592,9 @@ object SnapshotStore {
     * current physical schema (the first rename/drop of an unmapped
     * store starts here — every existing name must be map-encodable).
     */
-  private def mapOrIdentity(spark: SparkSession, dir: String, v: Int,
-      rows: Seq[(String, String)], op: String): ColMap =
-    colMapOf(rows).getOrElse {
-      val names = readRaw(spark, dir, Some(v))._1.schema.fieldNames.toSeq
+  private def mapOrIdentity(h: Head, op: String): ColMap =
+    h.m.getOrElse {
+      val names = h.raw.schema.fieldNames.toSeq
       names.foreach(mapNameGuard(_, op))
       ColMap(names.map(n => (n, n)), Nil)
     }
@@ -704,11 +662,9 @@ object SnapshotStore {
     */
   def renameColumn(spark: SparkSession, dir: String, from: String,
       to: String): Int = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"renameColumn: no committed snapshot at $dir")
+    val h = open(spark, dir, "renameColumn")
     mapNameGuard(to, "renameColumn")
-    val rows = readManifestRows(spark, dir, vs.max)
-    val cm = mapOrIdentity(spark, dir, vs.max, rows, "renameColumn")
+    val cm = mapOrIdentity(h, "renameColumn")
     require(cm.l2p.contains(from),
       s"renameColumn: column '$from' is not in the store's current " +
         s"schema (${cm.entries.map(_._1).mkString(",")})")
@@ -717,18 +673,10 @@ object SnapshotStore {
         s"cannot merge two columns")
     val cm2 = cm.copy(entries = cm.entries.map { case (l, p) =>
       (if (l == from) to else l, p) })
-    val rows2 = rows.map {
-      case ("chk", s) =>
-        val name = s.takeWhile(_ != ';')
-        val ex = s.substring(s.indexOf(';') + 1)
-        ("chk", s"$name;${renameInExpr(spark, ex, from, to)}")
-      case other => other
-    }
-    val v = vs.max + 1
-    commitManifest(spark, dir, v,
-      rows2.filterNot(_._1 == "map") :+ (("map", cm2.render)),
-      "renameColumn")
-    v
+    h.publish(h.rows.filterNot(r => r._1 == "map" || r._1 == "chk") ++
+      chks(h.rows).map { case (name, ex) =>
+        ("chk", s"$name;${renameInExpr(spark, ex, from, to)}") } :+
+      (("map", cm2.render)), "renameColumn")
   }
 
   /** ALTER TABLE … DROP COLUMN as an O(1)-manifest metadata commit:
@@ -741,30 +689,23 @@ object SnapshotStore {
     * drop the last column.
     */
   def dropColumn(spark: SparkSession, dir: String, name: String): Int = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"dropColumn: no committed snapshot at $dir")
-    val rows = readManifestRows(spark, dir, vs.max)
-    val cm = mapOrIdentity(spark, dir, vs.max, rows, "dropColumn")
+    val h = open(spark, dir, "dropColumn")
+    val cm = mapOrIdentity(h, "dropColumn")
     require(cm.l2p.contains(name),
       s"dropColumn: column '$name' is not in the store's current " +
         s"schema (${cm.entries.map(_._1).mkString(",")})")
     require(cm.entries.size > 1,
       s"dropColumn: '$name' is the store's only column — a table " +
         s"with no columns cannot be read")
-    rows.collect { case ("chk", s) =>
-      (s.takeWhile(_ != ';'), s.substring(s.indexOf(';') + 1))
-    }.foreach { case (cn, ex) =>
+    chks(h.rows).foreach { case (cn, ex) =>
       require(!exprAttrs(spark, ex).exists(_.equalsIgnoreCase(name)),
         s"dropColumn: CHECK constraint '$cn' ($ex) references " +
           s"'$name' — dropConstraint('$cn') first")
     }
     val cm2 = ColMap(cm.entries.filterNot(_._1 == name),
       cm.retired :+ cm.l2p(name))
-    val v = vs.max + 1
-    commitManifest(spark, dir, v,
-      rows.filterNot(_._1 == "map") :+ (("map", cm2.render)),
+    h.publish(h.rows.filterNot(_._1 == "map") :+ (("map", cm2.render)),
       "dropColumn")
-    v
   }
 
   /** The latest snapshot's logical→physical column mapping, identity
@@ -773,12 +714,9 @@ object SnapshotStore {
     */
   def columnMapping(spark: SparkSession,
       dir: String): Seq[(String, String)] = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
-    val rows = readManifestRows(spark, dir, vs.max)
+    val (_, rows) = pin(spark, dir, None)
     colMapOf(rows).map(_.entries).getOrElse(
-      readRaw(spark, dir, Some(vs.max))._1.schema.fieldNames.toSeq
-        .map(n => (n, n)))
+      rawFrame(spark, dir, rows).schema.fieldNames.toSeq.map(n => (n, n)))
   }
 
   /** statsCols must exist on the committed frame — a typo would write
@@ -955,19 +893,14 @@ object SnapshotStore {
   def commitDelete(ids: DataFrame, idCol: String, dir: String,
       cdf: Boolean = false, dv: Boolean = false): Int = {
     val spark = ids.sparkSession
-    val prev = versions(spark, dir)
-    require(prev.nonEmpty,
-      s"commitDelete: no committed version at $dir to delete from")
+    val h = open(spark, dir, "commitDelete")
     // the delete key must exist in the store's CURRENT schema: a
     // mistyped column would write a tombstone the read-side antiTomb
     // silently passes through (its missing-column branch exists for
     // genuinely evolution-omitted segments), silently no-op'ing the
     // delete — the same silent-no-match hazard the null guard below
     // exists for
-    // ONE readRaw serves the id-column check and the cdf preimages
-    val (rawPrev, rows) = readRaw(spark, dir, Some(prev.max))
-    val m = colMapOf(rows)
-    val cur = toLogical(rawPrev, m).schema.fieldNames
+    val cur = h.logical.schema.fieldNames
     require(cur.contains(idCol),
       s"commitDelete: id column '$idCol' is not in the store's current " +
         s"schema (${cur.mkString(",")}) — the tombstone would never " +
@@ -975,34 +908,28 @@ object SnapshotStore {
     // the tombstone is a PHYSICAL artifact — it must anti-join every
     // older segment under the storage name, whatever the column is
     // logically called today or after any later rename
-    val pId = physN(m, idCol, "commitDelete")
+    val pId = physN(h.m, idCol, "commitDelete")
     val tomb = ids.select(bq(idCol).as(pId)).distinct()
     val bad = tomb.where(bq(pId).isNull).count()
     require(bad == 0,
       s"commitDelete: null id(s) in '$idCol' — a null tombstone never " +
         s"matches the read-side anti-join and the row would stay visible")
-    val v = prev.max + 1
+    val v = h.v
     if (dv) {
       // pin ONE evaluation of the id frame — the positions, the CDC
       // preimages and the count must agree id for id
       val pinnedIds = graft.ops.Checkpoints.cut(tomb, eager = true)
       val matched = graft.ops.Checkpoints.cut(
-        segsMinusTombs(spark, dir,
-            rows.collect { case ("seg", p) => p },
-            rows.collect { case ("tomb", p) => p },
-            evolved = rows.exists(_._1 == "evo"),
-            dvs = dvRowsOf(rows), keepPos = true,
-            target = schOf(rows))
+        rawFrame(spark, dir, h.rows, keepPos = true)
           // no unconditional broadcast hint: a mass-delete id frame
           // must not OOM the driver (the tombBroadcastGate philosophy
           // — AQE broadcasts genuinely small id sides on its own)
           .join(pinnedIds, Seq(pId), "left_semi"),
         eager = true)
-      if (matched.isEmpty) return prev.max
+      if (matched.isEmpty) return v - 1
       val (dvRow, cdcRel, _) =
         writeDeletionVector(spark, dir, v, matched, cdf)
-      commitManifestCdc(spark, dir, v, rows :+ dvRow, cdcRel, "delete")
-      return v
+      return h.publish(h.rows :+ dvRow, "delete", cdcRel)
     }
     val tp = s"tomb/${uniqueName('t', v)}"
     tomb.write.mode("errorifexists").parquet(s"$dir/$tp")
@@ -1016,12 +943,9 @@ object SnapshotStore {
     // [[readChanges]] projects at output.
     val cdcRel = if (!cdf) None
       else Some(writeCdc(spark, dir, v,
-        rawPrev.join(
+        h.raw.join(
           DriverParquet.read(spark, Seq(s"$dir/$tp")), Seq(pId), "left_semi")))
-    commitManifestCdc(spark, dir, v,
-      rows :+ (("tomb", tp)), cdcRel,
-      "delete")
-    v
+    h.publish(h.rows :+ (("tomb", tp)), "delete", cdcRel)
   }
 
   /** [[commitDeleteWhere]]'s evidence: the committed version, how
@@ -1093,22 +1017,15 @@ object SnapshotStore {
       cdf: Boolean = false, dv: Boolean = false): Option[DeleteWhere] = {
     require(ranges.nonEmpty || parts.nonEmpty,
       "commitDeleteWhere needs at least one range or partition predicate")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty,
-      s"commitDeleteWhere: no committed version at $dir to delete from")
-    val (rawPrev, rows) = readRaw(spark, dir, Some(vs.max))
-    val plan = new Pruning(spark, dir, "commitDeleteWhere", (vs.max, rows),
+    val h = open(spark, dir, "commitDeleteWhere")
+    val plan = new Pruning(spark, dir, "commitDeleteWhere", (h.v - 1, h.rows),
       ranges, parts)
-    val m = plan.m
-    val cur = toLogical(rawPrev, m).schema.fieldNames
+    val cur = h.logical.schema.fieldNames
     require(cur.contains(idCol),
       s"commitDeleteWhere: id column '$idCol' is not in the store's " +
         s"current schema (${cur.mkString(",")})")
-    val pStats = physAll(m, statsCols, "commitDeleteWhere")
-    val pId = physN(m, idCol, "commitDeleteWhere")
-    val segs = plan.segs
-    val tombs = rows.collect { case ("tomb", p) => p }
-    val evolved = plan.evolved
+    val pStats = physAll(h.m, statsCols, "commitDeleteWhere")
+    val pId = physN(h.m, idCol, "commitDeleteWhere")
     val suspects = plan.touched
     if (suspects.isEmpty) return None
     val pred = coalesce(plan.residual, lit(false))
@@ -1119,10 +1036,8 @@ object SnapshotStore {
     // in — an already-dv-deleted row must not re-match (its preimage
     // would re-emit and its count would lie). dv mode keeps the
     // position columns: they ARE the deletion vector.
-    val dvs = dvRowsOf(rows)
     val matched = graft.ops.Checkpoints.cut(
-      segsMinusTombs(spark, dir, suspects, tombs, evolved, dvs,
-        keepPos = dv).where(pred),
+      rawFrame(spark, dir, h.rows, Some(suspects), keepPos = dv).where(pred),
       eager = true)
     // ONE bookkeeping aggregate: the delete count and the null-id
     // count the tombstone guard below needs
@@ -1130,8 +1045,7 @@ object SnapshotStore {
       count(when(bq(pId).isNull, 1))).head()
     val nDel = tally.getLong(0)
     if (nDel == 0) return None
-    val v = vs.max + 1
-    val fs = hfs(spark, dir)
+    val v = h.v
     if (dv) {
       // merge-on-read: ONE match-sized position sidecar, nothing
       // rewritten, no tombstone (the DV is position-exact — the MVCC
@@ -1139,8 +1053,8 @@ object SnapshotStore {
       // does). See [[writeDeletionVector]] for the shared tail.
       val (dvRow, cdcRel, bytes) =
         writeDeletionVector(spark, dir, v, matched, cdf)
-      commitManifestCdc(spark, dir, v, rows :+ dvRow, cdcRel, "delete")
-      return Some(DeleteWhere(v, nDel, 0, segs.size, bytes))
+      return Some(DeleteWhere(h.publish(h.rows :+ dvRow, "delete", cdcRel),
+        nDel, 0, plan.segs.size, bytes))
     }
     require(tally.getLong(1) == 0,
       s"commitDeleteWhere: matched row(s) carry a null '$idCol' — a " +
@@ -1148,100 +1062,22 @@ object SnapshotStore {
     val tp = s"tomb/${uniqueName('t', v)}"
     matched.select(bq(pId)).distinct()
       .write.mode("errorifexists").parquet(s"$dir/$tp")
-    val suspectSet = suspects.toSet
-    val suspGroups = suspects.groupBy(sigOf)
-    // ONE-JOB rewrite when every suspect shares one partition-column
-    // list: the survivor union re-derives its own leaf placement from
-    // the duplicated original columns through a single partitionBy
-    // write (the writeDataSegment shape) — a delete spanning P
-    // partitions otherwise pays P serial job launches on the driver,
-    // a wall-clock term ∝ P at 100 TB partition counts. The
-    // per-signature loop remains for unpartitioned/mixed suspects
-    // (layout heterogeneity means the groups genuinely differ).
-    val colLists = suspects.map(sigCols).distinct
-    val bulk = suspGroups.size > 1 && colLists.size == 1 &&
-      colLists.head.nonEmpty
-    val newRows =
-      if (bulk) {
-        val survivors = segsMinusTombs(spark, dir, suspects, tombs,
-          evolved, dvs).where(!pred)
-        statsGuard(survivors, pStats, "commitDeleteWhere")
-        writeDataSegment(survivors, dir, v, pStats, colLists.head,
-          "commitDeleteWhere", prefix = 'c')
-      } else suspGroups.toSeq.sortBy(_._1)
-        .flatMap { case (sig, gsegs) =>
-          val survivors = segsMinusTombs(spark, dir, gsegs, tombs,
-              evolved, dvs)
-            .where(!pred)
-          statsGuard(survivors, pStats, "commitDeleteWhere")
-          val root = s"seg/${uniqueName('c', v)}"
-          val seg = s"$root$sig"
-          survivors.write.mode("errorifexists").parquet(s"$dir/$seg")
-          // a group the predicate emptied contributes nothing (Spark
-          // writes no data files for an empty frame — reading the bare
-          // dir would fail schema inference)
-          val hasData = fs.listStatus(
-              new org.apache.hadoop.fs.Path(s"$dir/$seg")).exists(st =>
-            st.isFile && !st.getPath.getName.startsWith("_") &&
-              !st.getPath.getName.startsWith("."))
-          if (!hasData) Seq.empty
-          else if (pStats.isEmpty) Seq(("seg", seg))
-          else {
-            graft.ops.LayoutOps.writeStatsSidecar(spark, pStats,
-              s"$dir/$seg", s"$dir/$root/_stats")
-            Seq(("seg", seg), ("stats", s"$seg;${pStats.mkString(",")}"))
-          }
-        }
-    val keptSegs = segs.filterNot(suspectSet)
-    val minKept = keptSegs.map(pathVersion).minOption.getOrElse(v)
-    // DV affected lists are seg/-anchored while a clone's manifest
-    // rows carry a relative-path prefix — retire on anchored identity
-    // (raw equality would leave phantom delete debt on clones)
-    val suspectAnchors = suspectSet.map(segAnchor)
-    val keptRows = rows.filter {
-      case ("seg", p) => !suspectSet(p)
-      case ("stats", s) => !suspectSet(parseStatsRow(s)._1)
-      case ("tomb", p) => pathVersion(p) > minKept
-      // a DV whose every named segment was just rewritten is dead
-      // weight (the rewrite materialized it); one naming a carried
-      // segment must stay
-      case ("dv", s) =>
-        parseStatsRow(s)._2.exists(a => !suspectAnchors(segAnchor(a)))
-      case ("evo", _) => keptSegs.nonEmpty || newRows.count(_._1 == "seg") > 1
-      case _ => true // txn carry
-    }
-    // a predicate matching EVERY visible row would otherwise leave a
-    // manifest with a tombstone and zero data segments — every later
-    // read would throw "lists no data segments" (a bricked store),
-    // and whether the empty-survivor rewrite happens to emit a
-    // schema-bearing file is a PLAN-SHAPE accident (a zero-partition
-    // write pins the schema in one empty file; a dynamic-partition or
-    // all-empty-task write emits nothing). Pin the schema
-    // deterministically with ONE empty `c` segment so a legal
-    // full-table DELETE leaves the same readable empty snapshot
-    // id-based commitDelete does.
-    val newRowsAll =
-      if (keptRows.exists(_._1 == "seg") || newRows.exists(_._1 == "seg"))
-        newRows
-      else {
-        val seg = s"seg/${uniqueName('c', v)}"
-        spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            matched.schema)
-          .write.mode("errorifexists").parquet(s"$dir/$seg")
-        newRows :+ (("seg", seg))
-      }
+    // a predicate matching EVERY visible row pins the schema with one
+    // empty segment, leaving the same readable empty snapshot id-based
+    // commitDelete does
+    val (kept, fresh) = rewrite(h, suspects, Some(pred), pStats,
+      emptySchema = Some(matched.schema))
     // the copy-on-write footprint: every rewrite root (the root
     // subsumes its partition leaves and stats sidecar) + the tombstone
-    val wroteBytes = (newRowsAll.collect { case ("seg", p) =>
+    val fs = hfs(spark, dir)
+    val wroteBytes = (fresh.collect { case ("seg", p) =>
         p.split('/').take(2).mkString("/") }.distinct :+ tp)
       .map(p => fs.getContentSummary(
         new org.apache.hadoop.fs.Path(s"$dir/$p")).getLength).sum
     // cdf: the pinned matched frame IS the preimage set — no extra job
     val cdcRel = if (!cdf) None else Some(writeCdc(spark, dir, v, matched))
-    commitManifestCdc(spark, dir, v,
-      keptRows ++ newRowsAll :+ (("tomb", tp)), cdcRel, "delete")
-    Some(DeleteWhere(v, nDel, suspects.size, segs.size, wroteBytes))
+    Some(DeleteWhere(h.publish(kept ++ fresh :+ (("tomb", tp)), "delete",
+      cdcRel), nDel, suspects.size, plan.segs.size, wroteBytes))
   }
 
   /** [[commitMerge]]'s evidence: the committed version plus how many
@@ -1283,24 +1119,10 @@ object SnapshotStore {
       mergeSchema: Boolean = false, statsCols: Seq[String] = Nil,
       partitionBy: Seq[String] = Nil,
       cdf: Boolean = false): Option[MergeResult] = {
-    val spark = source.sparkSession
-    val prev = versions(spark, dir)
-    require(prev.nonEmpty,
-      s"commitMerge: no committed version at $dir — commitAppend first")
-    // ONE readRaw serves the guard, the widening fold and the merge
-    // target (an evolved store's footer-merge runs once per commit)
-    val (rawPrev, carried0) = readRaw(spark, dir, Some(prev.max))
-    val m0 = colMapOf(carried0)
-    schemaGuard(source, toLogical(rawPrev, m0).schema,
-      mergeSchema, "commitMerge")
-    statsGuard(source, statsCols, "commitMerge")
+    val h = open(source.sparkSession, dir, "commitMerge")
+    val g = admit(h, source, mergeSchema, statsCols)
     // merge logic runs LOGICAL end to end (target/source/clauses are
     // the user's view); only the written artifacts translate
-    val (m, carried1) = extendMap(m0,
-      source.columns.toSeq, carried0, prev.max + 1, "commitMerge")
-    val carried = if (!mergeSchema) carried1
-      else widenSchemaRows(rawPrev.schema,
-        toPhysical(source, m).schema, carried1)
     val src = graft.ops.Checkpoints.cut(source, eager = true)
     val idStats = src.agg(
       count(lit(1)).as("n"),
@@ -1313,7 +1135,7 @@ object SnapshotStore {
         s"${idStats.getLong(1)} distinct '$idCol' values — multiple " +
         s"source rows would claim one target row (the Delta " +
         s"multiple-matches error); dedupe upstream")
-    val target = toLogical(rawPrev, m0)
+    val target = h.logical
     val srcP = src.select(src.columns.toSeq.map(c => col(c).as(s"src_$c")): _*)
     val delC = coalesce(deleteWhen.getOrElse(lit(false)), lit(false))
     val updC = coalesce(updateWhen.getOrElse(lit(false)), lit(false))
@@ -1346,9 +1168,9 @@ object SnapshotStore {
     val nIns = if (!insertNotMatched) 0L
       else idStats.getLong(0) - tally.getLong(2)
     if (nUpd + nDel + nIns == 0) return None
-    val v = prev.max + 1
+    val v = h.v
     val claimed = matched.where(col("__act") =!= "n")
-      .select(bq(idCol).as(physN(m, idCol, "commitMerge"))).distinct()
+      .select(bq(idCol).as(physN(g.m, idCol, "commitMerge"))).distinct()
     val tombRows = if (nUpd + nDel == 0) Seq.empty
       else {
         val tp = s"tomb/${uniqueName('t', v)}"
@@ -1358,22 +1180,17 @@ object SnapshotStore {
     val segRows = if (nUpd + nIns == 0) Seq.empty
       else writeDataSegment(
         toPhysical(updRows.unionByName(insRows,
-          allowMissingColumns = true), m),
-        dir, v, physAll(m, statsCols, "commitMerge"),
-        physAll(m, partitionBy, "commitMerge"), "commitMerge")
+          allowMissingColumns = true), g.m),
+        dir, v, g.phys(statsCols), g.phys(partitionBy), "commitMerge")
     // cdf: updated + deleted targets' preimages, from the pinned
     // classification (target columns only) — written PHYSICAL like
     // every on-disk artifact
     val cdcRel = if (!cdf || nUpd + nDel == 0) None
-      else Some(writeCdc(spark, dir, v,
+      else Some(writeCdc(h.spark, dir, v,
         toPhysical(matched.where(col("__act") =!= "n")
-          .select(target.columns.map(col).toSeq: _*), m)))
-    val evo = if (mergeSchema && !carried.exists(_._1 == "evo"))
-      Seq(("evo", "true")) else Seq.empty
-    constraintGuard(spark, dir, carried, segRows, "commitMerge", m)
-    commitManifestCdc(spark, dir, v,
-      carried ++ evo ++ tombRows ++ segRows, cdcRel, "merge")
-    Some(MergeResult(v, nUpd, nDel, nIns))
+          .select(target.columns.map(col).toSeq: _*), g.m)))
+    Some(MergeResult(g.publish(tombRows ++ segRows, "merge", cdcRel),
+      nUpd, nDel, nIns))
   }
 
   /** CHECK constraints (Delta's `ALTER TABLE … ADD CONSTRAINT` /
@@ -1400,46 +1217,36 @@ object SnapshotStore {
       sqlExpr: String): Int = {
     require(!name.contains(";") && !name.contains(",") && name.nonEmpty,
       s"constraint name must be non-empty without ';'/',', got '$name'")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"addConstraint: no committed snapshot at $dir")
-    val carried = readManifestRows(spark, dir, vs.max)
-    require(!carried.exists { case (k, v) =>
-        k == "chk" && v.takeWhile(_ != ';') == name },
+    val h = open(spark, dir, "addConstraint")
+    require(!chks(h.rows).exists(_._1 == name),
       s"addConstraint: constraint '$name' already exists at $dir")
-    val bad = read(spark, dir, Some(vs.max))
-      .where(!coalesce(expr(sqlExpr), lit(true))).count()
+    val bad = h.logical.where(!coalesce(expr(sqlExpr), lit(true))).count()
     require(bad == 0,
       s"addConstraint: existing data violates '$name' ($sqlExpr) on " +
         s"$bad row(s) — clean the table first")
-    val v = vs.max + 1
-    commitManifest(spark, dir, v,
-      carried :+ (("chk", s"$name;$sqlExpr")), "addConstraint")
-    v
+    h.publish(h.rows :+ (("chk", s"$name;$sqlExpr")), "addConstraint")
   }
 
   def dropConstraint(spark: SparkSession, dir: String,
       name: String): Int = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"dropConstraint: no committed snapshot at $dir")
-    val carried = readManifestRows(spark, dir, vs.max)
-    val (hit, kept) = carried.partition { case (k, v) =>
-      k == "chk" && v.takeWhile(_ != ';') == name }
-    require(hit.nonEmpty,
+    val h = open(spark, dir, "dropConstraint")
+    require(chks(h.rows).exists(_._1 == name),
       s"dropConstraint: no constraint named '$name' at $dir")
-    val v = vs.max + 1
-    commitManifest(spark, dir, v, kept, "dropConstraint")
-    v
+    h.publish(h.rows.filterNot(r => chks(Seq(r)).exists(_._1 == name)),
+      "dropConstraint")
   }
 
   /** The active constraints of the latest snapshot: name → SQL. */
-  def constraints(spark: SparkSession, dir: String): Map[String, String] = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
-    readManifestRows(spark, dir, vs.max).collect {
-      case ("chk", s) =>
-        (s.takeWhile(_ != ';'), s.substring(s.indexOf(';') + 1))
-    }.toMap
-  }
+  def constraints(spark: SparkSession, dir: String): Map[String, String] =
+    chks(pin(spark, dir, None)._2).toMap
+
+  /** The `chk` manifest rows as (name, SQL) — `name;<sql expression>`,
+    * split at the first `;` (names never carry one; the SQL may).
+    */
+  private def chks(rows: Seq[(String, String)]): Seq[(String, String)] =
+    rows.collect { case ("chk", s) =>
+      (s.takeWhile(_ != ';'), s.substring(s.indexOf(';') + 1))
+    }
 
   /** Validate the just-written segment rows against every carried
     * `chk` constraint — ONE aggregation job for all constraints over
@@ -1449,11 +1256,9 @@ object SnapshotStore {
   private def constraintGuard(spark: SparkSession, dir: String,
       carried: Seq[(String, String)], segRows: Seq[(String, String)],
       op: String, m: Option[ColMap] = None): Unit = {
-    val chks = carried.collect { case ("chk", s) =>
-      (s.takeWhile(_ != ';'), s.substring(s.indexOf(';') + 1))
-    }
+    val rules = chks(carried)
     val segs = segRows.collect { case ("seg", p) => p }
-    if (chks.isEmpty || segs.isEmpty) return
+    if (rules.isEmpty || segs.isEmpty) return
     // constraints are LOGICAL expressions; written files are physical
     // — project through the map before evaluating. Only the columns
     // this commit actually wrote: a mergeSchema commit may omit map
@@ -1464,10 +1269,10 @@ object SnapshotStore {
       cm.entries.filter { case (_, p) => raw.columns.contains(p) }
         .map { case (l, p) => bq(p).as(l) }: _*))
     val counts = df.agg(
-      count(when(!coalesce(expr(chks.head._2), lit(true)), 1)),
-      chks.tail.map(c =>
+      count(when(!coalesce(expr(rules.head._2), lit(true)), 1)),
+      rules.tail.map(c =>
         count(when(!coalesce(expr(c._2), lit(true)), 1))): _*).head()
-    chks.zipWithIndex.foreach { case ((name, ex), i) =>
+    rules.zipWithIndex.foreach { case ((name, ex), i) =>
       require(counts.getLong(i) == 0,
         s"$op: CHECK constraint '$name' ($ex) violated by " +
           s"${counts.getLong(i)} new row(s) — nothing committed (the " +
@@ -1703,39 +1508,276 @@ object SnapshotStore {
 
   /** Pin one snapshot: the version (the latest by default) and its
     * manifest rows — loud when nothing is committed, the version is
-    * gone, or its manifest lists no data segment.
+    * gone, or its manifest lists no data segment. `op` prefixes the
+    * messages; `fresh` pins a store with no commit yet as version 0
+    * with no rows (see [[open]]).
     */
   private def pin(spark: SparkSession, dir: String,
-      version: Option[Int]): (Int, Seq[(String, String)]) = {
+      version: Option[Int], op: String = "",
+      fresh: Boolean = false): (Int, Seq[(String, String)]) = {
     val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
+    if (fresh && vs.isEmpty) return (0, Seq.empty)
+    require(vs.nonEmpty, s"${op}no committed snapshot at $dir")
     val v = version.getOrElse(vs.max)
     require(vs.contains(v),
-      s"snapshot version $v does not exist at $dir (have " +
+      s"${op}snapshot version $v does not exist at $dir (have " +
         s"${vs.mkString(",")}) — vacuumed or never committed")
     val rows = readManifestRows(spark, dir, v)
     require(rows.exists(_._1 == "seg"),
-      s"manifest v$v at $dir lists no data segments")
+      s"${op}manifest v$v at $dir lists no data segments")
     (v, rows)
   }
 
-  /** [[read]] minus the logical projection: the PHYSICAL frame plus
-    * the manifest rows — the internal form every face that writes
-    * physical artifacts (tombstones, DVs, CDC preimages) folds
-    * against. Physical names never change, so joins built here stay
-    * valid across any number of renames.
+  /** The PHYSICAL MVCC frame of one manifest's `rows`: its data
+    * segments (or only `segs`, each still under every tombstone and
+    * deletion vector the manifest carries) — the internal form every
+    * face that writes physical artifacts (tombstones, DVs, CDC
+    * preimages, rewrites) folds against. Physical names never change,
+    * so joins built here stay valid across any number of renames.
+    * mergeSchema footer-merging is a per-file job — only stores that
+    * actually evolved pay it (the manifest records the first evolved
+    * commit; a compaction unifies the schema and drops the flag).
+    */
+  private def rawFrame(spark: SparkSession, dir: String,
+      rows: Seq[(String, String)], segs: Option[Seq[String]] = None,
+      keepPos: Boolean = false): DataFrame =
+    segsMinusTombs(spark, dir,
+      segs.getOrElse(rows.collect { case ("seg", p) => p }),
+      rows.collect { case ("tomb", p) => p },
+      evolved = rows.exists(_._1 == "evo"),
+      dvs = dvRowsOf(rows), keepPos = keepPos, target = schOf(rows))
+
+  /** [[read]] minus the logical projection: the pinned snapshot's
+    * [[rawFrame]] plus its manifest rows.
     */
   private def readRaw(spark: SparkSession, dir: String,
       version: Option[Int] = None)
       : (DataFrame, Seq[(String, String)]) = {
     val (_, rows) = pin(spark, dir, version)
-    // mergeSchema footer-merging is a per-file job — only stores that
-    // actually evolved pay it (the manifest records the first evolved
-    // commit; a compaction unifies the schema and drops the flag)
-    (segsMinusTombs(spark, dir, rows.collect { case ("seg", p) => p },
-      rows.collect { case ("tomb", p) => p },
-      evolved = rows.exists(_._1 == "evo"),
-      dvs = dvRowsOf(rows), target = schOf(rows)), rows)
+    (rawFrame(spark, dir, rows), rows)
+  }
+
+  // ===================== THE COMMIT PATH =====================
+  // Every writing face commits the same way (Delta's single log-append
+  // point, Armbrust et al., VLDB 2020): [[open]] the latest snapshot,
+  // derive the next version's rows from it — through [[admit]] when
+  // the face adds data, [[rewrite]] when it rewrites segments
+  // copy-on-write, [[rewriteAll]] when it rewrites the whole table —
+  // and [[Head.publish]] them. Only new directories are written before
+  // the publish, so a face that fails anywhere leaves invisible
+  // orphans, never a half commit.
+
+  /** An opened snapshot: the writing face (`op`, the prefix of its
+    * messages), the version the commit targets, the latest snapshot's
+    * manifest rows (the carry base — empty on a store with no commit
+    * yet) and its column map.
+    */
+  private final case class Head(spark: SparkSession, dir: String, op: String,
+      v: Int, rows: Seq[(String, String)]) {
+    val m: Option[ColMap] = colMapOf(rows)
+    def fresh: Boolean = rows.isEmpty
+    def segs: Seq[String] = rows.collect { case ("seg", p) => p }
+    /** The latest snapshot's physical frame (one [[rawFrame]], so an
+      * evolved store's footer merge runs once per commit).
+      */
+    lazy val raw: DataFrame = rawFrame(spark, dir, rows)
+    def logical: DataFrame = toLogical(raw, m)
+
+    /** The one publish: [[commitManifest]] of `next` at `v` under the
+      * [[history]] operation `kind`, cleaning up the `cdc` change files
+      * on a lost race. Returns `v`.
+      */
+    def publish(next: Seq[(String, String)], kind: String,
+        cdc: Option[String] = None): Int = {
+      commitManifest(spark, dir, v, next, kind, cdc)
+      v
+    }
+  }
+
+  /** The one opener every writing face derives its commit from: the
+    * latest snapshot ([[pin]]) and the version after it, listed fresh
+    * per call (what makes [[withCommitRetry]] re-derive a lost
+    * commit). `fresh` admits a store with no commit yet — the first
+    * commit of [[commitAppend]] / [[commitStreamBatch]] targets
+    * version 1 over no rows.
+    */
+  private def open(spark: SparkSession, dir: String, op: String,
+      fresh: Boolean = false): Head = {
+    val (latest, rows) = pin(spark, dir, None, s"$op: ", fresh)
+    Head(spark, dir, op, latest + 1, rows)
+  }
+
+  /** What [[admit]] let in: the (possibly extended) column map and the
+    * rows to carry, `evo`/`sch`/`map` already updated.
+    */
+  private final case class Admitted(h: Head, m: Option[ColMap],
+      carried: Seq[(String, String)]) {
+    /** Logical column names → physical storage names. */
+    def phys(cols: Seq[String]): Seq[String] = physAll(m, cols, h.op)
+
+    /** The gate's last step, then the publish: the just-written
+      * `added` rows' segments must satisfy every CHECK constraint
+      * ([[constraintGuard]]), and a store's FIRST commit must list a
+      * data segment — an EMPTY partitioned frame writes no leaves (an
+      * unpartitioned empty frame still writes one schema-bearing
+      * file), and a data-less v1 would leave the store permanently
+      * unreadable; later empty commits are harmless no-data versions.
+      */
+    def publish(added: Seq[(String, String)], kind: String,
+        cdc: Option[String] = None): Int = {
+      require(!h.fresh || added.exists(_._1 == "seg"),
+        s"${h.op}: an empty partitioned frame cannot be a store's FIRST " +
+          s"commit at ${h.dir} — the v1 manifest would list no data " +
+          s"segments and every read would fail; commit rows first")
+      constraintGuard(h.spark, h.dir, carried, added, h.op, m)
+      h.publish(carried ++ added, kind, cdc)
+    }
+  }
+
+  /** The one admission gate of the four data-adding faces
+    * ([[commitAppend]], [[commitStreamBatch]], [[commitUpsert]],
+    * [[commitMerge]]), in order: the schema gate against the store's
+    * LOGICAL view ([[schemaGuard]] — strict unless `mergeSchema`), the
+    * stats-column gate over `guarded`, the column map extended by any
+    * new logical column (the incoming frame is LOGICAL; everything
+    * written renames to physical through the returned map), the
+    * widening fold refreshing the `sch` target, and the `evo` flag on
+    * the first evolved commit (reads pay the parquet footer-merge only
+    * from there on; compaction unifies the schema and drops it). The
+    * CHECK constraints run at [[Admitted.publish]], over the written
+    * files.
+    */
+  private def admit(h: Head, df: DataFrame, mergeSchema: Boolean,
+      guarded: Seq[String]): Admitted = {
+    val op = h.op
+    if (!h.fresh) schemaGuard(df, h.logical.schema, mergeSchema, op)
+    statsGuard(df, guarded, op)
+    val (m, extended) = extendMap(h.m, df.columns.toSeq, h.rows, h.v, op)
+    val carried = if (h.fresh || !mergeSchema) extended
+      else widenSchemaRows(h.raw.schema, toPhysical(df, m).schema, extended)
+    val evo = if (mergeSchema && !carried.exists(_._1 == "evo"))
+      Seq(("evo", "true")) else Seq.empty
+    Admitted(h, m, carried ++ evo)
+  }
+
+  /** The one copy-on-write rewrite behind [[commitDeleteWhere]]'s
+    * suspect rewrite and the partial compactions ([[compactSmall]],
+    * scoped [[compactZordered]]): the `picked` segments of `h`,
+    * grouped by partition-path SIGNATURE (so a rewritten segment keeps
+    * its partition encoding and partitions never blend), rewrite into
+    * fresh `c` (dataChange=false) segments at `h.v` — each group's
+    * rows under every tombstone and DV that hides them, minus the rows
+    * `pred` deletes. Returns the carried rows the rewrite leaves and
+    * the rows it wrote.
+    *
+    *  - Writing: ONE `partitionBy` write job when every picked segment
+    *    shares one partition-column list (the survivor union re-derives
+    *    its own leaf placement from the duplicated original columns —
+    *    a rewrite spanning P partitions otherwise pays P serial job
+    *    launches, a wall-clock term ∝ P at 100 TB partition counts;
+    *    `pack` repartitions on those columns first so each leaf
+    *    bin-packs to one file), else one write per signature group:
+    *    `group`'s (the z-order layout) or a plain segment with its
+    *    stats sidecar at the commit ROOT, where [[sidecarDirOf]]
+    *    resolves it for the plain and the partition-suffixed shape. A
+    *    group the rewrite emptied contributes nothing (Spark may write
+    *    no data file for an empty frame, and reading the bare dir
+    *    would fail schema inference).
+    *  - Retiring: the picked segments and their stats rows; a
+    *    tombstone no remaining segment predates (the rewritten rows
+    *    commit at `h.v`, above it); a DV whose every named segment was
+    *    rewritten (its positions materialized — matched on
+    *    seg/-anchored identity, since a clone's manifest rows carry a
+    *    relative-path prefix); and the `evo` flag once ONE segment
+    *    holds the whole table (its schema is unified). Everything
+    *    else (txn, chk, map, sch) carries.
+    *  - Never publishing a data-less manifest (every later read would
+    *    throw "lists no data segments"): when no segment would remain,
+    *    `emptySchema` pins the schema with ONE empty `c` segment (a
+    *    legal full-table DELETE leaves a readable empty snapshot —
+    *    whether the rewrite itself emits a schema-bearing file is a
+    *    plan-shape accident), and without one the rewrite refuses.
+    */
+  private def rewrite(h: Head, picked: Seq[String], pred: Option[Column],
+      pStats: Seq[String], pack: Boolean = false,
+      group: Option[(DataFrame, String) => Seq[(String, String)]] = None,
+      emptySchema: Option[org.apache.spark.sql.types.StructType] = None)
+      : (Seq[(String, String)], Seq[(String, String)]) = {
+    val (spark, dir, v, op) = (h.spark, h.dir, h.v, h.op)
+    def survivors(segs: Seq[String]): DataFrame = {
+      val all = rawFrame(spark, dir, h.rows, Some(segs))
+      val kept = pred.fold(all)(p => all.where(!p))
+      statsGuard(kept, pStats, op)
+      kept
+    }
+    val groups = picked.groupBy(sigOf).toSeq.sortBy(_._1)
+    val colLists = picked.map(sigCols).distinct
+    val fresh =
+      if (group.isEmpty && groups.size > 1 && colLists.size == 1 &&
+          colLists.head.nonEmpty) {
+        val cols = colLists.head
+        val all = survivors(picked)
+        writeDataSegment(if (pack) all.repartition(cols.map(col): _*) else all,
+          dir, v, pStats, cols, op, prefix = 'c')
+      } else groups.flatMap { case (sig, segs) =>
+        group match {
+          case Some(write) => write(survivors(segs), sig)
+          case None =>
+            val root = s"seg/${uniqueName('c', v)}"
+            val seg = s"$root$sig"
+            survivors(segs).write.mode("errorifexists").parquet(s"$dir/$seg")
+            if (DriverParquet.dataFiles(spark, Seq(s"$dir/$seg")).isEmpty)
+              Seq.empty
+            else if (pStats.isEmpty) Seq(("seg", seg))
+            else {
+              graft.ops.LayoutOps.writeStatsSidecar(spark, pStats,
+                s"$dir/$seg", s"$dir/$root/_stats")
+              Seq(("seg", seg), ("stats", s"$seg;${pStats.mkString(",")}"))
+            }
+        }
+      }
+    val pickedSet = picked.toSet
+    val anchors = pickedSet.map(segAnchor)
+    val keptSegs = h.segs.filterNot(pickedSet)
+    val minKept = keptSegs.map(pathVersion).minOption.getOrElse(v)
+    val nFresh = fresh.count(_._1 == "seg")
+    val kept = h.rows.filter {
+      case ("seg", p) => !pickedSet(p)
+      case ("stats", s) => !pickedSet(parseStatsRow(s)._1)
+      case ("tomb", p) => pathVersion(p) > minKept
+      case ("dv", s) => parseStatsRow(s)._2.exists(a => !anchors(segAnchor(a)))
+      case ("evo", _) => keptSegs.nonEmpty || nFresh > 1
+      case _ => true
+    }
+    if (keptSegs.nonEmpty || nFresh > 0) (kept, fresh)
+    else {
+      require(emptySchema.isDefined,
+        s"$op: the survivor set at $dir is empty — nothing to compact " +
+          s"(every picked row is tombstoned); use commitDelete semantics " +
+          s"or vacuum instead")
+      val seg = s"seg/${uniqueName('c', v)}"
+      spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          emptySchema.get)
+        .write.mode("errorifexists").parquet(s"$dir/$seg")
+      (kept, fresh :+ (("seg", seg)))
+    }
+  }
+
+  /** The one tail of the three FULL rewrites ([[compact]],
+    * [[compactPartitioned]], unscoped [[compactZordered]]): read the
+    * latest snapshot LOGICALLY (materializing the column map and any
+    * widening for free), `write` it at the next version, and publish
+    * it as that version's only data, carrying just the streaming txn
+    * markers (a restarted stream replaying its last batch after a
+    * rewrite must still dedupe on them) and the CHECK constraints
+    * (table rules outlive any rewrite).
+    */
+  private def rewriteAll(spark: SparkSession, dir: String, op: String,
+      kind: String)(write: (DataFrame, Int) => Seq[(String, String)]): Int = {
+    val h = open(spark, dir, op)
+    h.publish(h.rows.filter(r => r._1 == "txn" || r._1 == "chk") ++
+      write(h.logical, h.v), kind)
   }
 
   /** Fold tombstones in for real: write the latest snapshot's
@@ -1744,23 +1786,14 @@ object SnapshotStore {
     * read their original segments (no lineage hazard either: compact
     * only writes NEW directories). Returns the committed version.
     */
-  def compact(spark: SparkSession, dir: String): Int = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"compact: no committed snapshot at $dir")
-    val v = vs.max + 1
-    // `c` prefix = dataChange FALSE: the rows aren't new, they moved
-    // (the Delta convention) — [[readChanges]] skips these segments
-    val seg = s"seg/${uniqueName('c', v)}"
-    read(spark, dir, Some(vs.max))
-      .write.mode("errorifexists").parquet(s"$dir/$seg")
-    // carry the streaming txn marker (a restarted stream replaying its
-    // last batch AFTER a compaction must still dedupe on it) and the
-    // CHECK constraints (table rules outlive any rewrite)
-    val txn = readManifestRows(spark, dir, vs.max)
-      .filter(r => r._1 == "txn" || r._1 == "chk")
-    commitManifest(spark, dir, v, ("seg", seg) +: txn, "compact")
-    v
-  }
+  def compact(spark: SparkSession, dir: String): Int =
+    rewriteAll(spark, dir, "compact", "compact") { (df, v) =>
+      // `c` prefix = dataChange FALSE: the rows aren't new, they moved
+      // (the Delta convention) — [[readChanges]] skips these segments
+      val seg = s"seg/${uniqueName('c', v)}"
+      df.write.mode("errorifexists").parquet(s"$dir/$seg")
+      Seq(("seg", seg))
+    }
 
   /** Idempotent streaming commit (the Delta sink's txn discipline):
     * append `df` as one snapshot version RECORDING `appId:batchId` in
@@ -1780,40 +1813,21 @@ object SnapshotStore {
       partitionBy: Seq[String] = Nil): Int = {
     require(!appId.contains(":"),
       s"appId must not contain ':' (the txn-row separator), got '$appId'")
-    val spark = df.sparkSession
-    val prev = versions(spark, dir)
-    val carried = if (prev.isEmpty) Seq.empty
-      else readManifestRows(spark, dir, prev.max)
-    val lastTxn = carried.collect {
-      case ("txn", b) if b.startsWith(s"$appId:") =>
-        b.drop(appId.length + 1).toLong
-    }.reduceOption((a, b) => math.max(a, b))
-    if (lastTxn.exists(batchId <= _)) return prev.max // replayed batch
-    statsGuard(df, statsCols, "commitStreamBatch")
-    val v = if (prev.isEmpty) 1 else prev.max + 1
-    val m = colMapOf(carried)
+    val h = open(df.sparkSession, dir, "commitStreamBatch", fresh = true)
+    val (mine, carried) = h.rows.partition { case (k, b) =>
+      k == "txn" && b.startsWith(s"$appId:") }
+    if (mine.exists(_._2.drop(appId.length + 1).toLong >= batchId))
+      return h.v - 1 // replayed batch
+    // the strict gate of every data-adding face: a batch the store's
+    // schema does not match would poison every later read
+    val g = admit(h.copy(rows = carried), df, mergeSchema = false, statsCols)
     // partitionBy: the canonical 100 TB ingest shape is a stream
     // committing into a date/lang-partitioned store — each micro-batch
     // usually touches one or two partitions, so the per-leaf manifest
     // rows stay O(1) per commit
-    val segRows = writeDataSegment(toPhysical(df, m), dir, v,
-      physAll(m, statsCols, "commitStreamBatch"),
-      physAll(m, partitionBy, "commitStreamBatch"),
-      "commitStreamBatch")
-    // same first-commit guard as commitAppend: a replay-path caller
-    // offering an empty partitioned batch to a virgin store must not
-    // publish an unreadable data-less v1 ([[streamSink]] already
-    // skips empty batches; a direct caller hits this loudly)
-    require(prev.nonEmpty || segRows.exists(_._1 == "seg"),
-      s"commitStreamBatch: an empty partitioned batch cannot be a " +
-        s"store's FIRST commit at $dir — the v1 manifest would list " +
-        s"no data segments and every read would fail")
-    constraintGuard(spark, dir, carried, segRows, "commitStreamBatch", m)
-    commitManifest(spark, dir, v,
-      carried.filterNot { case (k, b) =>
-        k == "txn" && b.startsWith(s"$appId:") } ++ segRows :+
-        (("txn", s"$appId:$batchId")), "streamBatch")
-    v
+    g.publish(writeDataSegment(toPhysical(df, g.m), dir, h.v,
+      g.phys(statsCols), g.phys(partitionBy), "commitStreamBatch") :+
+      (("txn", s"$appId:$batchId")), "streamBatch")
   }
 
   /** The exactly-once streaming sink over [[commitStreamBatch]]:
@@ -1856,16 +1870,10 @@ object SnapshotStore {
     * Returns the committed version.
     */
   def restore(spark: SparkSession, dir: String, toVersion: Int): Int = {
-    val vs = versions(spark, dir)
-    require(vs.contains(toVersion),
-      s"restore: version $toVersion does not exist at $dir (have " +
-        s"${vs.mkString(",")}) — vacuumed or never committed")
-    val target = readManifestRows(spark, dir, toVersion)
-      .filterNot(_._1 == "txn")
-    val txn = readManifestRows(spark, dir, vs.max).filter(_._1 == "txn")
-    val v = vs.max + 1
-    commitManifest(spark, dir, v, target ++ txn, "restore")
-    v
+    val h = open(spark, dir, "restore")
+    val (_, target) = pin(spark, dir, Some(toVersion), "restore: ")
+    h.publish(target.filterNot(_._1 == "txn") ++
+      h.rows.filter(_._1 == "txn"), "restore")
   }
 
   /** The commit wall-clock of a version — the manifest directory's
@@ -1913,128 +1921,42 @@ object SnapshotStore {
       statsCols: Seq[String] = Nil,
       scope: Map[String, Set[String]] = Map.empty): Option[Int] = {
     val fs = hfs(spark, dir)
-    // a PARTIAL rewrite moves physical bytes and carries the map —
-    // translate the caller's logical names once at entry
-    val m = latestColMap(spark, dir)
-    val pStats = physAll(m, statsCols, "compactSmall")
-    val pScope = scope.map { case (c, a) =>
-      (physN(m, c, "compactSmall"), a) }
-    compactGroups(spark, dir, pScope, minGroup = 2, op = "compactSmall",
-      bulkStats = Some(pStats),
+    compactGroups(spark, dir, "compactSmall", statsCols, scope, minGroup = 2,
       pick = seg => fs.getContentSummary(new org.apache.hadoop.fs.Path(
         s"$dir/${seg.stripSuffix("/data")}")).getLength <= maxSegBytes,
-      writeGroup = (survivors, sig, v) => {
-        // the write-side stats gate BEFORE the expensive merge write —
-        // the same guard every other stats-writing commit face runs
-        statsGuard(survivors, pStats, "compactSmall")
-        val root = s"seg/${uniqueName('c', v)}"
-        val seg = s"$root$sig"
-        survivors.write.mode("errorifexists").parquet(s"$dir/$seg")
-        val stats = if (pStats.isEmpty) Seq.empty
-          else {
-            // at the commit ROOT, where sidecarDirOf resolves it for
-            // both the plain and the partition-suffixed segment shape
-            graft.ops.LayoutOps.writeStatsSidecar(spark, pStats,
-              s"$dir/$seg", s"$dir/$root/_stats")
-            Seq(("stats", s"$seg;${pStats.mkString(",")}"))
-          }
-        (seg, stats)
-      })
+      pack = true)
   }
 
-  /** The shared copy-on-write compaction core: rewrite the picked
-    * segments of the latest snapshot — grouped by partition-path
-    * SIGNATURE, so a merged segment keeps its partition encoding and
-    * partitions never blend — into fresh `c` (dataChange=false)
-    * segments at one new version, carrying everything else forward
-    * untouched. Groups smaller than `minGroup` don't rewrite. MVCC
-    * makes the partial rewrite safe exactly as [[compactSmall]]'s
-    * scaladoc argues: postdating tombstones fold into each group's
-    * rewrite, tombstones still covering carried segments stay, and a
-    * tombstone no remaining segment predates drops as dead weight.
+  /** The partial compactions' shared core ([[compactSmall]], scoped
+    * [[compactZordered]]): pick the latest snapshot's segments matching
+    * the partition `scope` and `pick`, group them by partition-path
+    * signature, drop groups smaller than `minGroup`, and publish their
+    * [[rewrite]] (`zorder` = z-order columns and file count, else a
+    * plain bin-pack) as one version. A PARTIAL rewrite moves physical
+    * bytes and carries the map, so the caller's logical names
+    * translate once at entry. None when no group qualifies.
     */
-  private def compactGroups(spark: SparkSession, dir: String,
-      scope: Map[String, Set[String]], minGroup: Int, op: String,
-      pick: String => Boolean,
-      writeGroup: (DataFrame, String, Int) => (String, Seq[(String, String)]),
-      bulkStats: Option[Seq[String]] = None)
-      : Option[Int] = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"$op: no committed snapshot at $dir")
-    val rows = readManifestRows(spark, dir, vs.max)
-    val segs = rows.collect { case ("seg", p) => p }
-    val tombs = rows.collect { case ("tomb", p) => p }
-    val evolved = rows.exists(_._1 == "evo")
-    val dvs = dvRowsOf(rows)
-    val groups = segs
-      .filter(s => (scope.isEmpty || scopeMatch(s, scope)) && pick(s))
-      .groupBy(sigOf).filter(_._2.size >= minGroup)
-    if (groups.isEmpty) return None
-    val picked = groups.values.flatten.toSet
-    val v = vs.max + 1
-    // read ONLY each group's segments, with every tombstone that
-    // postdates each folded in (segsMinusTombs applies exactly the
-    // MVCC ordering; tombs older than every picked segment no-op)
-    // and any deletion vector naming a group file materialized.
-    // ONE-JOB bulk path (callers opting in via bulkStats — the plain
-    // bin-pack shape): when several groups share one partition-column
-    // list, the whole picked set rewrites through a single
-    // partitionBy write, repartitioned on the partition columns so
-    // each leaf bin-packs to one file — instead of one serial Spark
-    // job per signature (wall ∝ touched-partition count otherwise).
-    val colLists = picked.toSeq.map(sigCols).distinct
-    val bulk = bulkStats.isDefined && groups.size > 1 &&
-      colLists.size == 1 && colLists.head.nonEmpty
-    // a WIDENED store's partial rewrites read under the target schema
-    // (writing the merged group at the widest type); the sch row
-    // stays carried while any narrow segment remains
-    val sch = schOf(rows)
-    val newRows =
-      if (bulk) {
-        val survivors = segsMinusTombs(spark, dir, picked.toSeq, tombs,
-          evolved, dvs, target = sch)
-        val cols = colLists.head
-        statsGuard(survivors, bulkStats.get, op)
-        writeDataSegment(
-          survivors.repartition(cols.map(col): _*), dir, v,
-          bulkStats.get, cols, op, prefix = 'c')
-      } else groups.toSeq.sortBy(_._1).flatMap { case (sig, gsegs) =>
-        val survivors = segsMinusTombs(spark, dir, gsegs, tombs, evolved,
-          dvs, target = sch)
-        val (seg, extra) = writeGroup(survivors, sig, v)
-        (("seg", seg)) +: extra
-      }
-    val keptSegs = segs.filterNot(picked)
-    // a tombstone only matters while SOME remaining segment predates
-    // it (the rewritten segments commit at v, above them all)
-    val minKept = keptSegs.map(pathVersion).minOption.getOrElse(v)
-    // anchored retirement: DV affected refs are seg/-anchored, clone
-    // manifest rows are prefix-relative (see segAnchor)
-    val pickedAnchors = picked.map(segAnchor)
-    val keptRows = rows.filter {
-      case ("seg", p) => !picked(p)
-      case ("stats", s) => !picked(parseStatsRow(s)._1)
-      case ("tomb", p) => pathVersion(p) > minKept
-      // a DV died once every named segment was rewritten (positions
-      // materialized); one naming a carried segment stays live
-      case ("dv", s) =>
-        parseStatsRow(s)._2.exists(a => !pickedAnchors(segAnchor(a)))
-      // a TOTAL merge into ONE segment unified the schema — drop the
-      // evo flag like compact/compactZordered do, so reads stop
-      // paying the footer-merge; a partial merge (or one that left
-      // multiple per-partition segments) keeps it
-      case ("evo", _) => keptSegs.nonEmpty || groups.size > 1
-      case _ => true // txn carry
+  private def compactGroups(spark: SparkSession, dir: String, op: String,
+      statsCols: Seq[String], scope: Map[String, Set[String]],
+      minGroup: Int, pick: String => Boolean, pack: Boolean = false,
+      zorder: Option[(Seq[String], Int)] = None): Option[Int] = {
+    val h = open(spark, dir, op)
+    val pStats = physAll(h.m, statsCols, op)
+    val pScope = scope.map { case (c, a) => (physN(h.m, c, op), a) }
+    val group = zorder.map { case (zCols, nFiles) =>
+      val pZ = physAll(h.m, zCols, op)
+      (df: DataFrame, sig: String) =>
+        writeZSegment(df, dir, h.v, pZ, nFiles, pStats, sig)
     }
-    // a fully-tombstoned picked set under the bulk path writes no
-    // leaves — publishing a data-less manifest would break every later
-    // read (the compactPartitioned guard class)
-    require(keptSegs.nonEmpty || newRows.exists(_._1 == "seg"),
-      s"$op: the survivor set at $dir is empty — nothing to compact " +
-        s"(every picked row is tombstoned); use commitDelete semantics " +
-        s"or vacuum instead")
-    commitManifest(spark, dir, v, keptRows ++ newRows, op)
-    Some(v)
+    val groups = h.segs
+      .filter(s => scopeMatch(s, pScope) && pick(s))
+      .groupBy(sigOf).filter(_._2.size >= minGroup)
+    if (groups.isEmpty) None
+    else {
+      val (kept, fresh) = rewrite(h, groups.values.flatten.toSeq, None,
+        pStats, pack, group)
+      Some(h.publish(kept ++ fresh, op))
+    }
   }
 
   /** REPARTITION the table: fold the latest snapshot's survivor set
@@ -2056,22 +1978,17 @@ object SnapshotStore {
     require(partitionBy.nonEmpty,
       "compactPartitioned needs partition columns — use compact() for " +
         "a plain fold")
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"compactPartitioned: no committed snapshot at $dir")
-    val v = vs.max + 1
-    val segRows = writeDataSegment(read(spark, dir, Some(vs.max)), dir, v,
-      statsCols, partitionBy, "compactPartitioned", bloomCols,
-      prefix = 'c')
-    // a fully-tombstoned table yields no leaves — publishing a
-    // data-less manifest would break every later read loudly but
-    // confusingly; refuse here with the real reason instead
-    require(segRows.exists(_._1 == "seg"),
-      s"compactPartitioned: the survivor set at $dir is empty — " +
-        s"nothing to lay out (every row is tombstoned)")
-    val kept = readManifestRows(spark, dir, vs.max)
-      .filter(r => r._1 == "txn" || r._1 == "chk")
-    commitManifest(spark, dir, v, kept ++ segRows, "repartition")
-    v
+    rewriteAll(spark, dir, "compactPartitioned", "repartition") { (df, v) =>
+      val segRows = writeDataSegment(df, dir, v, statsCols, partitionBy,
+        "compactPartitioned", bloomCols, prefix = 'c')
+      // a fully-tombstoned table yields no leaves — publishing a
+      // data-less manifest would break every later read loudly but
+      // confusingly; refuse here with the real reason instead
+      require(segRows.exists(_._1 == "seg"),
+        s"compactPartitioned: the survivor set at $dir is empty — " +
+          s"nothing to lay out (every row is tombstoned)")
+      segRows
+    }
   }
 
   /** OPTIMIZE ZORDER on the store (Delta's flagship pair, composed
@@ -2083,52 +2000,40 @@ object SnapshotStore {
     * range probes reading only the files whose stats intersect,
     * WITHOUT losing any store property: history pins still read the
     * old segments, CDC skips the movement, the txn marker carries.
+    *
+    * A partition `scope` z-rewrites only the segments whose recorded
+    * partition values match (per signature group, so the rewritten
+    * layout keeps its partition encoding); everything else — including
+    * history pins and unscoped partitions' data — carries forward
+    * untouched. Single-segment groups still rewrite: re-clustering ONE
+    * partition is the point. A scoped rewrite is PARTIAL (the map
+    * carries, names translate to physical); the unscoped one reads
+    * logically and drops the map, so its names stay logical.
     */
   def compactZordered(spark: SparkSession, dir: String,
       zCols: Seq[String], nFiles: Int, statsCols: Seq[String],
       scope: Map[String, Set[String]] = Map.empty): Int =
-    if (scope.isEmpty) {
-      val vs = versions(spark, dir)
-      require(vs.nonEmpty, s"compactZordered: no committed snapshot at $dir")
-      val v = vs.max + 1
-      val root = s"seg/${uniqueName('c', v)}"
-      graft.ops.LayoutOps.zorderWrite(
-        read(spark, dir, Some(vs.max)), zCols, nFiles, statsCols,
-        s"$dir/$root")
-      val txn = readManifestRows(spark, dir, vs.max)
-        .filter(r => r._1 == "txn" || r._1 == "chk")
-      commitManifest(spark, dir, v,
-        Seq(("seg", s"$root/data"),
-          ("stats", s"$root/data;${statsCols.mkString(",")}")) ++ txn,
-        "zorder")
-      v
-    } else {
-      // partition-scoped OPTIMIZE ZORDER: z-rewrite only the segments
-      // whose recorded partition values match (per signature group, so
-      // the rewritten layout keeps its partition encoding); everything
-      // else — including history pins and unscoped partitions' data —
-      // carries forward untouched. Single-segment groups still
-      // rewrite: re-clustering ONE partition is the point. A scoped
-      // rewrite is PARTIAL (map carries) — names translate to
-      // physical; the unscoped branch above reads logically and drops
-      // the map, so its names stay logical.
-      val m = latestColMap(spark, dir)
-      val pZ = physAll(m, zCols, "compactZordered")
-      val pStats = physAll(m, statsCols, "compactZordered")
-      val pScope = scope.map { case (c, a) =>
-        (physN(m, c, "compactZordered"), a) }
-      compactGroups(spark, dir, pScope, minGroup = 1,
-        op = "compactZordered", pick = _ => true,
-        writeGroup = (survivors, sig, v) => {
-          val root = s"seg/${uniqueName('c', v)}"
-          graft.ops.LayoutOps.zorderWrite(survivors, pZ, nFiles,
-            pStats, s"$dir/$root$sig")
-          (s"$root$sig/data",
-            Seq(("stats", s"$root$sig/data;${pStats.mkString(",")}")))
-        }).getOrElse(throw new IllegalArgumentException(
-          s"compactZordered: no segment matches partition scope " +
-            s"$scope at $dir — nothing to rewrite"))
-    }
+    if (scope.isEmpty)
+      rewriteAll(spark, dir, "compactZordered", "zorder") { (df, v) =>
+        writeZSegment(df, dir, v, zCols, nFiles, statsCols)
+      }
+    else compactGroups(spark, dir, "compactZordered", statsCols, scope,
+        minGroup = 1, pick = _ => true, zorder = Some((zCols, nFiles)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"compactZordered: no segment matches partition scope " +
+          s"$scope at $dir — nothing to rewrite"))
+
+  /** One z-ordered `c` segment (`<root><sig>/data` plus its sidecar
+    * beside it) of `df` at version `v`; `sig` keeps a partition-scoped
+    * rewrite's partition encoding.
+    */
+  private def writeZSegment(df: DataFrame, dir: String, v: Int,
+      zCols: Seq[String], nFiles: Int, statsCols: Seq[String],
+      sig: String = ""): Seq[(String, String)] = {
+    val seg = s"seg/${uniqueName('c', v)}$sig"
+    graft.ops.LayoutOps.zorderWrite(df, zCols, nFiles, statsCols, s"$dir/$seg")
+    Seq(("seg", s"$seg/data"), ("stats", s"$seg/data;${statsCols.mkString(",")}"))
+  }
 
   /** Stats-pruned range scan of the latest snapshot — valid when the
     * latest version is a single [[compactZordered]] segment with no
@@ -2230,7 +2135,7 @@ object SnapshotStore {
     // the segments it kept, so it aligns onto that frame by name (a
     // column no kept segment has is null, as in [[read]]). Both exit
     // under the logical view.
-    lazy val empty = readRaw(spark, dir, Some(plan.v))._1.where(lit(false))
+    lazy val empty = rawFrame(spark, dir, plan.rows).where(lit(false))
     val df = toLogical(folded.fold(empty)(a =>
       if (plan.evolved) empty.unionByName(a, allowMissingColumns = true)
       else a), plan.m)
@@ -2286,25 +2191,6 @@ object SnapshotStore {
     rel
   }
 
-  /** Manifest publish for a cdf-writing commit: a LOST RACE must
-    * delete its change files before rethrowing — unlike orphan
-    * seg/tomb dirs (invisible to manifest-pinned readers), cdc files
-    * are glob-visible to [[streamChanges]], so a conflict loser's
-    * preimages would surface as phantom deletes. A hard CRASH between
-    * the cdc write and the rename can still orphan them — the same
-    * crashed-commit caveat [[streamInserts]] documents for segments.
-    */
-  private def commitManifestCdc(spark: SparkSession, dir: String, v: Int,
-      rows: Seq[(String, String)], cdcRel: Option[String],
-      op: String = "unknown"): Unit =
-    try commitManifest(spark, dir, v, rows, op)
-    catch {
-      case e: CommitConflictException =>
-        cdcRel.foreach(p => hfs(spark, dir)
-          .delete(new org.apache.hadoop.fs.Path(s"$dir/$p"), true))
-        throw e
-    }
-
   /** The STREAMING change-data feed (the Delta CDF streaming-source
     * parity [[processChanges]]' pull loop cannot give): a real
     * Structured Streaming union of
@@ -2331,7 +2217,7 @@ object SnapshotStore {
     * CONTENDED-WRITER race window, honestly: cdc files are
     * glob-visible from the moment their write finishes, BEFORE the
     * manifest rename decides the commit. A conflict LOSER deletes its
-    * cdc files ([[commitManifestCdc]]), but a live consumer that
+    * cdc files ([[commitManifest]]), but a live consumer that
     * already listed one in a micro-batch has folded preimages of a
     * delete that never committed (FileStreamSource never un-reads),
     * or crashes with FileNotFoundException if the file vanishes
@@ -2493,12 +2379,7 @@ object SnapshotStore {
     val dvDeletes =
       if (newDvs.isEmpty) asOfFrom.limit(0)
       else {
-        val fromWithPos = segsMinusTombs(spark, dir,
-          fromManifest.collect { case ("seg", p) => p },
-          fromManifest.collect { case ("tomb", p) => p },
-          evolved = fromRows.exists(_._1 == "evo"),
-          dvs = dvRowsOf(fromManifest), keepPos = true,
-          target = schOf(fromManifest))
+        val fromWithPos = rawFrame(spark, dir, fromManifest, keepPos = true)
         val dvF = DriverParquet.read(spark, newDvs.map(d => s"$dir/${d._1}"))
           .select(col("__dv_file"), col("__dv_ridx"))
         val hinted = if (tombBroadcastGate(spark, dir, newDvs.map(_._1)))
@@ -2565,9 +2446,7 @@ object SnapshotStore {
     * rewrite trigger.
     */
   def segmentCounts(spark: SparkSession, dir: String): (Int, Int) = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
-    val rows = readManifestRows(spark, dir, vs.max)
+    val (_, rows) = pin(spark, dir, None)
     (rows.count(_._1 == "seg"),
       rows.count(r => r._1 == "tomb" || r._1 == "dv"))
   }
@@ -2975,31 +2854,51 @@ object SnapshotStore {
       val hit = walked.collect {
         case (seg, ss) if ss.rows.exists(LayoutOps.keepFile(_, usable(ss))) => seg
       }.toSet
-      live.filter(s => (hit(s) || !statsOf.contains(s)) && (!evolved ||
-        probeCols.forall(DriverParquet.schema(spark, Seq(s"$dir/$s"))
-          .fieldNames.contains)))
+      live.filter(s => (hit(s) || !statsOf.contains(s)) &&
+        (!evolved || probeCols.forall(footer(s).fieldNames.contains)))
     }
+
+    /** A segment's footer schema, read once per planner (on the
+      * driver, no job) — what an evolved store's faces group and skip
+      * segments by.
+      */
+    private val footers = scala.collection.mutable.Map.empty[String,
+      org.apache.spark.sql.types.StructType]
+    private def footer(seg: String) = footers.getOrElseUpdate(seg,
+      DriverParquet.schema(spark, Seq(s"$dir/$seg")))
 
     /** Files read by [[scan]] so far. */
     var filesRead = 0
 
     /** `f` over `files` under the residual: ONE relation on a
       * non-evolved store (strict schemaGuard pins identical schemas —
-      * no footer merge needed), one per segment on an evolved store
-      * so each relation stays single-schema. A segment whose schema
-      * omits a probe column contributes nothing (null never sits in
-      * an inclusive range, and never matches a partition-value set).
-      * `pos` attaches the deletion-vector position columns first.
+      * no footer merge needed), one per distinct segment footer
+      * schema on an evolved store, so each relation stays
+      * single-schema and a probe pays a job per schema, not per
+      * segment. A relation whose schema omits a probe column
+      * contributes nothing (null never sits in an inclusive range,
+      * and never matches a partition-value set). `pos` attaches the
+      * deletion-vector position columns first.
       */
     def scan[A](files: Seq[(String, Seq[String])], pos: Boolean = false)(
-        f: DataFrame => A): Seq[A] =
-      (if (evolved) files.map(_._2) else Seq(files.flatMap(_._2)))
-        .filter(_.nonEmpty).flatMap { fls =>
-          val raw = DriverParquet.read(spark, fls)
-          val df = if (pos) withPosCols(raw) else raw
-          if (probeCols.exists(!df.columns.contains(_))) None
-          else { filesRead += fls.size; Some(f(df.where(residual))) }
+        f: DataFrame => A): Seq[A] = {
+      val relations =
+        if (!evolved) Seq(files.flatMap(_._2)).filter(_.nonEmpty)
+          .map(fls => DriverParquet.read(spark, fls) -> fls.size)
+        else {
+          val bySchema = files.filter(_._2.nonEmpty)
+            .map { case (seg, fls) => (footer(seg), fls) }
+          bySchema.map(_._1).distinct.map { sch =>
+            val fls = bySchema.filter(_._1 == sch).flatMap(_._2)
+            spark.read.schema(sch).parquet(fls: _*) -> fls.size
+          }
         }
+      relations.flatMap { case (raw, n) =>
+        val df = if (pos) withPosCols(raw) else raw
+        if (probeCols.exists(!df.columns.contains(_))) None
+        else { filesRead += n; Some(f(df.where(residual))) }
+      }
+    }
   }
 
   /** A metadata-answered range COUNT: how many rows satisfy the
@@ -3221,16 +3120,8 @@ object SnapshotStore {
     */
   def partitions(spark: SparkSession, dir: String,
       version: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no committed snapshot at $dir")
-    val v = version.getOrElse(vs.max)
-    require(vs.contains(v),
-      s"snapshot version $v does not exist at $dir (have " +
-        s"${vs.mkString(",")}) — vacuumed or never committed")
-    val rows = readManifestRows(spark, dir, v)
+    val (v, rows) = pin(spark, dir, version)
     val segs = rows.collect { case ("seg", p) => p }
-    require(segs.nonEmpty, s"manifest v$v at $dir lists no data segments")
     val tombs = rows.count(_._1 == "tomb")
     require(tombs == 0,
       s"partitions: v$v at $dir carries $tombs tombstone(s) — hidden " +
@@ -3334,12 +3225,7 @@ object SnapshotStore {
       version: Option[Int] = None): Int = {
     require(!src.contains("://") && !dst.contains("://"),
       s"clone: plain same-filesystem paths only (got '$src' -> '$dst')")
-    val vs = versions(spark, src)
-    require(vs.nonEmpty, s"clone: no committed snapshot at $src")
-    val pin = version.getOrElse(vs.max)
-    require(vs.contains(pin),
-      s"clone: version $pin does not exist at $src (have " +
-        s"${vs.mkString(",")}) — vacuumed or never committed")
+    val (at, srcRows) = pin(spark, src, version, "clone: ")
     require(versions(spark, dst).isEmpty,
       s"clone: $dst already holds a committed store")
     val srcAbs = java.nio.file.Paths.get(src).toAbsolutePath.normalize
@@ -3347,7 +3233,7 @@ object SnapshotStore {
     require(srcAbs != dstAbs, "clone: src and dst are the same root")
     val rel = dstAbs.relativize(srcAbs).toString
     def ref(p: String): String = s"$rel/$p"
-    val rows = readManifestRows(spark, src, pin).flatMap {
+    val rows = srcRows.flatMap {
       case ("seg", p) => Seq(("seg", ref(p)))
       case ("tomb", p) => Seq(("tomb", ref(p)))
       case ("stats", s) =>
@@ -3359,8 +3245,7 @@ object SnapshotStore {
       case ("txn", _) => Seq.empty // fresh stream lineage
       case other => Seq(other) // chk, evo — table rules clone
     }
-    commitManifest(spark, dst, pin, rows, "clone")
-    pin
+    Head(spark, dst, "clone", at, Seq.empty).publish(rows, "clone")
   }
 
   /** DESCRIBE HISTORY (Delta's observability face): one row per
@@ -3520,51 +3405,30 @@ object SnapshotStore {
   def commitUpsert(df: DataFrame, idCol: String, dir: String,
       mergeSchema: Boolean = false, statsCols: Seq[String] = Nil,
       partitionBy: Seq[String] = Nil, cdf: Boolean = false): Int = {
-    val spark = df.sparkSession
-    val prev = versions(spark, dir)
-    require(prev.nonEmpty,
-      s"commitUpsert: no committed version at $dir — commitAppend first")
-    // ONE readRaw serves the guard, the widening fold and the cdf
-    // preimage base (an evolved store's footer-merge runs once)
-    val (rawPrev, carried0) = readRaw(spark, dir, Some(prev.max))
-    val m0 = colMapOf(carried0)
-    schemaGuard(df, toLogical(rawPrev, m0).schema,
-      mergeSchema, "commitUpsert")
-    statsGuard(df, statsCols, "commitUpsert")
-    val (m, carried1) = extendMap(m0, df.columns.toSeq,
-      carried0, prev.max + 1, "commitUpsert")
-    val carried = if (!mergeSchema) carried1
-      else widenSchemaRows(rawPrev.schema,
-        toPhysical(df, m).schema, carried1)
+    val h = open(df.sparkSession, dir, "commitUpsert")
+    val g = admit(h, df, mergeSchema, statsCols)
     // pin ONE evaluation of df: the tombstone, the null check and the
     // segment must agree row for row — a non-deterministic source
     // evaluated thrice could tombstone ids its own segment never
     // re-inserts (silent deletes) or vice versa (silent duplicates)
     val pinned = graft.ops.Checkpoints.cut(df, eager = true)
-    val pId = physN(m, idCol, "commitUpsert")
+    val pId = physN(g.m, idCol, "commitUpsert")
     val ids = pinned.select(bq(idCol).as(pId)).distinct()
     val bad = ids.where(bq(pId).isNull).count()
     require(bad == 0,
       s"commitUpsert: null id(s) in '$idCol' — a null tombstone never " +
         s"matches the read-side anti-join and the old row would stay")
-    val v = prev.max + 1
-    val tp = s"tomb/${uniqueName('t', v)}"
+    val tp = s"tomb/${uniqueName('t', h.v)}"
     ids.write.mode("errorifexists").parquet(s"$dir/$tp")
-    val segRows = writeDataSegment(toPhysical(pinned, m), dir, v,
-      physAll(m, statsCols, "commitUpsert"),
-      physAll(m, partitionBy, "commitUpsert"), "commitUpsert")
+    val segRows = writeDataSegment(toPhysical(pinned, g.m), dir, h.v,
+      g.phys(statsCols), g.phys(partitionBy), "commitUpsert")
     // cdf: replaced rows' preimages (matched ids only — unmatched
     // source rows are pure inserts, which the data segment carries);
     // physical on disk, [[readChanges]] projects at output
     val cdcRel = if (!cdf) None
-      else Some(writeCdc(spark, dir, v,
-        rawPrev.join(ids, Seq(pId), "left_semi")))
-    val evo = if (mergeSchema && !carried.exists(_._1 == "evo"))
-      Seq(("evo", "true")) else Seq.empty
-    constraintGuard(spark, dir, carried, segRows, "commitUpsert", m)
-    commitManifestCdc(spark, dir, v,
-      carried ++ evo ++ (("tomb", tp) +: segRows), cdcRel, "upsert")
-    v
+      else Some(writeCdc(h.spark, dir, h.v,
+        h.raw.join(ids, Seq(pId), "left_semi")))
+    g.publish(("tomb", tp) +: segRows, "upsert", cdcRel)
   }
 
   /** RESTORE TIMESTAMP AS OF (the wall-clock twin of [[restore]]):

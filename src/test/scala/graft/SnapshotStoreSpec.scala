@@ -71,11 +71,22 @@ class SnapshotStoreSpec extends SparkSpecBase {
     }
     conflict.getMessage should include("conflict")
 
-    val drift = intercept[IllegalArgumentException] {
-      SnapshotStore.commitAppend(
-        Seq((9L, "x")).toDF("doc_id", "text"), dir) // column missing
-    }
-    drift.getMessage should include("schema mismatch")
+    // every data-adding face runs the same strict gate: a missing
+    // column or swapped column types refuse and commit nothing
+    val vBefore = SnapshotStore.versions(spark, dir).max
+    Seq(Seq((9L, "x")).toDF("doc_id", "text"), // column missing
+        Seq(("x", 9L, 1L)).toDF("doc_id", "text", "n")) // types swapped
+      .foreach { bad =>
+        Seq[() => Any](
+          () => SnapshotStore.commitAppend(bad, dir),
+          () => SnapshotStore.commitStreamBatch(bad, dir, batchId = 7L)
+        ).foreach { face =>
+          val drift = intercept[IllegalArgumentException](face())
+          drift.getMessage should include("schema mismatch")
+        }
+      }
+    SnapshotStore.versions(spark, dir).max shouldBe vBefore
+    SnapshotStore.read(spark, dir).count() shouldBe 5
 
     val nulls = intercept[IllegalArgumentException] {
       SnapshotStore.commitDelete(
@@ -689,6 +700,35 @@ class SnapshotStoreSpec extends SparkSpecBase {
     // restored content survives dropping all the history before it
     SnapshotStore.vacuum(spark, dir, keepFrom = 6)
     SnapshotStore.read(spark, dir).count() shouldBe 12
+
+    // every other writing face carries the txn marker too: replaying
+    // the committed batch after each one is still a no-op
+    import graft.ops.LayoutOps.ColRange
+    SnapshotStore.commitAppend(docs(30 to 40), dir, partitionBy = Seq("n"))
+    Seq[(String, () => Any)](
+      "commitUpsert" -> (() =>
+        SnapshotStore.commitUpsert(docs(5 to 6), "doc_id", dir)),
+      "commitMerge" -> (() =>
+        SnapshotStore.commitMerge(docs(7 to 8), "doc_id", dir)),
+      "compactSmall" -> (() =>
+        SnapshotStore.compactSmall(spark, dir, maxSegBytes = 1L << 30)),
+      "commitDeleteWhere" -> (() => SnapshotStore.commitDeleteWhere(spark,
+        dir, Seq(ColRange("doc_id", 9L, 9L)), "doc_id")),
+      "commitDeleteWhere(dv)" -> (() => SnapshotStore.commitDeleteWhere(
+        spark, dir, Seq(ColRange("doc_id", 10L, 10L)), "doc_id", dv = true)),
+      "compactZordered(scope)" -> (() => SnapshotStore.compactZordered(
+        spark, dir, Seq("doc_id"), 1, Seq("doc_id"),
+        scope = Map("n" -> Set("3"))))
+    ).foreach { case (face, run) =>
+      val v = SnapshotStore.versions(spark, dir).max
+      run()
+      withClue(face) {
+        SnapshotStore.versions(spark, dir).max shouldBe v + 1
+        SnapshotStore.commitStreamBatch(docs(11 to 15), dir,
+          batchId = 1L) shouldBe v + 1
+      }
+    }
+    SnapshotStore.read(spark, dir).count() shouldBe 21
   }
 
   test("compactSmall: only small segments merge, postdating tombstones fold, covering tombstones stay, history pins hold") {
@@ -963,6 +1003,35 @@ class SnapshotStoreSpec extends SparkSpecBase {
     an[IllegalArgumentException] should be thrownBy
       SnapshotStore.commitAppend(
         Seq((7L, Option(-7L))).toDF("doc_id", "x"), dir)
+    // ... and every other committing face carries them too
+    import graft.ops.LayoutOps.ColRange
+    SnapshotStore.commitAppend(Seq((5L, Option(5L)), (6L, Option(5L)))
+      .toDF("doc_id", "x"), dir, partitionBy = Seq("x"))
+    Seq[(String, () => Any)](
+      "commitUpsert" -> (() => SnapshotStore.commitUpsert(
+        Seq((1L, Option(11L))).toDF("doc_id", "x"), "doc_id", dir)),
+      "commitMerge" -> (() => SnapshotStore.commitMerge(
+        Seq((2L, Option(12L))).toDF("doc_id", "x"), "doc_id", dir)),
+      "compactSmall" -> (() =>
+        SnapshotStore.compactSmall(spark, dir, maxSegBytes = 1L << 30)),
+      "commitDeleteWhere" -> (() => SnapshotStore.commitDeleteWhere(spark,
+        dir, Seq(ColRange("doc_id", 3L, 3L)), "doc_id")),
+      "commitDeleteWhere(dv)" -> (() => SnapshotStore.commitDeleteWhere(
+        spark, dir, Seq(ColRange("doc_id", 4L, 4L)), "doc_id", dv = true)),
+      "compactZordered(scope)" -> (() => SnapshotStore.compactZordered(
+        spark, dir, Seq("doc_id"), 1, Seq("doc_id"),
+        scope = Map("x" -> Set("5"))))
+    ).foreach { case (face, run) =>
+      val v = SnapshotStore.versions(spark, dir).max
+      run()
+      withClue(face) {
+        SnapshotStore.versions(spark, dir).max shouldBe v + 1
+        SnapshotStore.constraints(spark, dir).keySet shouldBe Set("x_pos")
+      }
+    }
+    an[IllegalArgumentException] should be thrownBy
+      SnapshotStore.commitAppend(
+        Seq((8L, Option(-8L))).toDF("doc_id", "x"), dir)
     // duplicate add and unknown drop are loud; drop re-allows
     an[IllegalArgumentException] should be thrownBy
       SnapshotStore.addConstraint(spark, dir, "x_pos", "x > 0")
@@ -2750,5 +2819,47 @@ class SnapshotStoreSpec extends SparkSpecBase {
     budget shouldBe Seq("readPrunedRange" -> 1, "readPrunedRange.count" -> 3,
       "countPrunedRange" -> 3, "minMaxPrunedRange" -> 3,
       "sumPrunedRange" -> 3, "commitDeleteWhere" -> 7)
+  }
+
+  test("commit faces keep their job budget: the shared opener, gate, rewrite and publish run no Spark job of their own") {
+    import graft.ops.LayoutOps.ColRange
+    val dir = freshDir("commitbudget")
+    def jobs(f: => Any): Int = { val b = lastJob; f; lastJob - b }
+    SnapshotStore.commitAppend(docs(1 to 100), dir, statsCols = Seq("doc_id"))
+    val budget = Seq(
+      "append" -> jobs(SnapshotStore.commitAppend(docs(101 to 150), dir,
+        statsCols = Seq("doc_id"))),
+      "streamBatch" -> jobs(SnapshotStore.commitStreamBatch(docs(151 to 170),
+        dir, batchId = 1L, statsCols = Seq("doc_id"))),
+      "upsert" -> jobs(SnapshotStore.commitUpsert(
+        docs(5 to 8).withColumn("text", lit("up")), "doc_id", dir)),
+      "merge" -> jobs(SnapshotStore.commitMerge(
+        docs(9 to 12).withColumn("text", lit("mg")), "doc_id", dir)),
+      "delete" -> jobs(SnapshotStore.commitDelete(
+        Seq(1L, 2L).toDF("doc_id"), "doc_id", dir)),
+      "delete.dv" -> jobs(SnapshotStore.commitDelete(
+        Seq(3L).toDF("doc_id"), "doc_id", dir, dv = true)),
+      "deleteWhere" -> jobs(SnapshotStore.commitDeleteWhere(spark, dir,
+        Seq(ColRange("doc_id", 20L, 24L)), "doc_id")),
+      "deleteWhere.dv" -> jobs(SnapshotStore.commitDeleteWhere(spark, dir,
+        Seq(ColRange("doc_id", 120L, 124L)), "doc_id", dv = true)),
+      "restore" -> jobs(SnapshotStore.restore(spark, dir, 3)),
+      "rename" -> jobs(SnapshotStore.renameColumn(spark, dir, "text", "body")),
+      "compactSmall" -> jobs(SnapshotStore.compactSmall(spark, dir,
+        maxSegBytes = 1L << 30, statsCols = Seq("doc_id"))),
+      "compact" -> jobs(SnapshotStore.compact(spark, dir)),
+      "compactPartitioned" -> jobs(SnapshotStore.compactPartitioned(spark,
+        dir, Seq("n"), statsCols = Seq("doc_id"))),
+      "compactZordered.scoped" -> jobs(SnapshotStore.compactZordered(spark,
+        dir, Seq("doc_id"), 2, Seq("doc_id"), scope = Map("n" -> Set("3")))),
+      "compactZordered" -> jobs(SnapshotStore.compactZordered(spark, dir,
+        Seq("doc_id"), 2, Seq("doc_id"))))
+    // pinned per face: the shared opener, gate, rewrite and publish
+    // run no job of their own, so these are the faces' own jobs
+    budget shouldBe Seq("append" -> 3, "streamBatch" -> 3, "upsert" -> 5,
+      "merge" -> 15, "delete" -> 3, "delete.dv" -> 11, "deleteWhere" -> 15,
+      "deleteWhere.dv" -> 11, "restore" -> 0, "rename" -> 0,
+      "compactSmall" -> 3, "compact" -> 1, "compactPartitioned" -> 3,
+      "compactZordered.scoped" -> 7, "compactZordered" -> 7)
   }
 }

@@ -78,6 +78,11 @@ class SurveyCoverageSpec extends AnyFunSuite with Matchers {
     mainSources.map("SparkSession\\.builder\\(\\)".r.findAllIn(_).size).sum shouldBe 1
   }
 
+  test("SnapshotStore publishes every commit through one commitManifest call (the shared publish)") {
+    val src = read("src/main/scala/graft/io/SnapshotStore.scala")
+    "(?<!def )commitManifest\\(".r.findAllIn(src).size shouldBe 1
+  }
+
   test("every main CLAUDE.md and README.md tell you to run exists") {
     val named = Seq("CLAUDE.md", "README.md").flatMap { doc =>
       "(?:runMain|scripts/run_main\\.sh)\\s+graft\\.(\\w+)".r
