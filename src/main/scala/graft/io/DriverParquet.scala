@@ -27,6 +27,12 @@ import org.apache.spark.sql.types.StructType
   *  - [[write]] writes small collected rows as one parquet file
   *    through Spark's own `OutputWriterFactory` — the file Spark's
   *    writer would produce (schema, metadata, codec), with no job.
+  *    The snapshot store's bloom-free stats sidecars are written here
+  *    from rows the data write's own tasks computed
+  *    ([[org.apache.spark.sql.graft.FileStatsWriter]]).
+  *  - [[collect]] reads small parquet files back into rows through
+  *    Spark's own parquet reader — `collect()` of a read, with no job —
+  *    for the bloom-free sidecars a pruned probe walks.
   */
 object DriverParquet {
 
@@ -122,6 +128,32 @@ object DriverParquet {
     filesIn(conf, paths).filterNot(summary)
       .map(st => footer(conf, st).getBlocks.asScala.map(_.getRowCount).sum)
       .sum
+  }
+
+  /** `spark.read.schema(schema).parquet(files: _*).collect()` on the
+    * driver: each file goes through the reader a scan task runs
+    * (`ParquetFileFormat.buildReaderWithPartitionValues` — the same
+    * type upcasts, rebase modes and missing-column nulls), so the rows
+    * equal the collected read's, in `files` order. For files-sized
+    * bookkeeping only (stats sidecars); data stays in Spark.
+    */
+  def collect(spark: SparkSession, files: Seq[String],
+      schema: StructType): Seq[Row] = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    val hconf = spark.sessionState.newHadoopConf()
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+      schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hconf)
+    val toRow = org.apache.spark.sql.catalyst.encoders
+      .ExpressionEncoder(schema).resolveAndBind().createDeserializer()
+    files.flatMap { f =>
+      val path = new Path(f)
+      val st = path.getFileSystem(hconf).getFileStatus(path)
+      read(PartitionedFile(org.apache.spark.sql.catalyst.InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromFileStatus(st), 0L, st.getLen,
+          Array.empty, st.getModificationTime, st.getLen))
+        .map(toRow).toVector
+    }
   }
 
   /** Write `rows` as ONE parquet file under the directory `dir`

@@ -130,25 +130,28 @@ object SnapshotStore {
   private val SchemaMemoMax = 4096
 
   private def readParquetMemo(spark: SparkSession, paths: Seq[String],
-      mergeSchema: Boolean): DataFrame = {
+      mergeSchema: Boolean): DataFrame =
+    spark.read.schema(schemaMemoOf(spark, paths, mergeSchema)).parquet(paths: _*)
+
+  /** The memoized schema [[readParquetMemo]] reads `paths` with. */
+  private def schemaMemoOf(spark: SparkSession, paths: Seq[String],
+      mergeSchema: Boolean): org.apache.spark.sql.types.StructType = {
     def infer: org.apache.spark.sql.types.StructType =
       if (mergeSchema)
         spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
       else DriverParquet.schema(spark, paths)
-    val schema =
-      if (graft.Harness.knob("GRAFT_NO_MEMO").isDefined) infer
+    if (graft.Harness.knob("GRAFT_NO_MEMO").isDefined) infer
+    else {
+      val key = (if (mergeSchema) "m|" else "p|") + paths.mkString(",")
+      val known = schemaMemo.get(key)
+      if (known != null) known
       else {
-        val key = (if (mergeSchema) "m|" else "p|") + paths.mkString(",")
-        val known = schemaMemo.get(key)
-        if (known != null) known
-        else {
-          val s = infer
-          if (schemaMemo.size >= SchemaMemoMax) schemaMemo.clear()
-          schemaMemo.put(key, s)
-          s
-        }
+        val s = infer
+        if (schemaMemo.size >= SchemaMemoMax) schemaMemo.clear()
+        schemaMemo.put(key, s)
+        s
       }
-    spark.read.schema(schema).parquet(paths: _*)
+    }
   }
 
   /** Committed versions, ascending — a manifest counts once its
@@ -313,9 +316,14 @@ object SnapshotStore {
     *    leaf dir reads as a plain parquet segment), then one `seg`
     *    (+`stats`) row PER PARTITION LEAF. The leaf path IS the
     *    partition-value record — no second bookkeeping channel to
-    *    drift. Stats ride in ONE sidecar at the commit root (one
-    *    files-sized aggregation for the whole commit, not one job per
+    *    drift. Stats ride in ONE sidecar at the commit root, computed
+    *    by the write's own tasks (no job of its own, not one per
     *    partition), shared by every leaf's `stats` row.
+    *
+    * Every segment write — this one, [[rewrite]]'s per-signature
+    * write and the z-order segments — is
+    * [[graft.ops.LayoutOps.writeParquet]]: a bloom-free sidecar adds
+    * no job to the data write's own.
     *
     * Loud guards, all post-write on the orphan-safe not-yet-committed
     * directory (no pre-write pass, so `df` is still evaluated ONCE):
@@ -331,9 +339,9 @@ object SnapshotStore {
     val spark = df.sparkSession
     if (partitionBy.isEmpty) {
       val seg = s"seg/${uniqueName(prefix, v)}"
-      df.write.mode("errorifexists").parquet(s"$dir/$seg")
-      writeSegStats(spark, dir, seg, statsCols, bloomCols,
-        bloomExpectedItems) :+ (("seg", seg))
+      writeSegStats(LayoutOps.writeParquet(df, s"$dir/$seg", statsCols,
+          bloomCols, bloomExpectedItems),
+        s"$dir/$seg/_stats", Seq(seg), statsCols, bloomCols) :+ (("seg", seg))
     } else {
       val missing = partitionBy.filterNot(df.columns.contains)
       require(missing.isEmpty,
@@ -343,11 +351,11 @@ object SnapshotStore {
         s"$op: '__p_' column prefix is reserved for the partition layout")
       val root = s"seg/${uniqueName(prefix, v)}"
       val pcols = partitionBy.map(c => s"__p_$c")
-      partitionBy.zip(pcols).foldLeft(df) { case (d, (c, p)) =>
+      val sidecar = LayoutOps.writeParquet(
+        partitionBy.zip(pcols).foldLeft(df) { case (d, (c, p)) =>
           d.withColumn(p, col(c))
-        }
-        .write.mode("errorifexists").partitionBy(pcols: _*)
-        .parquet(s"$dir/$root")
+        }, s"$dir/$root", statsCols, bloomCols, bloomExpectedItems,
+        partitionBy = pcols)
       val fs = hfs(spark, dir)
       // relative leaf paths built during the descent (listStatus
       // returns scheme-qualified URIs — never string-strip those)
@@ -375,18 +383,10 @@ object SnapshotStore {
           s"(${leafSegs.filter(s => s.contains(";") || s.contains(","))
             .mkString(", ")})")
       // an EMPTY frame produces no leaves: commit a no-data version
-      // (reading the file-less root for a stats sidecar would fail)
+      // (a bloom sidecar would read the file-less root and fail)
       if (leafSegs.isEmpty) return Seq.empty
-      val stats = if (statsCols.isEmpty && bloomCols.isEmpty) Seq.empty
-        else {
-          graft.ops.LayoutOps.writeStatsSidecar(spark, statsCols,
-            s"$dir/$root", s"$dir/$root/_stats", bloomCols,
-            bloomExpectedItems)
-          val recorded = (statsCols ++
-            bloomCols.map("bloom_" + _)).mkString(",")
-          leafSegs.map(l => ("stats", s"$l;$recorded"))
-        }
-      stats ++ leafSegs.map(("seg", _))
+      writeSegStats(sidecar, s"$dir/$root/_stats", leafSegs, statsCols,
+        bloomCols) ++ leafSegs.map(("seg", _))
     }
   }
 
@@ -461,27 +461,27 @@ object SnapshotStore {
     * is given `statsCols`, the new segment's per-file min/max sidecar
     * is written UNDER the segment directory (`<seg>/_stats` — an
     * underscore path, invisible to the segment's own parquet reads and
-    * vacuumed with its segment) before the manifest publishes, and the
-    * manifest records a `stats` row so [[readPrunedRange]] never
-    * probes the filesystem to discover it. One files-sized aggregation
-    * job riding the commit; its rows are written on the driver
-    * ([[graft.ops.LayoutOps.writeStatsSidecar]]) unless the sidecar
-    * carries bloom columns, whose binaries stay off the driver.
+    * vacuumed with its segment; a partitioned commit's leaves share
+    * ONE sidecar at the commit root) before the manifest publishes,
+    * and the manifest records a `stats` row per segment so
+    * [[readPrunedRange]] never probes the filesystem to discover it.
+    * `sidecar` is the data write's own sidecar step
+    * ([[graft.ops.LayoutOps.writeParquet]]): the stats were computed by
+    * the write's own tasks and land with no Spark job, unless the
+    * sidecar carries bloom columns, whose binaries stay off the driver
+    * (one distributed aggregate over the written files).
     */
-  private def writeSegStats(spark: SparkSession, dir: String, seg: String,
-      statsCols: Seq[String],
-      bloomCols: Seq[String] = Nil,
-      bloomExpectedItems: Long = 100000L): Seq[(String, String)] =
+  private def writeSegStats(sidecar: String => Unit, statsDir: String,
+      segs: Seq[String], statsCols: Seq[String],
+      bloomCols: Seq[String]): Seq[(String, String)] =
     if (statsCols.isEmpty && bloomCols.isEmpty) Seq.empty
     else {
-      graft.ops.LayoutOps.writeStatsSidecar(spark, statsCols,
-        s"$dir/$seg", s"$dir/$seg/_stats", bloomCols,
-        bloomExpectedItems)
+      sidecar(statsDir)
       // bloom columns record as bloom_<col> entries so sidecar GROUPS
       // (one read per distinct recorded column set) never mix
       // bloom-bearing and bloom-less sidecars of the same statsCols
-      Seq(("stats", s"$seg;${(statsCols ++
-        bloomCols.map("bloom_" + _)).mkString(",")}"))
+      val recorded = (statsCols ++ bloomCols.map("bloom_" + _)).mkString(",")
+      segs.map(seg => ("stats", s"$seg;$recorded"))
     }
 
   /** A manifest `stats` row: "<segment path>;<col,col,…>" — the
@@ -1725,15 +1725,12 @@ object SnapshotStore {
           case None =>
             val root = s"seg/${uniqueName('c', v)}"
             val seg = s"$root$sig"
-            survivors(segs).write.mode("errorifexists").parquet(s"$dir/$seg")
+            val sidecar = LayoutOps.writeParquet(survivors(segs),
+              s"$dir/$seg", pStats)
             if (DriverParquet.dataFiles(spark, Seq(s"$dir/$seg")).isEmpty)
               Seq.empty
-            else if (pStats.isEmpty) Seq(("seg", seg))
-            else {
-              graft.ops.LayoutOps.writeStatsSidecar(spark, pStats,
-                s"$dir/$seg", s"$dir/$root/_stats")
-              Seq(("seg", seg), ("stats", s"$seg;${pStats.mkString(",")}"))
-            }
+            else ("seg", seg) +:
+              writeSegStats(sidecar, s"$dir/$root/_stats", Seq(seg), pStats, Nil)
         }
       }
     val pickedSet = picked.toSet
@@ -1755,12 +1752,9 @@ object SnapshotStore {
         s"$op: the survivor set at $dir is empty — nothing to compact " +
           s"(every picked row is tombstoned); use commitDelete semantics " +
           s"or vacuum instead")
-      val seg = s"seg/${uniqueName('c', v)}"
-      spark.createDataFrame(
+      (kept, fresh ++ writeDataSegment(spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          emptySchema.get)
-        .write.mode("errorifexists").parquet(s"$dir/$seg")
-      (kept, fresh :+ (("seg", seg)))
+          emptySchema.get), dir, v, Nil, Nil, op, prefix = 'c'))
     }
   }
 
@@ -1790,9 +1784,7 @@ object SnapshotStore {
     rewriteAll(spark, dir, "compact", "compact") { (df, v) =>
       // `c` prefix = dataChange FALSE: the rows aren't new, they moved
       // (the Delta convention) — [[readChanges]] skips these segments
-      val seg = s"seg/${uniqueName('c', v)}"
-      df.write.mode("errorifexists").parquet(s"$dir/$seg")
-      Seq(("seg", seg))
+      writeDataSegment(df, dir, v, Nil, Nil, "compact", prefix = 'c')
     }
 
   /** Idempotent streaming commit (the Delta sink's txn discipline):
@@ -2645,9 +2637,12 @@ object SnapshotStore {
       have: Set[String], filesTotal: Int)
 
   /** Collected per-commit sidecars for the stats-bearing segments of
-    * one manifest: segment → [[SegStats]], ONE collect per distinct
-    * recorded column set — flat driver JOB count at any segment
-    * count. The collected ROWS grow with file count (Delta pays the
+    * one manifest: segment → [[SegStats]], ONE read per distinct
+    * recorded column set. A bloom-free group is read on the driver
+    * ([[DriverParquet.collect]], Spark's own parquet reader — no job);
+    * a group with bloom columns is one collect job — flat driver JOB
+    * count at any segment count either way. The collected ROWS grow
+    * with file count (Delta pays the
     * same cost class in its log replay); what keeps the allocation
     * bounded at 100 TB is that probing callers PARTITION-PRUNE
     * `statsOf` before calling ([[Pruning]], the planner behind every
@@ -2683,13 +2678,12 @@ object SnapshotStore {
       // sidecar written at the commit root
       val statsDirs = groupSegs.map(sidecarDirOf(dir)).distinct
       // sidecar dirs live under write-once unique segment roots, so
-      // the schema memo applies to them too (the binaries still never
-      // collect — verdicts stay in the read plan). The read names the
+      // the schema memo applies to them too. The read names the
       // sidecars' part files: a `_stats` root is a hidden path to
       // Spark, which warns on every read that lists one.
-      val sdf = readParquetMemo(spark,
-        DriverParquet.dataFiles(spark, statsDirs), mergeSchema = false)
-      val have = sdf.schema.fieldNames.toSet
+      val files = DriverParquet.dataFiles(spark, statsDirs)
+      val schema = schemaMemoOf(spark, files, mergeSchema = false)
+      val have = schema.fieldNames.toSet
       val verdicts = eqs.zipWithIndex.collect {
         case ((eq, typedLit), i) if have.contains(s"bloom_${eq.col}") =>
           // the probe hashes the TYPED literal — build and probe must
@@ -2697,9 +2691,15 @@ object SnapshotStore {
           graft.expr.BloomBytesProbe.probe(col(s"bloom_${eq.col}"),
             xxhash64(typedLit)).as(s"__bloom_keep_$i")
       }
-      val base = sdf.columns.filterNot(_.startsWith("bloom_"))
+      val base = schema.fieldNames.filterNot(_.startsWith("bloom_"))
         .map(col).toSeq
-      val collected = sdf.select(base ++ verdicts: _*).collect()
+      // a bloom-free group is files-sized and read on the driver (no
+      // job); a bloom group stays a Spark read with the verdicts
+      // computed inside it, so the binaries never collect
+      val collected =
+        if (base.size == schema.size) DriverParquet.collect(spark, files, schema)
+        else spark.read.schema(schema).parquet(files: _*)
+          .select(base ++ verdicts: _*).collect().toSeq
       val nBase = base.size
       val nVerd = verdicts.size
       groupSegs.foreach(seg => out(seg) =

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * ([[graft.expr.ZValue]]) with `repartitionByRange` + an in-partition
   * sort, so every produced file covers a small hyper-rectangle of the
   * interleaved key space; `_stats/` then records each file's per-column
-  * min/max (one extra columns-pruned scan — at cluster scale this rides
-  * the write as a files-sized aggregation). [[readPruned]] evaluates a
+  * min/max, computed by the write's own tasks ([[writeParquet]] — no
+  * re-scan of the written files). [[readPruned]] evaluates a
   * conjunction of range predicates against the sidecar ON THE DRIVER
   * (the sidecar is files-sized — KBs per thousand files), reads only
   * the overlapping files, and re-applies the predicate as the residual
@@ -84,7 +84,8 @@ object LayoutOps {
   def zorderWrite(df: DataFrame, zCols: Seq[String],
       nFiles: Int, statsCols: Seq[String], dir: String,
       rankBits: Int = 6): Unit = {
-    require(zCols.nonEmpty && nFiles >= 1, "need z columns and nFiles >= 1")
+    require(zCols.nonEmpty && nFiles >= 1 && statsCols.nonEmpty,
+      "need z columns, nFiles >= 1 and stats columns")
     require(rankBits >= 1 && zCols.size * rankBits <= 63,
       s"rank bits out of range: ${zCols.size} cols x $rankBits")
     val nb = 1 << rankBits
@@ -102,12 +103,13 @@ object LayoutOps {
       graft.expr.RankBin.rankBin(numericImage(df, c),
         cuts.distinct.toIndexedSeq)
     }
-    df.withColumn("__z", graft.expr.ZValue.zvalue(rankBits, rankCols: _*))
+    val clustered = df
+      .withColumn("__z", graft.expr.ZValue.zvalue(rankBits, rankCols: _*))
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
-      .write.mode("overwrite").parquet(s"$dir/data")
-    writeStats(df.sparkSession, statsCols, dir)
+    writeParquet(clustered, s"$dir/data", statsCols, overwrite = true)(
+      s"$dir/_stats")
   }
 
   /** Comparison layout: lexicographic sort on `sortCols` — prunes on
@@ -117,11 +119,11 @@ object LayoutOps {
     */
   def sortedWrite(df: DataFrame, sortCols: Seq[String],
       nFiles: Int, statsCols: Seq[String], dir: String): Unit = {
-    require(sortCols.nonEmpty && nFiles >= 1, "need sort columns and nFiles >= 1")
-    df.repartitionByRange(nFiles, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .write.mode("overwrite").parquet(s"$dir/data")
-    writeStats(df.sparkSession, statsCols, dir)
+    require(sortCols.nonEmpty && nFiles >= 1 && statsCols.nonEmpty,
+      "need sort columns, nFiles >= 1 and stats columns")
+    writeParquet(df.repartitionByRange(nFiles, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*),
+      s"$dir/data", statsCols, overwrite = true)(s"$dir/_stats")
   }
 
   /** Monotone numeric image of an orderable column for rank binning:
@@ -145,88 +147,106 @@ object LayoutOps {
     }
   }
 
-  private def writeStats(spark: SparkSession, statsCols: Seq[String],
-      dir: String): Unit =
-    writeStatsSidecar(spark, statsCols, s"$dir/data", s"$dir/_stats")
+  /** The one data write behind the layout roots and every snapshot
+    * store segment: `df` as parquet under `dataDir` (an existing
+    * directory refuses unless `overwrite`; `partitionBy` lays it out
+    * hive-style), through [[org.apache.spark.sql.graft.FileStatsWriter]].
+    * Returns the sidecar step: given a stats directory, it records
+    * every written file's `statsCols` stats there — a no-op without
+    * stats or bloom columns. A bloom-free sidecar's rows were computed
+    * by the write's own tasks and are written on the driver
+    * ([[graft.io.DriverParquet.write]]): no job, no re-read. With
+    * `bloomCols` the step is [[writeStatsSidecar]]'s distributed
+    * aggregate, so filter binaries never reach the driver. The caller
+    * decides when (and whether) the sidecar lands — after its own
+    * checks on what was written.
+    */
+  private[graft] def writeParquet(df: DataFrame, dataDir: String,
+      statsCols: Seq[String], bloomCols: Seq[String] = Nil,
+      bloomExpectedItems: Long = 100000L, partitionBy: Seq[String] = Nil,
+      overwrite: Boolean = false): String => Unit = {
+    val spark = df.sparkSession
+    val stats = org.apache.spark.sql.graft.FileStatsWriter.write(df, dataDir,
+      overwrite, partitionBy,
+      if (statsCols.isEmpty || bloomCols.nonEmpty) Nil
+      else statAggs(df.schema, statsCols) :+ count(lit(1)).as("n_rows"))
+    statsDir =>
+      if (bloomCols.nonEmpty)
+        writeStatsSidecar(spark, statsCols, dataDir, statsDir, bloomCols,
+          bloomExpectedItems)
+      else stats.foreach { st =>
+        val p = new org.apache.hadoop.fs.Path(statsDir)
+        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+        graft.io.DriverParquet.write(spark, statsDir, st.schema, st.rows)
+      }
+  }
 
-  /** Per-file min/max sidecar for an arbitrary parquet directory —
-    * the general form [[zorderWrite]]/[[sortedWrite]] use for their
-    * own layout roots and [[graft.io.SnapshotStore]] uses to give
-    * EVERY commit its own skipping stats (the Delta discipline:
-    * pruning must not wait for OPTIMIZE). One columns-pruned scan of
-    * the just-written files — at cluster scale this rides the write
-    * as a files-sized aggregation. Its rows (one per data file) are
-    * collected and written on the driver as one parquet file
-    * ([[graft.io.DriverParquet.write]] — Spark's own writer, no write
-    * job); a sidecar with bloom columns keeps the distributed write,
-    * so the filter binaries never reach the driver.
+  /** The per-column stats aggregates, in sidecar column order. min/max
+    * persist in the COLUMN'S OWN TYPE (long, double, string, date,
+    * timestamp) — the sidecar compare and the residual filter are
+    * typed end-to-end, so reference-shaped probes (ship-date ranges,
+    * key prefixes) skip files too. Per-column null counts ride along
+    * (with `n_rows`): a file whose min/max lie INSIDE a probe range
+    * with zero nulls is answerable from metadata alone (the
+    * Delta/Iceberg stats-answered COUNT —
+    * [[graft.io.SnapshotStore.countPrunedRange]]). Integral columns
+    * ALSO record an exact per-file sum (DECIMAL(38,0) — overflow-proof,
+    * merge-order-free), which is what lets
+    * [[graft.io.SnapshotStore.sumPrunedRange]] answer SUM/AVG over
+    * contained files from metadata alone. Floating columns get none: a
+    * double sum is order-dependent, so a metadata-answered value could
+    * disagree with a scan — the same exactness discipline that keeps
+    * the COUNT/MIN/MAX faces honest.
+    */
+  private def statAggs(schema: org.apache.spark.sql.types.StructType,
+      statsCols: Seq[String]): Seq[Column] = statsCols.flatMap { c =>
+    import org.apache.spark.sql.types._
+    val base = Seq(
+      min(col(c)).as(s"min_$c"),
+      max(col(c)).as(s"max_$c"),
+      count(when(col(c).isNull, 1)).as(s"nulls_$c"))
+    schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        base :+ sum(col(c).cast(DecimalType(38, 0))).as(s"sum_$c")
+      case _ => base
+    }
+  }
+
+  /** The BLOOM-bearing per-file stats sidecar of an arbitrary parquet
+    * directory: [[statAggs]] plus a per-file serialized Bloom filter
+    * for each of `bloomCols`, as ONE distributed aggregate over the
+    * written files (`groupBy(input_file_name())`), written by Spark so
+    * the filter binaries never reach the driver. Bloom-free sidecars
+    * are computed by the write's own tasks instead ([[writeParquet]]);
+    * both give the same stats columns and rows.
+    *
+    * bloomCols add a PER-FILE serialized Bloom filter over the column's
+    * xxhash64 image (`bloom_<col>`, Spark's own BloomFilterAggregate) —
+    * what makes an EQUALITY probe on an unsorted column prune files
+    * min/max cannot (the guid/doc-id point-lookup access pattern).
+    * Sizing is the caller's honest knob: bytes-per-file ∝
+    * expectedItems·ln(1/fpp) — size to the rows-per-file of the
+    * layout, not the table; the sidecar probe never collects the
+    * binaries (verdicts are computed in the sidecar read plan), but
+    * sidecar bytes on disk are still files × filterBytes.
     */
   def writeStatsSidecar(spark: SparkSession, statsCols: Seq[String],
       dataDir: String, statsDir: String,
-      bloomCols: Seq[String] = Nil,
+      bloomCols: Seq[String],
       bloomExpectedItems: Long = 100000L,
       bloomFpp: Double = 0.03): Unit = {
-    require(statsCols.nonEmpty || bloomCols.nonEmpty,
-      "writeStatsSidecar needs stats or bloom columns")
+    require(bloomCols.nonEmpty, "writeStatsSidecar needs bloom columns " +
+      "(bloom-free sidecars come from the write itself)")
     require(bloomExpectedItems > 0 && bloomFpp > 0 && bloomFpp < 1,
       s"bloom sizing out of range: ($bloomExpectedItems, $bloomFpp)")
     val data = graft.io.DriverParquet.read(spark, Seq(dataDir))
-    // min/max persist in the COLUMN'S OWN TYPE (long, double, string,
-    // date, timestamp) — the sidecar compare and the residual filter
-    // are typed end-to-end, so reference-shaped probes (ship-date
-    // ranges, key prefixes) skip files too. n_rows + per-column null
-    // counts ride along: a file whose min/max lie INSIDE a probe
-    // range with zero nulls is answerable from metadata alone (the
-    // Delta/Iceberg stats-answered COUNT —
-    // [[graft.io.SnapshotStore.countPrunedRange]]).
-    //
-    // bloomCols add a PER-FILE serialized Bloom filter over the
-    // column's xxhash64 image (`bloom_<col>`, Spark's own
-    // BloomFilterAggregate) — what makes an EQUALITY probe on an
-    // unsorted column prune files min/max cannot (the guid/doc-id
-    // point-lookup access pattern). Sizing is the caller's honest
-    // knob: bytes-per-file ∝ expectedItems·ln(1/fpp) — size to the
-    // rows-per-file of the layout, not the table; the sidecar probe
-    // never collects the binaries (verdicts are computed in the
-    // sidecar read plan), but sidecar bytes on disk are still
-    // files × filterBytes.
-    // integral stats columns ALSO record an exact per-file sum
-    // (DECIMAL(38,0) — overflow-proof, merge-order-free), which is
-    // what lets [[graft.io.SnapshotStore.sumPrunedRange]] answer
-    // SUM/AVG over contained files from metadata alone. Floating
-    // columns get none: a double sum is order-dependent, so a
-    // metadata-answered value could disagree with a scan — the same
-    // exactness discipline that keeps the COUNT/MIN/MAX faces honest.
-    val aggs = statsCols.flatMap { c =>
-      val base = Seq(
-        min(col(c)).as(s"min_$c"),
-        max(col(c)).as(s"max_$c"),
-        count(when(col(c).isNull, 1)).as(s"nulls_$c"))
-      val sums = data.schema(c).dataType match {
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType =>
-          Seq(sum(col(c).cast(
-            org.apache.spark.sql.types.DecimalType(38, 0)))
-            .as(s"sum_$c"))
-        case _ => Seq.empty
-      }
-      base ++ sums
-    } ++
+    val aggs = statAggs(data.schema, statsCols) ++
       bloomCols.map(c => bloomAgg(col(c), bloomExpectedItems, bloomFpp)
         .as(s"bloom_$c")) :+
       count(lit(1)).as("n_rows")
-    val stats = data.groupBy(input_file_name().as("file"))
+    data.groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
-    if (bloomCols.nonEmpty)
-      stats.coalesce(1).write.mode("overwrite").parquet(statsDir)
-    else {
-      val rows = stats.collect()
-      val p = new org.apache.hadoop.fs.Path(statsDir)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-      graft.io.DriverParquet.write(spark, statsDir, stats.schema, rows)
-    }
+      .coalesce(1).write.mode("overwrite").parquet(statsDir)
   }
 
   /** Spark's BloomFilterAggregate over the column's xxhash64 image —
@@ -318,8 +338,9 @@ object LayoutOps {
 
   /** Driver-side sidecar evaluation for a LAYOUT ROOT: (surviving
     * file paths, total files). The sidecar is files-sized by
-    * construction — KBs per thousand files — so the collect is the
-    * cheap half of skipping. A range column the sidecar doesn't
+    * construction — KBs per thousand files — so it is read on the
+    * driver ([[graft.io.DriverParquet.collect]], no job): the cheap
+    * half of skipping. A range column the sidecar doesn't
     * record fails loudly (the root's sidecar was written with the
     * caller's own statsCols, so a miss is a bug, not a fallback; the
     * snapshot store's per-commit sidecars, where recorded column sets
@@ -330,10 +351,10 @@ object LayoutOps {
       ranges: Seq[ColRange]): (Seq[String], Int) = {
     // the sidecar's part files, not its `_stats` root (a hidden path
     // Spark warns about on every read)
-    val sdf = graft.io.DriverParquet.read(spark,
-      graft.io.DriverParquet.dataFiles(spark, Seq(statsDir)))
-    val have = sdf.schema.fieldNames.toSet
-    val stats = sdf.collect()
+    val files = graft.io.DriverParquet.dataFiles(spark, Seq(statsDir))
+    val schema = graft.io.DriverParquet.schema(spark, files)
+    val have = schema.fieldNames.toSet
+    val stats = graft.io.DriverParquet.collect(spark, files, schema)
     val missing = ranges.map(_.col)
       .filterNot(c => have.contains(s"min_$c") && have.contains(s"max_$c"))
     require(missing.isEmpty,

@@ -196,7 +196,7 @@ class LayoutOpsSpec extends SparkSpecBase {
       StructField("i", IntegerType), StructField("str", StringType),
       StructField("d", DoubleType), StructField("dt", DateType),
       StructField("ts", TimestampType), StructField("dec", DecimalType(12, 3)),
-      StructField("grp", StringType)))
+      StructField("nul", LongType), StructField("grp", StringType)))
     val rows = (0 until 60).map { k =>
       def orNull(v: Any) = if (k % 7 == 3) null else v
       Row(orNull(k.toLong * 1000003L), orNull((k - 30).toShort), orNull(k * 17),
@@ -204,19 +204,27 @@ class LayoutOpsSpec extends SparkSpecBase {
         orNull(java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(k))),
         orNull(java.sql.Timestamp.valueOf(
           java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusMinutes(k * 37L))),
-        orNull(new java.math.BigDecimal(s"${k * 13}.125")), s"g${k % 3}")
+        orNull(new java.math.BigDecimal(s"${k * 13}.125")), null, s"g${k % 3}")
     }
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
-    df.write.parquet(s"$dir/data")
-    val cols = Seq("l", "s", "i", "str", "d", "dt", "ts", "dec")
-    // a bloom column keeps Spark's distributed write: the reference
-    def sameSidecar(drv: String, spk: String): Unit = {
+    val cols = Seq("l", "s", "i", "str", "d", "dt", "ts", "dec", "nul")
+    // the write-time sidecar (the writing tasks' stats, written on the
+    // driver) against a bloom column's sidecar: Spark's distributed
+    // re-read aggregate over the same files, the reference
+    def sameSidecar(drv: String, spk: String, nRows: Long): Unit = {
       val a = spark.read.parquet(graft.io.DriverParquet.dataFiles(spark, Seq(drv)): _*)
       val b = spark.read.parquet(graft.io.DriverParquet.dataFiles(spark, Seq(spk)): _*)
         .drop("bloom_l")
       a.schema shouldBe b.schema
       a.orderBy("file").collect().toSeq shouldBe b.orderBy("file").collect().toSeq
-      a.count() should be > 0L
+      a.count() shouldBe nRows
+      // one row per file, sorted by file; every file decodes to a real path
+      val files = a.collect().map(_.getString(0)).toSeq
+      files shouldBe files.sorted
+      files.distinct.size shouldBe files.size
+      files.foreach(f => new java.io.File(new java.net.URI(f)).isFile shouldBe true)
+      files.foreach(f => new java.io.File(LayoutOps.decodeStatFile(f)
+        .stripPrefix("file:")).isFile shouldBe true)
       // one file each, the same parquet column types (bloom aside)
       def fileSchema(d: String) = {
         val fs = graft.io.DriverParquet.files(spark, Seq(d))
@@ -230,21 +238,73 @@ class LayoutOpsSpec extends SparkSpecBase {
       }
       fileSchema(drv) shouldBe fileSchema(spk)
     }
-    LayoutOps.writeStatsSidecar(spark, cols, s"$dir/data", s"$dir/drv")
-    LayoutOps.writeStatsSidecar(spark, cols, s"$dir/data", s"$dir/spk",
-      bloomCols = Seq("l"))
-    sameSidecar(s"$dir/drv", s"$dir/spk")
+    def bloomRef(data: String, ref: String): Unit =
+      LayoutOps.writeStatsSidecar(spark, cols, data, ref, bloomCols = Seq("l"))
+    def dataFiles(d: String) = graft.io.DriverParquet.dataFiles(spark, Seq(d)).size
+
+    LayoutOps.writeParquet(df, s"$dir/data", cols)(s"$dir/drv")
+    bloomRef(s"$dir/data", s"$dir/spk")
+    sameSidecar(s"$dir/drv", s"$dir/spk", 3)
     spark.read.parquet(s"$dir/drv").columns should contain allOf (
-      "sum_l", "sum_s", "sum_i", "min_d", "max_dec", "nulls_ts", "n_rows")
+      "sum_l", "sum_s", "sum_i", "min_d", "max_dec", "nulls_ts", "min_nul",
+      "n_rows")
+    // the data files are df.write's: the same parquet schema and Spark
+    // row metadata (a non-nullable column included), rows and _SUCCESS
+    val wide = df.withColumn("nn", lit(1L))
+    LayoutOps.writeParquet(wide, s"$dir/wide", Nil)
+    wide.write.parquet(s"$dir/plain")
+    def footer(d: String) = {
+      val st = graft.io.DriverParquet.files(spark, Seq(d)).head
+      val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+          st, spark.sessionState.newHadoopConf()))
+      try {
+        val m = in.getFooter.getFileMetaData
+        (m.getSchema.toString, m.getKeyValueMetaData.asScala
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+      } finally in.close()
+    }
+    footer(s"$dir/wide") shouldBe footer(s"$dir/plain")
+    new java.io.File(s"$dir/wide/_SUCCESS").isFile shouldBe true
+    spark.read.parquet(s"$dir/wide").exceptAll(wide).count() shouldBe 0L
+    // an existing directory refuses, as `errorifexists` does
+    intercept[org.apache.spark.sql.AnalysisException] {
+      LayoutOps.writeParquet(df, s"$dir/data", cols)
+    }.getMessage should include("already exists")
+
+    // a write split by maxRecordsPerFile: one row per rolled file
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "7")
+    try LayoutOps.writeParquet(df, s"$dir/split", cols)(s"$dir/splitdrv")
+    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    bloomRef(s"$dir/split", s"$dir/splitspk")
+    dataFiles(s"$dir/split") shouldBe 9 // 3 tasks x ceil(20 / 7)
+    sameSidecar(s"$dir/splitdrv", s"$dir/splitspk", 9)
+
+    // an empty frame: its one schema-only file gets no stats row
+    LayoutOps.writeParquet(df.limit(0), s"$dir/empty", cols)(s"$dir/emptydrv")
+    bloomRef(s"$dir/empty", s"$dir/emptyspk")
+    dataFiles(s"$dir/empty") shouldBe 1
+    sameSidecar(s"$dir/emptydrv", s"$dir/emptyspk", 0)
 
     // a partitioned commit's ONE shared sidecar at the commit root
     val store = s"$dir/store"
     graft.io.SnapshotStore.commitAppend(df, store, statsCols = cols,
       partitionBy = Seq("grp"))
     val root = new java.io.File(s"$store/seg").listFiles().head.getAbsolutePath
-    LayoutOps.writeStatsSidecar(spark, cols, root, s"$dir/rootspk",
-      bloomCols = Seq("l"))
-    sameSidecar(s"$root/_stats", s"$dir/rootspk")
-    spark.read.parquet(s"$root/_stats").count() shouldBe 3 * 3 // 3 leaves x 3 files
+    bloomRef(root, s"$dir/rootspk")
+    sameSidecar(s"$root/_stats", s"$dir/rootspk", 3 * 3) // 3 leaves x 3 files
+
+    // a store root whose path holds a space and a '%': `file` is the
+    // encoded URI input_file_name() reports, decoded on the way back
+    val odd = s"$dir/st ore%41x"
+    graft.io.SnapshotStore.commitAppend(df, odd, statsCols = cols)
+    val seg = new java.io.File(s"$odd/seg").listFiles().head.getAbsolutePath
+    bloomRef(seg, s"$dir/oddspk")
+    sameSidecar(s"$seg/_stats", s"$dir/oddspk", 3)
+    spark.read.parquet(s"$seg/_stats").collect().map(_.getString(0))
+      .foreach(_ should include("st%20ore%2541x"))
+    graft.io.SnapshotStore.readPrunedRange(spark, odd,
+      Seq(ColRange("i", 100, 300))).df.count() shouldBe
+      df.where(col("i").between(100, 300)).count()
   }
 }

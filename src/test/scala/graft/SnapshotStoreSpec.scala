@@ -2816,9 +2816,11 @@ class SnapshotStoreSpec extends SparkSpecBase {
         SnapshotStore.sumPrunedRange(spark, dir, "doc_id", probe)),
       "commitDeleteWhere" -> jobs(
         SnapshotStore.commitDeleteWhere(spark, dir, probe, "doc_id")))
-    budget shouldBe Seq("readPrunedRange" -> 1, "readPrunedRange.count" -> 3,
-      "countPrunedRange" -> 3, "minMaxPrunedRange" -> 3,
-      "sumPrunedRange" -> 3, "commitDeleteWhere" -> 7)
+    // bloom-free sidecars are read on the driver: building a pruned
+    // read runs no job, and each face runs only its own scan/fold
+    budget shouldBe Seq("readPrunedRange" -> 0, "readPrunedRange.count" -> 2,
+      "countPrunedRange" -> 2, "minMaxPrunedRange" -> 2,
+      "sumPrunedRange" -> 2, "commitDeleteWhere" -> 6)
   }
 
   test("commit faces keep their job budget: the shared opener, gate, rewrite and publish run no Spark job of their own") {
@@ -2843,6 +2845,13 @@ class SnapshotStoreSpec extends SparkSpecBase {
         Seq(ColRange("doc_id", 20L, 24L)), "doc_id")),
       "deleteWhere.dv" -> jobs(SnapshotStore.commitDeleteWhere(spark, dir,
         Seq(ColRange("doc_id", 120L, 124L)), "doc_id", dv = true)),
+      // the perfbench shape: merge and predicate delete with stats
+      "merge.stats" -> jobs(SnapshotStore.commitMerge(
+        docs(160 to 175).withColumn("text", lit("ms")), "doc_id", dir,
+        statsCols = Seq("doc_id"))),
+      "deleteWhere.stats" -> jobs(SnapshotStore.commitDeleteWhere(spark, dir,
+        Seq(ColRange("doc_id", 140L, 145L)), "doc_id",
+        statsCols = Seq("doc_id"))),
       "restore" -> jobs(SnapshotStore.restore(spark, dir, 3)),
       "rename" -> jobs(SnapshotStore.renameColumn(spark, dir, "text", "body")),
       "compactSmall" -> jobs(SnapshotStore.compactSmall(spark, dir,
@@ -2856,10 +2865,13 @@ class SnapshotStoreSpec extends SparkSpecBase {
         Seq("doc_id"), 2, Seq("doc_id"))))
     // pinned per face: the shared opener, gate, rewrite and publish
     // run no job of their own, so these are the faces' own jobs
-    budget shouldBe Seq("append" -> 3, "streamBatch" -> 3, "upsert" -> 5,
-      "merge" -> 15, "delete" -> 3, "delete.dv" -> 11, "deleteWhere" -> 15,
-      "deleteWhere.dv" -> 11, "restore" -> 0, "rename" -> 0,
-      "compactSmall" -> 3, "compact" -> 1, "compactPartitioned" -> 3,
-      "compactZordered.scoped" -> 7, "compactZordered" -> 7)
+    // a bloom-free stats sidecar rides the data write's own job, and a
+    // pruned delete reads its sidecars on the driver
+    budget shouldBe Seq("append" -> 1, "streamBatch" -> 1, "upsert" -> 5,
+      "merge" -> 15, "delete" -> 3, "delete.dv" -> 11, "deleteWhere" -> 14,
+      "deleteWhere.dv" -> 10, "merge.stats" -> 23, "deleteWhere.stats" -> 18,
+      "restore" -> 0, "rename" -> 0, "compactSmall" -> 1, "compact" -> 1,
+      "compactPartitioned" -> 1, "compactZordered.scoped" -> 5,
+      "compactZordered" -> 5)
   }
 }

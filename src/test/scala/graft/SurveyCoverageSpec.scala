@@ -83,6 +83,21 @@ class SurveyCoverageSpec extends AnyFunSuite with Matchers {
     "(?<!def )commitManifest\\(".r.findAllIn(src).size shouldBe 1
   }
 
+  // code lines only: scaladoc and comments may name what the code calls
+  private def codeCount(src: String, call: String): Int = src.linesIterator
+    .map(_.trim).filterNot(l => l.startsWith("*") || l.startsWith("/"))
+    .count(_.contains(call))
+
+  test("data files have one writer (one FileFormatWriter.write call site); only the bloom sidecar re-reads written files by input_file_name") {
+    mainSources.map(codeCount(_, "FileFormatWriter.write(")).sum shouldBe 1
+    mainSources.map(codeCount(_, "input_file_name(")).sum shouldBe 1
+    val layout = read("src/main/scala/graft/ops/LayoutOps.scala")
+    val bloomPath = layout.substring(layout.indexOf("def writeStatsSidecar("),
+      layout.indexOf("private def bloomAgg("))
+    codeCount(bloomPath, "input_file_name(") shouldBe 1
+    codeCount(bloomPath, "bloomCols.nonEmpty") shouldBe 1
+  }
+
   test("every main CLAUDE.md and README.md tell you to run exists") {
     val named = Seq("CLAUDE.md", "README.md").flatMap { doc =>
       "(?:runMain|scripts/run_main\\.sh)\\s+graft\\.(\\w+)".r
